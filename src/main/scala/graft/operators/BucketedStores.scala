@@ -873,11 +873,4 @@ object BucketedStores extends org.apache.spark.internal.Logging {
       buckets: Int = 8): Unit =
     compactAtomic(spark, name, Seq("band", "bhash"),
       Seq("band", "bhash"), buckets)
-
-  /** [[SimilarityOps.writeIvfIndex]] list compaction (the centroid
-    * companion is k rows — nothing to compact).
-    */
-  def compactIvfIndex(spark: SparkSession, table: String,
-      buckets: Int = 8): Unit =
-    compact(spark, table, Seq("cid"), Seq("cid"), buckets)
 }

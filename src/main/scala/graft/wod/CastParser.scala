@@ -167,16 +167,6 @@ object CastParser {
   private[graft] val levelStructsBuilt =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Parse one cast; cursor must be positioned at the 'C'. */
-  def parseCast(c: WodCursor): AsciiCast = {
-    val start = c.pos
-    val ver = c.next()
-    if (ver != 'C') throw new WodParseException(
-      s"unsupported WOD record version '$ver' at ${c.pos} (want 'C')")
-    val totalBytes = requireInt(c, "record byte count")
-    parseAfterByteCount(c, start, totalBytes, new CastContext)
-  }
-
   /** Mutable context so the caller can attribute an error to a cast
     * number even when the parse dies halfway through the record.
     */
@@ -321,7 +311,8 @@ object CastParser {
     * that fails to parse yields a Left and, when its declared byte
     * count was readable, the parser resyncs to the next record; without
     * a byte count the rest of the file is undecodable and iteration
-    * stops after the error.
+    * stops after the error. An `IOException` from `in` is not a cast
+    * error: it propagates, and the stream's owner decides what it means.
     */
   def casts(in: Reader, dataset: String,
       skipProfile: Boolean = false): Iterator[Either[CastError, AsciiCast]] =
@@ -351,6 +342,7 @@ object CastParser {
           declaredEnd = start + totalBytes
           Right(parseAfterByteCount(c, start, totalBytes, ctx, skipProfile))
         } catch {
+          case e: java.io.IOException => throw e
           case e: Exception =>
             // resync to the declared record end when the cursor hasn't
             // overrun it — INCLUDING the ==-case (an error thrown on

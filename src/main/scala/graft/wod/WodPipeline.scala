@@ -5,6 +5,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.WodDataSource.{ErrorColumn, SourceFileColumn, castSchema}
+
 /** End-to-end WOD ASCII → partitioned-parquet conversion with the
   * reference's output contract (SURVEY.md §2-3):
   *
@@ -167,14 +169,14 @@ object WodPipeline {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val obs = Observation()
-      // Stays in InternalRow land end-to-end (no typed filter/map
-      // deserialization): observe counts both channels, then the cast
-      // branch projects the struct open.
-      val writer = rows.toDF()
-        .observe(obs, count(col("cast")).as("n_casts"),
-          count(col("error")).as("n_errors"))
-        .filter(col("cast").isNotNull)
-        .select("cast.*")
+      // Stays in InternalRow land end-to-end: observe counts both
+      // channels (cast columns are null in error rows, so geohash3
+      // counts casts), then the cast branch drops the metadata columns.
+      val writer = rows
+        .observe(obs, count(col("geohash3")).as("n_casts"),
+          count(col(ErrorColumn)).as("n_errors"))
+        .filter(col(ErrorColumn).isNull)
+        .drop(SourceFileColumn, ErrorColumn)
         .transform(tagGeohash)
         .repartition(col("geohash3"))
         // (geohash3, geohash) orders identically to plain geohash
@@ -191,8 +193,11 @@ object WodPipeline {
           .save(task.outStore)
       else writer.parquet(task.outStore)
       val (nCasts, nErrors) = channelCounts(obs, rows)
+      // through the CastError encoder: a field of the nullable `_error`
+      // struct would turn the store's non-null castNumber nullable
       if (nErrors > 0)
-        rows.filter(_.error != null).map(_.error).toDF()
+        rows.filter(col(ErrorColumn).isNotNull).select(s"$ErrorColumn.*")
+          .as[CastError].map(identity).toDF()
           .coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(task.errStore)
       (nCasts, nErrors)
@@ -207,13 +212,13 @@ object WodPipeline {
     * (a cache scan, not a re-parse) only in that rare case.
     */
   private def channelCounts(obs: org.apache.spark.sql.Observation,
-      rows: org.apache.spark.sql.Dataset[WodSource.WodRow]): (Long, Long) = {
+      rows: org.apache.spark.sql.DataFrame): (Long, Long) = {
     import org.apache.spark.sql.functions.count
     val m = obs.get // returns once the action completes; may be empty
     if (m.contains("n_casts") && m.contains("n_errors"))
       (m("n_casts").asInstanceOf[Long], m("n_errors").asInstanceOf[Long])
     else {
-      val st = rows.toDF().agg(count(col("cast")), count(col("error"))).head()
+      val st = rows.agg(count(col("geohash3")), count(col(ErrorColumn))).head()
       (st.getLong(0), st.getLong(1))
     }
   }
@@ -323,8 +328,10 @@ object WodPipeline {
     *    run, and an unskewed corpus (no cell over the threshold)
     *    takes the exact unsalted plan: one file per cell, no extra
     *    count job beyond the cache scan.
-    *  - Per-cast (C5) and per-file IO error isolation are inherited
-    *    from [[WodSource.read]]; error rows land under
+    *  - Per-cast (C5) and per-file IO error isolation come from the
+    *    `wod` source's `_error` column ([[WodSource.read]]): a failed
+    *    cast and an unreadable or damaged member each give one error
+    *    row, never a task failure. Error rows land under
     *    `<output>/bulk/errors/dataset=<DS>/level=<LVL>/` with their
     *    source path. Task-level retry inside each job is Spark's own
     *    (`spark.task.maxFailures`), replacing the per-file attempt
@@ -435,12 +442,12 @@ object WodPipeline {
     try {
       // Census on the cached parse, ONE job for two purposes: per-cell
       // cast counts (skew guard) and the channel totals. Error rows
-      // have a null cast, so they fold into the null-cell group and
-      // n_errors sums them; the bounded collect is <= 32^3 cells + 1.
-      val census = rows.toDF()
-        .groupBy(col("cast.geohash3").as("cell"))
-        .agg(count(col("cast")).as("n_casts"),
-          count(col("error")).as("n_errors"))
+      // have null cast columns, so they fold into the null-cell group
+      // and n_errors sums them; the bounded collect is <= 32^3 cells + 1.
+      val census = rows
+        .groupBy(col("geohash3").as("cell"))
+        .agg(count(col("geohash3")).as("n_casts"),
+          count(col(ErrorColumn)).as("n_errors"))
         .collect()
       val nCasts = census.map(_.getLong(1)).sum
       val nErrors = census.map(_.getLong(2)).sum
@@ -459,14 +466,15 @@ object WodPipeline {
       val fs = new Path(errSub).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       if (nErrors > 0)
-        rows.toDF().filter(col("error").isNotNull)
-          .select(col("sourceFile").as("src_file"),
-            col("error.castNumber"), col("error.error"))
+        rows.filter(col(ErrorColumn).isNotNull)
+          .select(col(SourceFileColumn).as("src_file"),
+            col(s"$ErrorColumn.castNumber"), col(s"$ErrorColumn.error"))
           .coalesce(1).write.mode(SaveMode.Overwrite).parquet(errSub)
       else fs.delete(new Path(errSub), true) // stale errors from a prior run
-      val casts = rows.toDF()
-        .filter(col("cast").isNotNull)
-        .select(col("sourceFile").as("src_file"), col("cast.*"))
+      val casts = rows
+        .filter(col(ErrorColumn).isNull)
+        .select(col(SourceFileColumn).as("src_file") +:
+          castSchema.fieldNames.toSeq.map(col): _*)
         .drop("dataset") // constant in a sub-run; the dir carries it
         .transform(tagGeohash)
       val sharded =

@@ -1,27 +1,20 @@
 package graft.wod
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets
-import java.util.zip.GZIPInputStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.sources.WodDataSource.{ErrorColumn, SourceFileColumn}
 
-/** Distributed WOD ASCII ingest (SURVEY.md §2.1 S1-S3, Spark-native):
-  * `binaryFiles` hands each (non-splittable) gzipped member to one
-  * executor task, which streams parse → transform without ever
-  * materializing the file — the reference's driver-side producer/
-  * consumer loop (`DatasetYearTrain.java:148-207`) becomes executor
-  * parallelism, one task per file, scaling linearly with file count on
-  * a cluster (the same parallelism unit the reference gets from one
-  * HTCondor job per file).
+/** Distributed WOD ASCII ingest for conversion (SURVEY.md §2.1 S1-S3,
+  * Spark-native): a view over the `wod` DataSource V2
+  * ([[graft.sources.WodDataSource]]), which hands each (non-splittable)
+  * gzipped member to one executor task that streams parse → transform
+  * without ever materializing the file — the reference's driver-side
+  * producer/consumer loop (`DatasetYearTrain.java:148-207`) becomes
+  * executor parallelism, one task per file (the same parallelism unit
+  * the reference gets from one HTCondor job per file).
   */
 object WodSource {
-
-  /** A parse/transform outcome row: exactly one of cast / error set.
-    * (Dataset[Either] has no product encoder; this flat shape also
-    * keeps the error channel columnar.)
-    */
-  final case class WodRow(sourceFile: String, cast: Cast, error: CastError)
 
   /** Infer the dataset code ("CTD", "XBT", ...) from a WOD file path
     * laid out `<...>/<DATASET>/<LEVEL>/<FILE>.gz`
@@ -32,90 +25,16 @@ object WodSource {
     if (parts.length >= 3) parts(parts.length - 3) else "UNKNOWN"
   }
 
-  /** Read one or more `.gz` WOD ASCII files into cast + error rows.
-    * `paths` accepts globs (Hadoop FileSystem semantics, so local and
-    * `s3a://` URIs both work — the reference's three-way FS abstraction
-    * collapses into Hadoop FS, SURVEY.md §1.1).
+  /** Read one or more `.gz` WOD ASCII files (comma-separated; globs and
+    * directories resolve as in `spark.read.format("wod")`, through
+    * Hadoop FileSystem, so local and `s3a://` URIs both work) into one
+    * row per outcome: the cast columns, then `_source_file` (the
+    * member's qualified path) and `_error` (set on error rows, whose
+    * cast columns are null).
     */
-  def read(spark: SparkSession, paths: String,
-      minPartitions: Int = 0): Dataset[WodRow] = {
-    import spark.implicits._
-    val parts =
-      if (minPartitions > 0) minPartitions
-      else spark.sparkContext.defaultParallelism
-    spark.sparkContext.binaryFiles(paths, parts)
-      .flatMap { case (path, pds) =>
-        val dataset = datasetOf(path)
-        // C5 error isolation extends to the file level: a corrupt /
-        // truncated gzip member yields one error row, never a task
-        // failure (one bad object in an S3 prefix must not kill a
-        // 100 TB job).
-        val casts =
-          try {
-            val stream = pds.open()
-            val in = new BufferedReader(new InputStreamReader(
-              if (path.endsWith(".gz")) new GZIPInputStream(stream, 64 * 1024)
-              else stream, StandardCharsets.UTF_8))
-            CastParser.casts(in, dataset)
-          } catch {
-            case e: java.io.IOException =>
-              Iterator.single(Left(CastError(dataset, -1,
-                s"unreadable file $path: ${e.getMessage}")))
-          }
-        ioSafe(casts, dataset, path).map {
-          case Right(ascii) => Transform.toCast(dataset, ascii) match {
-            case Right(cast) => WodRow(path, cast, null)
-            case Left(err)   => WodRow(path, null, err)
-          }
-          case Left(err) => WodRow(path, null, err)
-        }
-        // NB: the iterator is fully drained by Spark within this task;
-        // stream closes with task completion (PortableDataStream scope).
-      }
-      .toDS()
-  }
-
-  /** Guard an iterator against mid-stream IO failures (gzip CRC /
-    * truncation): emit one error element, then end.
-    */
-  private def ioSafe(it: Iterator[Either[CastError, AsciiCast]],
-      dataset: String, path: String)
-      : Iterator[Either[CastError, AsciiCast]] =
-    new Iterator[Either[CastError, AsciiCast]] {
-      private var failed: Option[CastError] = None
-      private var done = false
-      override def hasNext: Boolean = !done && (failed.isDefined || {
-        try it.hasNext
-        catch {
-          case e: java.io.IOException =>
-            failed = Some(CastError(dataset, -1,
-              s"stream error in $path: ${e.getMessage}"))
-            true
-        }
-      })
-      override def next(): Either[CastError, AsciiCast] =
-        failed match {
-          case Some(err) => done = true; Left(err)
-          case None =>
-            try it.next()
-            catch {
-              case e: java.io.IOException =>
-                done = true
-                Left(CastError(dataset, -1,
-                  s"stream error in $path: ${e.getMessage}"))
-            }
-        }
-    }
-
-  /** Casts only (drops the error channel). */
-  def casts(spark: SparkSession, paths: String): Dataset[Cast] = {
-    import spark.implicits._
-    read(spark, paths).filter(_.cast != null).map(_.cast)
-  }
-
-  /** Errors only. */
-  def errors(spark: SparkSession, paths: String): Dataset[CastError] = {
-    import spark.implicits._
-    read(spark, paths).filter(_.error != null).map(_.error)
+  def read(spark: SparkSession, paths: String): DataFrame = {
+    val df = spark.read.format("wod").load(paths.split(",").toIndexedSeq: _*)
+    df.select(col("*"), df.metadataColumn(SourceFileColumn),
+      df.metadataColumn(ErrorColumn))
   }
 }

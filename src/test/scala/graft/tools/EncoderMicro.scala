@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Prices the WodRow product-encoder serialization (the measured
+/** Prices the cast product-encoder serialization (the measured
   * ~90% of the parse floor, WodProfile r21): the SAME synthetic cast
   * stream through (a) the current Seq-field case classes and (b) an
   * Array-field clone of the model — the candidate change — noop sink.

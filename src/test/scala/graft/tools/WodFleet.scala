@@ -54,8 +54,8 @@ object WodFleet {
       par(tasks) { t =>
         val name = new java.io.File(t.src).getName.stripSuffix(".gz")
         WodSource.read(spark, t.src).toDF()
-          .filter(col("cast").isNotNull)
-          .select("cast.*")
+          .filter(col("_error").isNull)
+          .drop("_source_file", "_error")
           .sortWithinPartitions(col("geohash3"), col("geohash"))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("geohash3")

@@ -11,7 +11,7 @@ import graft.wod.{GeoParquetFileFormat, WodPipeline, WodSource}
 /** Decomposes the per-file conversion path's wall-clock (guide §1:
   * measure FIRST): on the bench's own 32-file corpus, time
   *
-  *   parse      — gzip → WodRow rows, noop-discarded (the floor)
+  *   parse      — gzip → cast rows, noop-discarded (the floor)
   *   parse+persist — the convertFile cache materialization
   *   write      — the current convertFile (persist + observe +
   *                exchange + partitioned GeoParquet write)
@@ -128,8 +128,8 @@ object WodProfile {
       val out = Files.createTempDirectory("wodprof_out")
       try par(tasks) { t =>
         WodSource.read(spark, t.src).toDF()
-          .filter(col("cast").isNotNull)
-          .select("cast.*")
+          .filter(col("_error").isNull)
+          .drop("_source_file", "_error")
           .sortWithinPartitions(col("geohash3"), col("geohash"))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("geohash3")
@@ -143,8 +143,8 @@ object WodProfile {
       val out = Files.createTempDirectory("wodprof_out")
       try par(tasks) { t =>
         WodSource.read(spark, t.src).toDF()
-          .filter(col("cast").isNotNull)
-          .select("cast.*")
+          .filter(col("_error").isNull)
+          .drop("_source_file", "_error")
           .sortWithinPartitions(col("geohash3"), col("geohash"))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("geohash3")

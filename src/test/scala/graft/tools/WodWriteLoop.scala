@@ -18,7 +18,7 @@ object WodWriteLoop {
     spark.sparkContext.setLogLevel("WARN")
     val src = "/root/reference/src/test/resources/wod/DRB/OBS/DRBO2000.gz"
     val df = WodSource.read(spark, src).toDF()
-      .filter(col("cast").isNotNull).select("cast.*")
+      .filter(col("_error").isNull).drop("_source_file", "_error")
       .sortWithinPartitions(col("geohash3"), col("geohash"))
       .cache()
     df.count()

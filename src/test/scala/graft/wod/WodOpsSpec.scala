@@ -80,7 +80,8 @@ class WodOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // corrupt stream must not kill the job: parse yields error rows or
     // nothing, but the action completes
     val rows = bad.collect()
-    assert(rows.forall(_.cast == null))
+    assert(rows.forall(r => r.isNullAt(r.fieldIndex("castNumber")) &&
+      !r.isNullAt(r.fieldIndex("_error"))))
   }
 
   test("profileStats: plausible ocean physics per depth bucket") {
