@@ -205,10 +205,6 @@ object Bench {
     // (all reps, the isolated map, full precision) stays in BENCH.json
     // / BENCH_latest.json above; the isolated mins are identical to
     // `queries` minus the wod_convert entries by construction.
-    def r6(v: Double): String = {
-      val s = BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-      s.underlying.stripTrailingZeros.toPlainString
-    }
     val qs6 = timings.map { case (k, v) => "\"" + k + "\":" + r6(v) }
       .mkString("{", ",", "}")
     val compact =
@@ -216,6 +212,16 @@ object Bench {
     println(compact)
     spark.stop()
   }
+
+  /** A number for the compact JSON line at 6 dp. NaN and ±Infinity
+    * (a failed probe) print as -1, the "probe failed" sentinel
+    * `host_calib_sustained_decay` already uses: BigDecimal cannot hold
+    * them, and a bare NaN token is not JSON.
+    */
+  private[graft] def r6(v: Double): String =
+    if (!java.lang.Double.isFinite(v)) r6(-1.0)
+    else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+      .underlying.stripTrailingZeros.toPlainString
 
   /** Replicate the reference WOD fixtures into an n-file corpus
     * (default 32; SPARK_GRAFT_WOD_FILES scales it for the driver-bound

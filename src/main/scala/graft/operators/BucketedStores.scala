@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Maintenance for the stored bucketed indexes
-  * ([[TextDedupOps.writeLshIndex]], [[SimilarityOps.writeIvfIndex]]):
+  * ([[TextDedupOps.writeLshIndex]], [[IvfStore.write]]):
   * every append adds one file per populated bucket, so a store that
   * lives through many snapshot deltas accumulates small files — the
   * classic bucketed-append pathology (scan task count and footer
@@ -170,10 +170,10 @@ object BucketedStores extends org.apache.spark.internal.Logging {
     }
 
   /** Table property carrying the QUANTIZER BUILD ID: a uuid minted by
-    * [[SimilarityOps.writeIvfIndex]]/[[SimilarityOps.writeIvfSq8Index]]
-    * and stamped onto the inverted-lists table and every companion it
-    * writes. The stamp is the lineage proof the snapshot machinery and
-    * the probe resolvers check: lists may only ever probe against a
+    * [[IvfStore.write]] and stamped onto the lists table and every
+    * companion it writes. The stamp is the lineage proof the snapshot
+    * machinery and the probe resolvers check: lists may only ever
+    * probe against a
     * companion carrying the SAME build id — a full rebuild mints a new
     * id, so stale-lists × retrained-quantizer combinations fail loudly
     * instead of silently mis-assigning probe lists.
@@ -198,11 +198,11 @@ object BucketedStores extends org.apache.spark.internal.Logging {
     }.toOption.flatten
 
   /** Quantizer snapshot for versioned ANN index stores: if `name` has
-    * a `<name>_centroids` companion ([[SimilarityOps.writeIvfIndex]]'s
+    * a `<name>_centroids` companion ([[IvfStore.write]]'s
     * coarse quantizer, k rows), pin a copy onto the NEWEST live
     * generation (`<name>__v<k>_centroids`) — the one the current
     * swap/adoption just created. List MAINTENANCE never retrains the
-    * quantizer, but a later FULL REBUILD (`writeIvfIndex` re-run, or a
+    * quantizer, but a later FULL REBUILD (`IvfStore.write` re-run, or a
     * streamed index rebuild) drops and retrains the base companion
     * while retained generations survive, and probing OLD lists against
     * NEW centroids silently mis-assigns probe lists. So the snapshot
@@ -226,22 +226,19 @@ object BucketedStores extends org.apache.spark.internal.Logging {
     * without a companion (LSH, BM25, plain bucketed stores).
     */
   private def snapshotCentroids(spark: SparkSession,
-      name: String): Unit = {
-    // the coarse quantizer: k rows — a physical copy is catalog noise
-    snapshotCompanion(spark, name, "_centroids", shallow = false)
-    // the PQ codebooks ([[SimilarityOps.writePqIndex]]): m×codes rows
-    snapshotCompanion(spark, name, "_codebooks", shallow = false)
-    // the SQ8 float companion: corpus-scale, so the snapshot is a
-    // SHALLOW catalog copy (CREATE TABLE LIKE at the source's
-    // location — schema + bucket spec carried, zero data moved).
-    // Sound because companion files are immutable once written
-    // (appends add files, nothing rewrites in place) and the rerank
-    // only ever fetches ids that survived the generation's own lists,
-    // so a superset companion serves every retained generation of its
-    // build. Retirement drops only the catalog entry (external
-    // semantics) — file reachability stays [[vacuumOrphans]]'s job.
-    snapshotCompanion(spark, name, "_vecs", shallow = true)
-  }
+      name: String): Unit =
+    // the quantizers (k or m×codes rows) copy physically; the
+    // corpus-scale `_vecs` floats get a SHALLOW catalog copy (CREATE
+    // TABLE LIKE at the source's location — schema + bucket spec
+    // carried, zero data moved). Sound because companion files are
+    // immutable once written (appends add files, nothing rewrites in
+    // place) and the rerank only ever fetches ids that survived the
+    // generation's own lists, so a superset companion serves every
+    // retained generation of its build. Retirement drops only the
+    // catalog entry (external semantics) — file reachability stays
+    // [[vacuumOrphans]]'s job.
+    IvfStore.Companions.foreach(c =>
+      snapshotCompanion(spark, name, c.suffix, c.shallow))
 
   private def snapshotCompanion(spark: SparkSession, name: String,
       suffix: String, shallow: Boolean): Unit = {
@@ -267,8 +264,8 @@ object BucketedStores extends org.apache.spark.internal.Logging {
         // leaving the snapshot pointing at nothing while its build
         // stamp still matches — so managed sources get a PHYSICAL copy
         // (the corpus-scale cost is the price of building a store
-        // without an explicit location; pass `location` to writeIvf*/
-        // writePqIndex to keep snapshots zero-copy).
+        // without an explicit location; pass `location` to IvfStore.write
+        // to keep snapshots zero-copy).
         val srcMeta = spark.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(src))
         val srcExternal = srcMeta.tableType ==
@@ -369,9 +366,8 @@ object BucketedStores extends org.apache.spark.internal.Logging {
         // die with it (the _vecs snapshot is a shallow external
         // entry — dropping it touches no files)
         SketchStats.dropStats(spark, s"${name}__v$k")
-        spark.sql(s"DROP TABLE IF EXISTS ${name}__v${k}_centroids")
-        spark.sql(s"DROP TABLE IF EXISTS ${name}__v${k}_codebooks")
-        spark.sql(s"DROP TABLE IF EXISTS ${name}__v${k}_vecs")
+        IvfStore.Companions.foreach(c =>
+          spark.sql(s"DROP TABLE IF EXISTS ${name}__v$k${c.suffix}"))
       }
     // pin the quantizer onto every generation that will stay readable
     // (ANN index stores only — no-op otherwise): retained historical
@@ -665,7 +661,7 @@ object BucketedStores extends org.apache.spark.internal.Logging {
   }
 
   /** Reset a store's replay ledger — called by every index REBUILD
-    * (`writeIvfIndex` family): a rebuilt index is a NEW store, and a
+    * (`IvfStore.write`): a rebuilt index is a NEW store, and a
     * stale ledger would silently no-op the first re-delivery of each
     * batch id against it (an at-least-once writer restarting from
     * batch 0 would have its entire backlog swallowed). Compaction

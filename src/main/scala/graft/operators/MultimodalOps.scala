@@ -155,7 +155,7 @@ object MultimodalOps {
   /** STANDING perceptual-hash index: the banded fingerprints as a
     * bucketed `(band, bkey)` parquet table — the media family's
     * member of the stored-index tier (text has `writeLshIndex`,
-    * vectors `writeIvfIndex`, lexical retrieval the BM25 postings).
+    * vectors `IvfStore.write`, lexical retrieval the BM25 postings).
     * Payloads are read ONCE at build; every later delta probes
     * fingerprint rows from disk, bucket-aligned.
     */

@@ -34,8 +34,10 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   *
   * Cost model: one footer read (~ms, tail of one file) usually
   * decides an over-cap corpus; a bounded batch reads its handful of
-  * footers once. No caching — footers are re-read per call, so the
-  * decision is always as current as the job it replaces.
+  * footers once, and no relation costs more than
+  * [[RelationRowBound.MaxFooters]] sequential reads. No caching —
+  * footers are re-read per call, so the decision is always as current
+  * as the job it replaces.
   */
 object RelationRowBound {
 
@@ -91,22 +93,32 @@ object RelationRowBound {
     case _ => None
   }
 
+  /** Footers read per relation at most: a bounded batch is a handful
+    * of files, and an over-cap corpus proves itself within the first
+    * few. A walk that stops with files left and the sum still ≤ cap
+    * proves nothing (None — callers fall back to their bounded job).
+    */
+  private[operators] val MaxFooters = 16
+
   /** Sum of footer row counts across the relation's files,
-    * short-circuited past `cap`. The FileIndex listing is the same
-    * one the scan itself would use (already built at analysis).
+    * short-circuited past `cap` and stopped after [[MaxFooters]]
+    * files. The FileIndex listing is the same one the scan itself
+    * would use (already built at analysis).
     */
   private def parquetRows(spark: SparkSession, fs: HadoopFsRelation,
       cap: Long): Option[Long] = scala.util.Try {
     val conf = spark.sessionState.newHadoopConf()
+    val files = fs.location.inputFiles
     var total = 0L
-    val it = fs.location.inputFiles.iterator
-    while (it.hasNext && total <= cap) {
+    var read = 0
+    while (read < files.length && read < MaxFooters && total <= cap) {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(it.next()), conf)
+        .fromPath(new org.apache.hadoop.fs.Path(files(read)), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try total += r.getRecordCount
       finally r.close()
+      read += 1
     }
-    total
-  }.toOption
+    if (read < files.length && total <= cap) None else Some(total)
+  }.toOption.flatten
 }

@@ -29,15 +29,15 @@ import graft.functions.VectorFunctions._
 object SimilarityOps {
 
   /** Cap on the candidate-gather refine fetch (nQueries × rerank):
-    * below it, [[probeIvfSq8Index]] collects the survivor ids (a
-    * bounded serving-batch-scale set) and pushes them into the
-    * `_vecs` scan as an In filter — candidate-scale refine IO;
-    * above it, the lazy full join (no driver materialization).
+    * below it, the stored probe ([[IvfStore.probe]]) collects the
+    * survivor ids (a bounded serving-batch-scale set) and pushes them
+    * into the `_vecs` scan as an In filter — candidate-scale refine
+    * IO; above it, the lazy full join (no driver materialization).
     */
   val GatherMaxIds: Long = 8192L
 
   /** Cap on the bounded-query-batch regime for probed-list pruning
-    * ([[prunedLists]]): at or below it, the probe pays one
+    * ([[IvfStore.probe]]): at or below it, the probe pays one
     * query-scale job to learn the probed cid set and prunes the
     * lists scan to it; above it (corpus-as-queries), the batch
     * probes essentially every list and the job would buy nothing.
@@ -131,19 +131,9 @@ object SimilarityOps {
       else v
     val b = bSrc.select(col("band"), col("bucket"), col("vid").as("id_b"),
       col("e").as("eb"), col("nrm").as("nb"))
-    // top-1 as max(struct(score, -id)): map-side-combinable hash agg,
-    // no window sort; tie-break = ORDER BY score DESC, id_b ASC.
-    a.join(b, Seq("band", "bucket"))
+    top1(a.join(b, Seq("band", "bucket"))
       .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"),
-        struct(
-          round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-            .as("score"),
-          (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("id_a"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
-        col("best.score").as("score"))
+      .select(col("id_a"), col("id_b"), cos6("ea", "na", "eb", "nb")))
   }
 
   /** Exact thresholded cosine-similarity self-join via block-pair
@@ -195,9 +185,7 @@ object SimilarityOps {
       // diagonal cells hold both orderings of an in-block pair: keep one;
       // off-diagonal cells hold each cross-block pair exactly once
       .filter(col("bi") < col("bj") || col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-          .as("score"))
+      .select(col("id_a"), col("id_b"), cos6("ea", "na", "eb", "nb"))
       .filter(col("score") >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("score"))
@@ -231,64 +219,55 @@ object SimilarityOps {
       if (maxBucket > 0) capPerGroup(v, Seq("cell"), maxBucket) else v
     val index = idxSrc.select(col("cell"), col("vid").as("id_b"),
       col("e").as("eb"), col("nrm").as("nb"))
-    queries.join(index, Seq("cell"))
+    top1(queries.join(index, Seq("cell"))
       .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b"), cos6("ea", "na", "eb", "nb")))
+  }
+
+  /** round(cos, 6) of two (vector, norm) column pairs, as `score` —
+    * the exact scoring rule of every ANN surface.
+    */
+  private[operators] def cos6(ea: String, na: String, eb: String,
+      nb: String): Column =
+    round(array_dot(col(ea), col(eb)) / (col(na) * col(nb)), 6).as("score")
+
+  /** Top-1 per `id_a` over (id_a, id_b, score) pairs as
+    * max(struct(score, -id_b)): a map-side-combinable hash agg, no
+    * window sort; tie-break = ORDER BY score DESC, id_b ASC. Output
+    * (id_a, ann_id, score).
+    */
+  private[operators] def top1(scored: DataFrame): DataFrame =
+    scored
       .select(col("id_a"),
-        struct(
-          round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-            .as("score"),
-          (-col("id_b")).as("neg_id")).as("cand"))
+        struct(col("score"), (-col("id_b")).as("neg_id")).as("cand"))
       .groupBy(col("id_a"))
       .agg(max(col("cand")).as("best"))
       .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
         col("best.score").as("score"))
-  }
 
-  /** IVF (inverted-file) ANN top-1 — the centroid-quantized scale
-    * path next to hyperplane LSH (public technique: IVF-Flat, the
-    * coarse half of Jégou et al.'s IVFADC). Coarse quantizer = the
-    * `k` vectors with the lowest ids (the same deterministic seeding
-    * as em6's Lloyd step; in production the trained centroids are
-    * passed the same way — they are ALWAYS driver/broadcast-resident,
-    * that's what makes IVF cheap). Every vector lands in exactly ONE
-    * inverted list (its nearest centroid); every query probes its
-    * `nprobe` nearest lists.
-    *
-    * Plan shape: the k×dims centroid matrix ships as a struct-array
-    * LITERAL, so both the list assignment and the probe selection are
-    * ONE map-side projection per vector — `array_sort` over k scored
-    * structs in-row, no n×k exchange, no window. The only shuffle is
-    * the (cid)-keyed equi-join of queries (nprobe rows each) against
-    * inverted lists (1 row each): candidate count ≤ n × nprobe ×
-    * list size, linear in corpus size. A (query, index) pair meets in
-    * at most one list, so — unlike banded LSH — no pair dedup is
-    * needed between scoring and the top-1 agg.
-    *
-    * `maxList` (0 = off) is the same pathological-bucket guard as
-    * `annTop1`'s `maxBucket`: a corpus collapsing into one centroid's
-    * list is bounded to a deterministic uniform sample on the INDEX
-    * side only (queries all stay covered).
-    *
-    * SIZING k AT SCALE: the list join has exactly k distinct shuffle
-    * keys, so k bounds both per-query candidate work (nprobe × n/k)
-    * AND reduce-side parallelism — k=16 is fixture-sized. Grow k with
-    * the corpus (the classic IVF sizing is k ≈ √n: ~10⁴–10⁵ lists at
-    * 10⁸–10¹⁰ vectors), which keeps lists reducer-sized and the
-    * centroid literal in driver-broadcast territory; AQE skew-split
-    * covers residual imbalance between lists.
-    *
-    * Tie-breaks mirror the rest of the ANN surface: centroid order =
-    * (cosine DESC, cid ASC); neighbor = (score DESC, id ASC).
+  /** Quantized-pass survivors: the top-`rerank` (id_a, id_b) pairs per
+    * query by (score DESC, id ASC) as the bounded
+    * [[org.apache.spark.sql.graft.TopKPairs]] aggregate — a
+    * row_number window would shuffle and sort the whole candidate set;
+    * topk_pairs streams candidates through `rerank` slots map-side.
+    * Identical kept set (the ordering embeds the window's tie-break).
     */
+  private[operators] def survivors(scored: DataFrame,
+      rerank: Int): DataFrame =
+    scored.groupBy(col("id_a"))
+      .agg(topk_pairs(col("score"), col("id_b"), rerank).as("tk"))
+      .select(col("id_a"), explode(col("tk")).as("p"))
+      .select(col("id_a"), col("p.id").as("id_b"))
+
   /** The (vid, e, nrm) projection every IVF stage starts from.
     *
     * A NULL embedding fails LOUDLY here: downstream, `explode` of a
     * NULL transform yields no rows, so a malformed query row would
-    * otherwise neither probe nor count toward [[probeRegime]]'s
-    * regime decision — it would simply vanish from the results. A
-    * null id is equally malformed (it can never join the refine).
+    * otherwise neither probe nor count toward the probe's regime
+    * decision — it would simply vanish from the results. A null id is
+    * equally malformed (it can never join the refine).
     */
-  private def ivfProject(vecsDf: DataFrame, idCol: String,
+  private[operators] def ivfProject(vecsDf: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     vecsDf
       .filter(assert_true(
@@ -306,7 +285,7 @@ object SimilarityOps {
     * quantizer is driver/broadcast-resident by contract — same
     * footprint class as the broadcast plane matrix.
     */
-  private def firstKCentroids(v: DataFrame, k: Int,
+  private[operators] def firstKCentroids(v: DataFrame, k: Int,
       dims: Int): Seq[(Long, Seq[Double])] = {
     val cents = v.orderBy(col("vid")).limit(k)
       .select(col("vid"), col("e")).collect()
@@ -319,23 +298,31 @@ object SimilarityOps {
     cents.toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
   }
 
-  /** The k-centroid struct-array literal (cid, ce, cn) both the list
-    * assignment and probe selection score in-row.
+  /** The k centroids scored in-row against (e, nrm) as (ns = -cos at
+    * 6 dp, cid) structs — lexicographic struct order IS the selection
+    * rule (cosine DESC, cid ASC).
     */
-
-  /** Top-1 coarse assignment: the centroid with MAX cosine at 6 dp,
-    * ties to the smaller cid — computed as `array_min` over
-    * (ns = -cos, cid) structs (lexicographic struct order IS the
-    * selection rule). One O(k) pass per row; the previous
-    * sort-then-slice spelling paid an O(k log k) boxed struct sort
-    * per CORPUS row, which dominated index builds at real quantizer
-    * sizes (k ~ √n). Identical selection by construction.
-    */
-  private def nearestCid(centArr: Column): Column =
-    array_min(transform(centArr, c => struct(
+  private def centroidScores(centArr: Column): Column =
+    transform(centArr, c => struct(
       (-round(array_dot(col("e"), c.getField("ce"))
         / (col("nrm") * c.getField("cn")), 6)).as("ns"),
-      c.getField("cid").as("cid")))).getField("cid")
+      c.getField("cid").as("cid")))
+
+  /** Top-1 coarse assignment: `array_min` over [[centroidScores]] — one
+    * O(k) pass per row instead of a boxed O(k log k) struct sort per
+    * CORPUS row (which dominated index builds at k ~ √n). Identical
+    * selection to the head of [[probeCids]] by construction.
+    */
+  private[operators] def nearestCid(centArr: Column): Column =
+    array_min(centroidScores(centArr)).getField("cid")
+
+  /** The `nprobe` probed list ids per row, best first — THE nprobe
+    * ranking every IVF probe uses (the SQL surface spells the same
+    * rule in text, see [[org.apache.spark.sql.graft.GraftAnnRewrite]]).
+    */
+  private[operators] def probeCids(centArr: Column, nprobe: Int): Column =
+    transform(slice(array_sort(centroidScores(centArr)), 1, nprobe),
+      s => s.getField("cid"))
 
   /** The centroid set as ONE plan node: a single Literal holding the
     * already-converted array<struct<cid, ce, cn>> VALUE. The naive
@@ -351,7 +338,8 @@ object SimilarityOps {
     * array<struct> value the HOF lambdas consume), and codegen embeds
     * it as a constant reference, never source text.
     */
-  private def centroidLiteral(cents: Seq[(Long, Seq[Double])]): Column = {
+  private[operators] def centroidLiteral(
+      cents: Seq[(Long, Seq[Double])]): Column = {
     import org.apache.spark.sql.types._
     val rows = cents.map { case (cid, ce) =>
       var ss = 0.0 // same left-to-right fold as array_norm
@@ -368,25 +356,6 @@ object SimilarityOps {
           containsNull = false)))
   }
 
-  /** HISTORICAL boundary, kept for spec addressing: below it the r20
-    * code shipped the quantizer as an expression tree, above it as a
-    * broadcast cross join. Since r21 BOTH regimes ship as the single
-    * Literal node of [[centroidLiteral]] — this value no longer
-    * selects a code path; the big-k spec still uses it to pick a k
-    * that exercises the formerly-broadcast regime.
-    */
-  val CentroidLiteralMax: Int = 64
-
-  /** The quantizer as a (DataFrame, Column) pair: `df` unchanged plus
-    * a column holding array<struct<cid, ce, cn>> as one Literal plan
-    * node (see [[centroidLiteral]]).
-    * Every downstream select that projects its own columns drops the
-    * carrier column naturally.
-    */
-  private def withCentroids(df: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): (DataFrame, Column) =
-    (df, centroidLiteral(cents))
-
   /** Scan-local coarse assignment to the deterministic first-k
     * centroids: (vid, e, nrm, cid) with cid chosen in-row off the
     * centroid LITERAL (cosine DESC, cid ASC at 6dp — the sim4 probe
@@ -399,18 +368,17 @@ object SimilarityOps {
   def assignFirstK(vecsDf: DataFrame, idCol: String, vecCol: String,
       dims: Int, k: Int): DataFrame = {
     val v = ivfProject(vecsDf, idCol, vecCol)
-    val (vc, centArr) = withCentroids(v, firstKCentroids(v, k, dims))
-    vc.select(col("vid"), col("e"), col("nrm"),
-      nearestCid(centArr).as("cid"))
+    v.select(col("vid"), col("e"), col("nrm"),
+      nearestCid(centroidLiteral(firstKCentroids(v, k, dims))).as("cid"))
   }
 
   /** Train the IVF coarse quantizer: `iters` Lloyd refinements of the
     * first-k seeding (em7's iteration, run to a fixed small count —
     * the classic IVF trainer uses a few Lloyd rounds over a sample).
     * Per round the corpus never shuffles: centroids ship as a literal,
-    * assignment is the same in-row scored `array_sort` as the IVF
-    * probe selection (cosine DESC, cid ASC at 6dp — bit-identical to
-    * the oracle's window rank), and the update aggregates nano-exact
+    * assignment is the same in-row [[nearestCid]] as the IVF list
+    * assignment (cosine DESC, cid ASC at 6dp — bit-identical to the
+    * oracle's window rank), and the update aggregates nano-exact
     * per-dimension BIGINT sums, collected at k×dims rows (bounded:
     * the quantizer is driver-resident by contract). A centroid whose
     * list empties simply drops out (standard Lloyd degeneracy; k
@@ -422,12 +390,8 @@ object SimilarityOps {
     val v = ivfProject(vecsDf, idCol, vecCol)
     var cents = firstKCentroids(v, k, dims)
     for (_ <- 1 to iters) {
-      val (vc, centArr) = withCentroids(v, cents)
-      val assigned = vc.select(
-        nearestCid(centArr).as("cid"),
-        col("e"))
-      val upd = assigned
-        .select(col("cid"), posexplode(col("e")).as(Seq("dim", "x")))
+      val upd = v.select(nearestCid(centroidLiteral(cents)).as("cid"),
+          posexplode(col("e")).as(Seq("dim", "x")))
         .groupBy(col("cid"), col("dim"))
         .agg(count(lit(1)).as("n"),
           sum(floor(col("x") * 1e9 + 0.5).cast("long")).as("units"))
@@ -443,9 +407,32 @@ object SimilarityOps {
     cents
   }
 
-  /** The shared IVF candidate stage: (id_a, id_b, score) scored pairs
-    * from the `nprobe` probed inverted lists (see [[ivfTop1]] for the
-    * plan-shape discussion). Each pair appears exactly once.
+  /** IVF (inverted-file) ANN — the centroid-quantized scale path next
+    * to hyperplane LSH (public technique: IVF-Flat, the coarse half of
+    * Jégou et al.'s IVFADC). Coarse quantizer = the `k` vectors with
+    * the lowest ids (em6's deterministic seeding), or `trainIters`
+    * Lloyd refinements of it; every vector lands in exactly ONE
+    * inverted list (its nearest centroid); every query probes its
+    * `nprobe` nearest lists ([[probeCids]]).
+    *
+    * Plan shape: the centroid matrix ships as ONE literal
+    * ([[centroidLiteral]]), so list assignment and probe selection are
+    * one map-side projection per vector — no n×k exchange, no window.
+    * The only shuffle is the (cid)-keyed equi-join of queries (nprobe
+    * rows each) against the lists (1 row each); a (query, index) pair
+    * meets in at most one list, so no pair dedup is needed. The
+    * projection is persisted scoped: both join branches read it, and
+    * without the cache each re-plans the source scan AND the centroid
+    * scoring; the listener sweep releases it once the consuming action
+    * materializes it (CacheHygieneSpec).
+    *
+    * `maxList` (0 = off) is `annTop1`'s `maxBucket` guard: a corpus
+    * collapsing into one list is bounded to a deterministic uniform
+    * sample on the INDEX side only. SIZING k AT SCALE: the list join
+    * has exactly k shuffle keys, so grow k with the corpus (k ≈ √n);
+    * AQE skew-split covers residual imbalance between lists.
+    *
+    * Output: (id_a, id_b, score) scored pairs, each pair once.
     */
   private def ivfCandidates(vecsDf: DataFrame, idCol: String,
       vecCol: String, dims: Int, k: Int, nprobe: Int, maxList: Int,
@@ -458,49 +445,25 @@ object SimilarityOps {
     // Lloyd dropout can shrink the centroid set below nprobe
     require(cents.length >= nprobe,
       s"quantizer has ${cents.length} live centroids < nprobe $nprobe")
-    val (vc, centArr) = withCentroids(v, cents)
-    // one in-row pass: score all k centroids, sort (cos DESC, cid ASC),
-    // keep only the nprobe best centroid ids. Persisted: the index and
-    // query branches below both consume this projection, and without
-    // the cache each branch re-plans the source scan AND the k-centroid
-    // scoring (a double full-scan — real money at corpus scale). The
-    // persisted row is (vid, e, nrm, nprobe longs) — the embedding plus
-    // a few bytes. Lifetime: scoped — released by the listener sweep
-    // once the consuming action materializes it (CacheHygieneSpec).
     val scored = org.apache.spark.sql.graft.ScopedCaches.scoped(
-      vc.select(col("vid"), col("e"), col("nrm"),
-        transform(
-          slice(array_sort(transform(centArr, c => struct(
-            (-round(array_dot(col("e"), c.getField("ce"))
-              / (col("nrm") * c.getField("cn")), 6)).as("ns"),
-            c.getField("cid").as("cid")))), 1, nprobe),
-          s => s.getField("cid")).as("probe_cids")))
+      v.withColumn("probe_cids",
+        probeCids(centroidLiteral(cents), nprobe)))
     val idxAll = scored.select(
       element_at(col("probe_cids"), 1).as("cid"),
-      col("vid").as("id_b"), col("e").as("eb"), col("nrm").as("nb"))
+      col("vid"), col("e").as("e_b"), col("nrm").as("nrm_b"))
     val index =
-      if (maxList > 0)
-        capPerGroup(idxAll.withColumnRenamed("id_b", "vid"), Seq("cid"),
-          maxList).withColumnRenamed("vid", "id_b")
-      else idxAll
-    val queries = scored.select(col("vid").as("id_a"), col("e").as("ea"),
-      col("nrm").as("na"), explode(col("probe_cids")).as("cid"))
+      (if (maxList > 0) capPerGroup(idxAll, Seq("cid"), maxList)
+       else idxAll).withColumnRenamed("vid", "id_b")
+    val queries = scored.select(col("vid").as("id_a"), col("e").as("e_a"),
+      col("nrm").as("nrm_a"), explode(col("probe_cids")).as("cid"))
     queries.join(index, Seq("cid"))
       .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-          .as("score"))
+      .select(col("id_a"), col("id_b"), listScore(ListCodec.Flat))
   }
 
   def ivfTop1(vecsDf: DataFrame, idCol: String, vecCol: String, dims: Int,
       k: Int = 16, nprobe: Int = 2, maxList: Int = 0): DataFrame =
-    ivfCandidates(vecsDf, idCol, vecCol, dims, k, nprobe, maxList)
-      .select(col("id_a"),
-        struct(col("score"), (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("id_a"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
-        col("best.score").as("score"))
+    top1(ivfCandidates(vecsDf, idCol, vecCol, dims, k, nprobe, maxList))
 
   /** IVF top-K retrieval (the k>1 shape real retrieval pipelines run):
     * same candidate stage as [[ivfTop1]], ranked per query by
@@ -515,595 +478,10 @@ object SimilarityOps {
       maxList: Int = 0): DataFrame = {
     ivfCandidates(vecsDf, idCol, vecCol, dims, k, nprobe, maxList)
       .groupBy(col("id_a"))
-      .agg(graft.functions.VectorFunctions
-        .topk_pairs(col("score"), col("id_b"), topK).as("tk"))
+      .agg(topk_pairs(col("score"), col("id_b"), topK).as("tk"))
       .select(col("id_a"), posexplode(col("tk")).as(Seq("pos", "p")))
       .select(col("id_a"), (col("pos") + 1).cast("long").as("rank"),
         col("p.id").as("nn_id"), col("p.score").as("score"))
-  }
-
-  /** Materialize the IVF index as DURABLE storage — the ANN serving
-    * shape (build once per corpus snapshot, probe forever): the
-    * inverted lists as a `cid`-BUCKETED, sorted table (list membership
-    * = nearest first-k centroid, the same oracle-checkable selection
-    * rule as [[ivfTop1]]), plus the k centroids in a `<table>_centroids`
-    * companion (k rows — the quantizer is driver/broadcast-resident by
-    * contract, the companion just makes it durable). A probe joins the
-    * bucket-aligned list scan with ZERO index-side shuffle — at corpus
-    * scale the stored side never moves, mirroring
-    * [[graft.operators.TextDedupOps.writeLshIndex]]'s discipline.
-    */
-  def writeIvfIndex(vecsDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, k: Int, table: String, buckets: Int = 8,
-      location: Option[String] = None, mor: Boolean = false): Unit = {
-    val spark = vecsDf.sparkSession
-    import spark.implicits._
-    // stale-location hygiene: catalog registrations die with the JVM,
-    // managed locations don't — drop + explicit external path
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_centroids")
-    BucketedStores.dropReplayLedger(spark, table)
-    val v = ivfProject(vecsDf, idCol, vecCol)
-    val cents = firstKCentroids(v, k, dims)
-    val (vc, centArr) = withCentroids(v, cents)
-    val assigned = vc.select(
-        nearestCid(centArr).as("cid"),
-        col("vid"), col("e"), col("nrm"))
-    // mor = true: lists carry `_seq` = 0 and serve through the
-    // tombstone view, so vector deletes append (vid, seq) tombstones
-    // ([[BucketedStores.morDelete]]) instead of rewriting the lists;
-    // the k-row centroid companion never changes under maintenance
-    val lists = (if (mor) assigned.withColumn("_seq", lit(0L))
-      else assigned)
-      .write.bucketBy(buckets, "cid").sortBy("cid")
-      .mode("overwrite")
-    location.fold(lists)(l => lists.option("path", s"$l/lists"))
-      .saveAsTable(table)
-    val cw = cents.toDF("cid", "ce").write.mode("overwrite")
-    location.fold(cw)(l => cw.option("path", s"$l/cents"))
-      .saveAsTable(table + "_centroids")
-    // quantizer lineage stamp: lists and companion carry the same
-    // build id; a later rebuild mints a NEW id, so any machinery
-    // pairing old lists with retrained centroids fails loudly
-    // (BucketedStores.snapshotCentroids, the GRAFT_ANN resolver, the
-    // API probes, appendToIvfIndex)
-    val build = BucketedStores.newBuildId()
-    BucketedStores.stampBuild(spark, table, build)
-    BucketedStores.stampBuild(spark, table + "_centroids", build)
-    if (mor) {
-      BucketedStores.adoptVersioned(spark, table)
-      BucketedStores.morEnable(spark, table, Seq("vid"), "vid")
-    }
-  }
-
-  /** Probe a STORED IVF index ([[writeIvfIndex]]) with query vectors:
-    * top-1 neighbor per query, identical semantics to [[ivfTop1]] over
-    * the same corpus — but the corpus-scale inverted lists come off
-    * the bucket-aligned table scan (no index-side exchange, no
-    * re-assignment); only the query side is scored (in-row, against
-    * the k-row companion collected to a literal) and shuffled at
-    * (query × nprobe) scale.
-    */
-  /** Lineage guard shared by the stored probes and the delta append:
-    * when both the lists (resolving a versioned serving view to its
-    * current generation) and the `_centroids` companion carry a
-    * quantizer build stamp, they must MATCH — a mismatch means the
-    * quantizer was rebuilt out from under these lists (or a stale
-    * snapshot was forced onto a generation), and probing would
-    * silently mis-assign probe lists. Unstamped legacy tables pass
-    * (no proof either way — the snapshot machinery already refuses to
-    * back-fill those).
-    */
-  private def requireQuantizerLineage(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      companions: Seq[String] = Seq("_centroids")): Unit = {
-    // resolve a versioned serving VIEW to its current generation; a
-    // plain table (or temp view) short-circuits — currentGeneration's
-    // catalog listing is a per-call query, too slow for the hot
-    // serving path
-    val isView = scala.util.Try(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst
-        .TableIdentifier(table)).tableType ==
-      org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-      .getOrElse(false)
-    val lists =
-      if (isView)
-        scala.util.Try(
-          BucketedStores.currentGeneration(spark, table)).getOrElse(table)
-      else table
-    // one catalog lookup for the lists stamp, not one per companion
-    // (each is a metadata round-trip on the hot serving path)
-    val listsStamp = BucketedStores.buildStamp(spark, lists)
-    companions.foreach { sfx =>
-      val comp = table + sfx
-      for {
-        ls <- listsStamp
-        cs <- BucketedStores.buildStamp(spark, comp)
-      } require(ls == cs,
-        s"quantizer build mismatch for $table: lists ($lists) were " +
-          s"assigned under build $ls but companion $comp carries " +
-          s"build $cs — the index was rebuilt out from under these " +
-          "lists; rebuild the index (writeIvfIndex/writeIvfSq8Index/" +
-          "writePqIndex) before serving")
-    }
-  }
-
-  def probeIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, queriesDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, nprobe: Int): DataFrame = {
-    requireQuantizerLineage(spark, table)
-    val cents = spark.table(table + "_centroids")
-      .orderBy(col("cid")).collect() // bounded: k rows by contract
-      .map(r => r.getLong(0) -> r.getSeq[Double](1))
-    require(cents.nonEmpty && cents.length >= nprobe,
-      s"index $table has ${cents.length} centroids < nprobe $nprobe")
-    cents.foreach { case (cid, ce) =>
-      require(ce.length == dims,
-        s"stored centroid $cid has ${ce.length} dims, expected $dims")
-    }
-    val (qc, centArr) = withCentroids(
-      ivfProject(queriesDf, idCol, vecCol), cents.toSeq)
-    val q = qc
-      .select(col("vid").as("id_a"), col("e").as("ea"),
-        col("nrm").as("na"),
-        explode(transform(
-          slice(array_sort(transform(centArr, c => struct(
-            (-round(array_dot(col("e"), c.getField("ce"))
-              / (col("nrm") * c.getField("cn")), 6)).as("ns"),
-            c.getField("cid").as("cid")))), 1, nprobe),
-          s => s.getField("cid"))).as("cid"))
-    // AT MOST one bounded driver job ([[probeRegime]]) decides the
-    // serving-batch regime and collects the probed cid set together
-    // (zero jobs when the queries relation's footers prove over-cap)
-    val (_, probed) = probeRegime(q, nprobe, GatherMaxQueries,
-      base = Some(queriesDf))
-    val index = prunedLists(spark, table, probed, cents.length)
-      .select(col("cid"), col("vid").as("id_b"), col("e").as("eb"),
-        col("nrm").as("nb"))
-    q.join(index, Seq("cid"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"),
-        struct(
-          round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-            .as("score"),
-          (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("id_a"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
-        col("best.score").as("score"))
-  }
-
-  /** ONE bounded driver job decides the serving-batch regime AND
-    * learns the probed cid set: collect the exploded probe relation's
-    * (id_a, cid) pairs up to `maxQueries × nprobe` rows. Under the
-    * cap the batch is bounded — the SAME job yields the exact query
-    * count (for the candidate-gather regime) and the exact probed
-    * cid set (for the lists In-filter, the textbook IVF shape: read
-    * ONLY the probed lists — cid-bucket pruning plus parquet
-    * row-group pruning on the cid-sorted files drop the unprobed
-    * lists' bytes before they are read; at real index sizes, k ~ √n,
-    * that is ~nprobe/k of the index instead of all of it). This
-    * FOLDS the previous separate limit-count and distinct-cid jobs
-    * into one: each driver job carries ~0.3 s of fixed scheduling,
-    * measured as the bulk of the quantized probes' ~1.6 s serving
-    * overhead (BENCH_SCALE.md Act 2). Hitting the cap means
-    * corpus-as-queries — such a batch probes essentially every list,
-    * so there is nothing to prune and nothing to gather: no further
-    * driver jobs, the fully lazy join pipeline runs.
-    */
-  private def probeRegime(q: DataFrame, nprobe: Int,
-      maxQueries: Long, base: Option[DataFrame] = None)
-      : (Long, Option[Seq[Long]]) = {
-    // JOBLESS over-cap proof first (r20 verdict item 1): when the raw
-    // queries relation's parquet footers prove MORE than maxQueries
-    // rows, the batch is corpus-as-queries — nothing to prune, nothing
-    // to gather — and the bounded count job below is a pure ~0.2 s
-    // driver tax. Over-cap is the always-correct direction (the lazy
-    // pipeline computes identical results); bounded batches still run
-    // the one job, because only it can yield the probed cid set.
-    // (Base rows with NULL vectors explode to zero probe rows, so a
-    // null-heavy batch that the exploded count would have called
-    // bounded may here take the lazy path — a regime choice, never a
-    // result change.)
-    if (base.exists(b =>
-        RelationRowBound.exceeds(b, maxQueries).contains(true)))
-      return (Long.MaxValue, None)
-    val lim = math.min(maxQueries * math.max(nprobe, 1) + 1,
-      Int.MaxValue.toLong).toInt
-    // ONE aggregate row, not a row collect: the driver receives
-    // (row count, distinct query count, probed cid set) — O(k + 1)
-    // driver bytes regardless of lim (a row collect here would
-    // materialize maxQueries×nprobe GenericRows per serving call),
-    // and no type assumption on the id column (countDistinct takes
-    // any type; only cids — engine-made longs — reach the driver)
-    val row = scala.util.Try(
-      q.limit(lim).agg(
-        count(lit(1)).as("n"),
-        count_distinct(col("id_a")).as("nq"),
-        collect_set(col("cid")).as("cids")).head())
-      .getOrElse(null)
-    if (row == null || row.getLong(0) >= lim) (Long.MaxValue, None)
-    else (row.getLong(1), Some(row.getSeq[Long](2).sorted))
-  }
-
-  /** The shared REFINE TAIL of every quantized stored probe
-    * (SQ8 / flat PQ / IVF-PQ): the quantized survivors fetch floats
-    * from the `_vecs` companion and the exact cosine picks the
-    * winner per query ((score DESC, id ASC) as a max-struct hash
-    * agg). For a bounded serving batch (nQueries × rerank ≤ the
-    * gather cap) the survivor PAIRS are collected once — a bounded,
-    * serving-batch-scale collect, NOT corpus-proportional — so the
-    * quantized scan runs exactly ONCE (the refine restarts from a
-    * local relation) and the survivor ids push into the `_vecs` read
-    * as an In filter: vid-bucket pruning plus parquet row-group
-    * pruning make the fetch candidate-scale (the faiss gather-by-id
-    * refine). The local relation is rebuilt UNDER THE SURVIVORS'
-    * OWN SCHEMA (no driver-side type assumption on the id columns),
-    * so stores with non-BIGINT ids refine identically in both
-    * regimes. Above the cap (corpus-as-queries) the fully lazy join
-    * pipeline remains — there the scan is shared work across a
-    * corpus of queries and the companion join is not the bottleneck.
-    */
-  private def gatherExactTop1(spark: org.apache.spark.sql.SparkSession,
-      table: String, survivors: DataFrame, va: DataFrame,
-      nQueries: Long, rerank: Int): DataFrame = {
-    val vecs = spark.table(table + "_vecs")
-    val gather = nQueries <= GatherMaxIds / math.max(rerank, 1)
-    val (survDf, vb) =
-      if (gather) {
-        val rows = survivors.collect()
-        val svDf = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), survivors.schema)
-        val ids = rows.map(_.get(1)).distinct.toSeq
-        (svDf, vecs.filter(col("vid").isInCollection(ids)))
-      } else (survivors, vecs)
-    survDf.join(va, Seq("id_a"))
-      .join(vb.select(col("vid").as("id_b"), col("e").as("eb"),
-        col("nrm").as("nb")), Seq("id_b"))
-      .select(col("id_a"),
-        struct(
-          round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-            .as("score"),
-          (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("id_a"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
-        col("best.score").as("score"))
-  }
-
-  /** The probed-lists scan: the In-filter when [[probeRegime]] proved
-    * the batch bounded and the probed set is a strict subset of the
-    * k lists, else the full lists table.
-    */
-  private def prunedLists(spark: org.apache.spark.sql.SparkSession,
-      table: String, probed: Option[Seq[Long]], k: Int): DataFrame = {
-    val lists = spark.table(table)
-    probed match {
-      case Some(cids) if cids.size < k =>
-        lists.filter(col("cid").isInCollection(cids))
-      case _ => lists
-    }
-  }
-
-  /** IVF-SQ8 — the bandwidth-optimized IVF the big ANN libraries
-    * actually run in production: the inverted lists carry INT8
-    * symmetric-absmax quantized vectors (4–8× fewer bytes than the
-    * float vectors — at 100 TB that is the difference between a
-    * memory-resident and a disk-bound scan), candidates are scored
-    * with an exact INTEGER dot product rescaled by the two absmax
-    * scales, the quantized top-`rerank` per query survive, and only
-    * those few fetch their float vectors back (two candidate-scale id
-    * joins) for the exact-cosine re-rank that picks the winner.
-    *
-    * Same coarse quantizer, list assignment, and probe rule as
-    * [[ivfTop1]] (first-k centroids, (cosine DESC, cid) rank) — the
-    * only difference is WHAT flows through the big cid-keyed join:
-    * (id, int8[dims], amax, nrm) instead of (id, double[dims], nrm).
-    * Quantization q_i = sign(x_i)·min(127, ⌊|x_i|·127/amax + ½⌋) is
-    * exact-integer-reproducible from the doubles, so the oracle
-    * re-derives every stage.
-    */
-  def ivfSq8Top1(vecsDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, k: Int, nprobe: Int, rerank: Int): DataFrame = {
-    val v = ivfProject(vecsDf, idCol, vecCol)
-    val cents = firstKCentroids(v, k, dims)
-    val (vc, centArr) = withCentroids(v, cents)
-    val quant = vc
-      .withColumn("amax", aggregate(col("e"), lit(0.0),
-        (a, x) => greatest(a, abs(x))))
-      .withColumn("q", transform(col("e"), x =>
-        (signum(x) * least(lit(127.0),
-          floor(abs(x) * (lit(127.0) / col("amax")) + lit(0.5))))
-          .cast("byte")))
-    // one scan: quantization + centroid ranking persisted scoped —
-    // the index branch, the probe branch, AND both rerank fetches all
-    // read this cache (sim4's single-scan discipline)
-    val ranked = org.apache.spark.sql.graft.ScopedCaches.scoped(
-      quant.withColumn("cs_ranked",
-        slice(array_sort(transform(centArr, c => struct(
-          (-round(array_dot(col("e"), c.getField("ce"))
-            / (col("nrm") * c.getField("cn")), 6)).as("ns"),
-          c.getField("cid").as("cid")))), 1, nprobe)))
-    val index = ranked.select(
-      element_at(col("cs_ranked"), 1).getField("cid").as("cid"),
-      col("vid").as("id_b"), col("q").as("qb"),
-      col("amax").as("amax_b"), col("nrm").as("nb"))
-    val queries = ranked.select(col("vid").as("id_a"), col("q").as("qa"),
-      col("amax").as("amax_a"), col("nrm").as("na"),
-      explode(transform(col("cs_ranked"), s => s.getField("cid")))
-        .as("cid"))
-    // native int8-dot kernel (exact, long-accumulated) — the HOF
-    // zip_with/aggregate form dispatched a closure per element on the
-    // candidate × dim hot loop; see [[org.apache.spark.sql.graft
-    // .ArrayDotQ8]]
-    val qscored = queries.join(index, Seq("cid"))
-      .filter(col("id_a") =!= col("id_b"))
-      .withColumn("qscore", round(
-        graft.functions.VectorFunctions.array_dot_q8(col("qa"), col("qb"))
-          .cast("double")
-          / ((lit(127.0) / col("amax_a")) * (lit(127.0) / col("amax_b")))
-          / (col("na") * col("nb")), 6))
-    // bounded-aggregate survivor selection (see probeIvfSq8Index):
-    // same kept set as the row_number window, O(k) state per query
-    val survivors = qscored
-      .groupBy(col("id_a"))
-      .agg(graft.functions.VectorFunctions
-        .topk_pairs(col("qscore"), col("id_b"), rerank).as("tk"))
-      .select(col("id_a"), explode(col("tk")).as("p"))
-      .select(col("id_a"), col("p.id").as("id_b"))
-    // only the quantized top-`rerank` fetch float vectors — two
-    // candidate-scale joins off the SAME cached projection; the
-    // corpus-scale join above moved int8s
-    val va = ranked.select(col("vid").as("id_a"), col("e").as("ea"),
-      col("nrm").as("na"))
-    val vb = ranked.select(col("vid").as("id_b"), col("e").as("eb"),
-      col("nrm").as("nb"))
-    survivors.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .select(col("id_a"),
-        struct(
-          round(array_dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-            .as("score"),
-          (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("id_a"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
-        col("best.score").as("score"))
-  }
-
-  /** Materialize the IVF-SQ8 index as DURABLE storage — [[ivfSq8Top1]]
-    * as a serving shape, and the bandwidth story made real: the
-    * cid-bucketed inverted lists carry INT8 absmax-quantized vectors
-    * (`array<tinyint>` — 1 byte/dim on disk and over the scan, 4-8×
-    * less than the float lists of [[writeIvfIndex]]; at 100 TB that is
-    * the difference between a memory-resident and a disk-bound probe),
-    * plus the k-row `_centroids` companion (same quantizer contract as
-    * the flat index) and a vid-bucketed `_vecs` float companion that
-    * ONLY the top-`rerank` candidates ever touch (two candidate-scale
-    * id joins — the faiss refine shape). Quantization is the exact
-    * sim8 rule (sign·min(127, ⌊|x|·127/amax + ½⌋), integral before the
-    * cast), so the stored probe reproduces [[ivfSq8Top1]] bit-exactly:
-    * storage is an execution detail, not a semantics change.
-    *
-    * Lifecycle parity with the float tier: the store adopts into
-    * versioned serving ([[BucketedStores.adoptVersioned]] /
-    * [[BucketedStores.applyDeltaAtomic]]) and, with `mor = true`,
-    * into merge-on-read deletes — an absmax-quantized row is
-    * self-contained, so deletes and compactions never touch the
-    * quantization. Every swap pins per-generation snapshots of BOTH
-    * companions (`_centroids` as a k-row copy, `_vecs` as a shallow
-    * catalog snapshot), all stamped with the build id, so the 5-arg
-    * `GRAFT_ANN` serves retained generations across a later rebuild
-    * exactly like the float tier.
-    */
-  def writeIvfSq8Index(vecsDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, k: Int, table: String, buckets: Int = 8,
-      location: Option[String] = None, mor: Boolean = false): Unit = {
-    val spark = vecsDf.sparkSession
-    import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_centroids")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_vecs")
-    BucketedStores.dropReplayLedger(spark, table)
-    val v = ivfProject(vecsDf, idCol, vecCol)
-    val cents = firstKCentroids(v, k, dims)
-    val (vc, centArr) = withCentroids(v, cents)
-    val quant = vc
-      .withColumn("amax", aggregate(col("e"), lit(0.0),
-        (a, x) => greatest(a, abs(x))))
-      .withColumn("q", transform(col("e"), x =>
-        (signum(x) * least(lit(127.0),
-          floor(abs(x) * (lit(127.0) / col("amax")) + lit(0.5))))
-          .cast("byte")))
-    val assigned = quant.select(
-      nearestCid(centArr).as("cid"),
-      col("vid"), col("q"), col("amax"), col("nrm"))
-    // mor = true: same contract as the float writer — `_seq` = 0 on
-    // built rows, tombstone-view serving, vector deletes append
-    // (vid, seq) rows instead of rewriting the quantized lists
-    val lists = (if (mor) assigned.withColumn("_seq", lit(0L))
-      else assigned)
-      .write.bucketBy(buckets, "cid").sortBy("cid").mode("overwrite")
-    location.fold(lists)(l => lists.option("path", s"$l/lists"))
-      .saveAsTable(table)
-    val cw = cents.toDF("cid", "ce").write.mode("overwrite")
-    location.fold(cw)(l => cw.option("path", s"$l/cents"))
-      .saveAsTable(table + "_centroids")
-    val vw = v.select(col("vid"), col("e"), col("nrm"))
-      .write.bucketBy(buckets, "vid").sortBy("vid").mode("overwrite")
-    location.fold(vw)(l => vw.option("path", s"$l/vecs"))
-      .saveAsTable(table + "_vecs")
-    // same lineage stamp as the float writer: lists + BOTH companions
-    // carry one build id (the _vecs floats are build-scoped too — a
-    // rebuild may re-embed or re-subset the corpus)
-    val build = BucketedStores.newBuildId()
-    Seq(table, table + "_centroids", table + "_vecs")
-      .foreach(BucketedStores.stampBuild(spark, _, build))
-    if (mor) {
-      BucketedStores.adoptVersioned(spark, table)
-      BucketedStores.morEnable(spark, table, Seq("vid"), "vid")
-    }
-  }
-
-  /** Probe a STORED IVF-SQ8 index ([[writeIvfSq8Index]]): top-1
-    * neighbor per query, bit-identical to [[ivfSq8Top1]] over the same
-    * corpus. The corpus-scale work is the cid-bucket-aligned scan of
-    * the INT8 lists (no index-side exchange); queries quantize in-row
-    * against the k-row companion; the integer dot is exact (bytes
-    * widen to long inside the fold); only the quantized top-`rerank`
-    * per query fetch float vectors from the vid-bucketed `_vecs`
-    * companion for the exact-cosine re-rank.
-    */
-  def probeIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      table: String, queriesDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, nprobe: Int, rerank: Int): DataFrame = {
-    // BOTH companions, matching the SQL surface's guard: a forced or
-    // stale `_vecs` pairing must fail on every serving surface, not
-    // just GRAFT_ANN
-    requireQuantizerLineage(spark, table, Seq("_centroids", "_vecs"))
-    val cents = spark.table(table + "_centroids")
-      .orderBy(col("cid")).collect() // bounded: k rows by contract
-      .map(r => r.getLong(0) -> r.getSeq[Double](1))
-    require(cents.nonEmpty && cents.length >= nprobe,
-      s"index $table has ${cents.length} centroids < nprobe $nprobe")
-    cents.foreach { case (cid, ce) =>
-      require(ce.length == dims,
-        s"stored centroid $cid has ${ce.length} dims, expected $dims")
-    }
-    val qproj = ivfProject(queriesDf, idCol, vecCol)
-    val (qprojC, centArr) = withCentroids(qproj, cents.toSeq)
-    val q = qprojC
-      .withColumn("amax", aggregate(col("e"), lit(0.0),
-        (a, x) => greatest(a, abs(x))))
-      .withColumn("qv", transform(col("e"), x =>
-        (signum(x) * least(lit(127.0),
-          floor(abs(x) * (lit(127.0) / col("amax")) + lit(0.5))))
-          .cast("byte")))
-      .select(col("vid").as("id_a"), col("qv").as("qa"),
-        col("amax").as("amax_a"), col("nrm").as("na"),
-        explode(transform(
-          slice(array_sort(transform(centArr, c => struct(
-            (-round(array_dot(col("e"), c.getField("ce"))
-              / (col("nrm") * c.getField("cn")), 6)).as("ns"),
-            c.getField("cid").as("cid")))), 1, nprobe),
-          s => s.getField("cid"))).as("cid"))
-    // ONE bounded driver job ([[probeRegime]]) decides both
-    // serving-batch regimes (list pruning and the candidate gather)
-    // AND collects the probed cid set — the limit bound keeps it a
-    // serving-batch-scale job even when queries = the corpus
-    val (nQueries, probed) = probeRegime(q, nprobe,
-      math.max(SimilarityOps.GatherMaxQueries,
-        SimilarityOps.GatherMaxIds / math.max(rerank, 1)),
-      base = Some(queriesDf))
-    val index = prunedLists(spark, table, probed, cents.length)
-      .select(col("cid"),
-        col("vid").as("id_b"), col("q").as("qb"),
-        col("amax").as("amax_b"), col("nrm").as("nb"))
-    // the scan kernel: native codegen'd int8 dot (exact, long-
-    // accumulated) — per candidate × per dim, a HOF zip_with/aggregate
-    // here measured ~11× slower than the float probe; the kernel keeps
-    // the quantized tier's CPU cost below the float tier's so the 4.5×
-    // scan-bandwidth win is never paid back in compute
-    val qscored = q.join(index, Seq("cid"))
-      .filter(col("id_a") =!= col("id_b"))
-      .withColumn("qscore", round(
-        graft.functions.VectorFunctions.array_dot_q8(col("qa"), col("qb"))
-          .cast("double")
-          / ((lit(127.0) / col("amax_a")) * (lit(127.0) / col("amax_b")))
-          / (col("na") * col("nb")), 6))
-    // rerank-survivor selection as a BOUNDED AGGREGATE, not a window:
-    // a row_number window shuffles and sorts the whole candidate set
-    // (O(n log n) and an n-row exchange — measured ~5 s of the probe
-    // at a 12M-candidate scale); topk_pairs streams candidates
-    // through k slots map-side and ships k pairs per query. Identical
-    // kept set — the (score DESC, id ASC) ordering embeds the window's
-    // tie-break.
-    val survivors = qscored
-      .groupBy(col("id_a"))
-      .agg(graft.functions.VectorFunctions
-        .topk_pairs(col("qscore"), col("id_b"), rerank).as("tk"))
-      .select(col("id_a"), explode(col("tk")).as("p"))
-      .select(col("id_a"), col("p.id").as("id_b"))
-    // query-side floats come from the QUERY relation itself (as the
-    // SQL sq8Expansion does via its graft_ann_qz re-join) — NOT from
-    // the index's `_vecs` companion keyed by id_a, which silently
-    // assumed queries ⊆ corpus: an external query table would inner-
-    // join to nothing (empty result) or, on an id collision, rerank
-    // against the wrong corpus vector. Only the CANDIDATE side (id_b
-    // is a corpus vid by construction) touches the companion, via the
-    // shared gather-by-id refine ([[gatherExactTop1]]).
-    val va = qproj.select(col("vid").as("id_a"), col("e").as("ea"),
-      col("nrm").as("na"))
-    gatherExactTop1(spark, table, survivors, va, nQueries, rerank)
-  }
-
-  /** Index MAINTENANCE for the stored IVF ([[writeIvfIndex]]): assign
-    * a vector delta to its nearest STORED centroid (the quantizer is
-    * frozen at build time — the standard IVF append contract; lists
-    * drift only until the next rebuild) and append the rows through
-    * the same `cid` bucket layout, so the next [[probeIvfIndex]] batch
-    * sees them. Old files stay immutable; work is delta-scale only —
-    * the corpus lists are never read, let alone rewritten. `batchId`
-    * gives at-least-once writers the ledger-guarded replay no-op
-    * (see [[BucketedStores.recordAppliedBatch]]).
-    */
-  /** The plain-store contract shared by the delta-append helpers: a
-    * VERSIONED/MoR serving name resolves to a VIEW, and appending to
-    * a view either fails opaquely or, worse, lands rows without the
-    * `_seq` stamp the tombstone rule needs — refuse loudly with the
-    * right verb instead.
-    */
-  private def requirePlainStore(spark: org.apache.spark.sql.SparkSession,
-      table: String, helper: String): Unit = {
-    // a RETAINED GENERATION (`name__v<N>`) is a plain table whose
-    // build stamp matches its own snapshotted companions, so the
-    // view/lineage guards alone would admit it — but time travel
-    // assumes generations are immutable history; appending would
-    // silently rewrite what `VERSION AS OF` readers see
-    require("(.+)__v\\d+$".r.findFirstMatchIn(table).isEmpty,
-      s"$table is a retained index GENERATION — $helper refuses to " +
-        "mutate time-travel history. Append to the serving name's " +
-        "plain store (or via BucketedStores.morAppend for a " +
-        "merge-on-read store); retained generations stay immutable.")
-    val isView = scala.util.Try(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst
-        .TableIdentifier(table)).tableType ==
-      org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-      .getOrElse(false)
-    require(!isView,
-      s"$table is a versioned serving VIEW — $helper appends to plain " +
-        "stores only. For a merge-on-read store, stamp the delta with " +
-        "its batch _seq and use BucketedStores.morAppend (deletes go " +
-        "through morDelete); for a copy-on-write versioned store, use " +
-        "BucketedStores.applyDeltaAtomic.")
-  }
-
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaVecs: DataFrame, idCol: String, vecCol: String,
-      dims: Int, buckets: Int = 8,
-      batchId: Option[Long] = None): Unit = {
-    requirePlainStore(spark, table, "appendToIvfIndex")
-    requireQuantizerLineage(spark, table)
-    if (!batchId.exists(
-        BucketedStores.appliedBatchSeq(spark, table, _).isDefined)) {
-      val cents = spark.table(table + "_centroids")
-        .orderBy(col("cid")).collect() // bounded: k rows by contract
-        .map(r => r.getLong(0) -> r.getSeq[Double](1))
-      require(cents.nonEmpty, s"index $table has no centroids")
-      cents.foreach { case (cid, ce) =>
-        require(ce.length == dims,
-          s"stored centroid $cid has ${ce.length} dims, expected $dims")
-      }
-      val (dc, centArr) = withCentroids(
-        ivfProject(deltaVecs, idCol, vecCol), cents.toSeq)
-      dc
-        .select(
-          nearestCid(centArr).as("cid"),
-          col("vid"), col("e"), col("nrm"))
-        .write.bucketBy(buckets, "cid").sortBy("cid")
-        .mode("append").saveAsTable(table)
-      batchId.foreach(
-        BucketedStores.recordAppliedBatch(spark, table, _, 0L))
-    }
   }
 
   /** [[ivfTop1]] with a TRAINED coarse quantizer: `trainIters` Lloyd
@@ -1115,16 +493,75 @@ object SimilarityOps {
   def ivfTop1Trained(vecsDf: DataFrame, idCol: String, vecCol: String,
       dims: Int, k: Int = 16, nprobe: Int = 2, trainIters: Int = 2,
       maxList: Int = 0): DataFrame =
-    ivfCandidates(vecsDf, idCol, vecCol, dims, k, nprobe, maxList,
-      trainIters)
-      .select(col("id_a"),
-        struct(col("score"), (-col("id_b")).as("neg_id")).as("cand"))
-      .groupBy(col("id_a"))
-      .agg(max(col("cand")).as("best"))
-      .select(col("id_a"), (-col("best.neg_id")).as("ann_id"),
-        col("best.score").as("score"))
+    top1(ivfCandidates(vecsDf, idCol, vecCol, dims, k, nprobe, maxList,
+      trainIters))
 
-  // ---- Stored PQ tier: the 16-64x compression rung above SQ8 --------
+  /** SQ8's per-row encode over (e, nrm): `amax` (symmetric absmax
+    * scale) and `q` = the codegen'd `int8_quantize` kernel,
+    * q_i = sign(x_i)·min(127, ⌊|x_i|·127/amax + ½⌋) — exact-integer
+    * reproducible from the doubles, so the oracle re-derives it.
+    * Per-row and self-contained: no trained state.
+    */
+  private[operators] def sq8Encode(df: DataFrame): DataFrame =
+    df.withColumn("amax", aggregate(col("e"), lit(0.0),
+        (a, x) => greatest(a, abs(x))))
+      .withColumn("q", int8_quantize(col("e"), col("amax")))
+
+  /** The candidate score of a (query `_a`, list `_b`) pair under each
+    * list codec, as `score` (higher is better): exact cosine for Flat;
+    * the exact INTEGER dot rescaled by both absmax scales for Sq8
+    * (native `array_dot_q8` — a HOF here measured ~11× slower than
+    * the float probe); the negated asymmetric distance for Pq
+    * (codegen'd `pq_adc` lookup sum over the query's `qtab`, unsigned
+    * code decode built in, bit-equal to a DECIMAL(20,6) sum).
+    */
+  private[operators] def listScore(codec: ListCodec): Column = codec match {
+    case ListCodec.Flat => cos6("e_a", "nrm_a", "e_b", "nrm_b")
+    case ListCodec.Sq8 =>
+      round(array_dot_q8(col("q_a"), col("q_b")).cast("double")
+        / ((lit(127.0) / col("amax_a")) * (lit(127.0) / col("amax_b")))
+        / (col("nrm_a") * col("nrm_b")), 6).as("score")
+    case _: ListCodec.Pq =>
+      (-pq_adc(col("codes_b"), col("qtab_a"))).as("score")
+  }
+
+  /** IVF-SQ8 — the bandwidth-optimized IVF the big ANN libraries run in
+    * production: [[ivfTop1]]'s quantizer, assignment and probe rule,
+    * but WHAT flows through the big cid-keyed join is the
+    * [[sq8Encode]] payload (id, int8[dims], amax, nrm) instead of
+    * (id, double[dims], nrm); candidates score by the exact integer
+    * dot ([[listScore]]), the quantized top-`rerank` per query
+    * survive, and only those fetch their floats back (two
+    * candidate-scale id joins) for the exact-cosine re-rank. One scan:
+    * quantization + centroid ranking persist scoped, and the index
+    * branch, the probe branch and both rerank fetches read the cache.
+    */
+  def ivfSq8Top1(vecsDf: DataFrame, idCol: String, vecCol: String,
+      dims: Int, k: Int, nprobe: Int, rerank: Int): DataFrame = {
+    val v = ivfProject(vecsDf, idCol, vecCol)
+    val cents = firstKCentroids(v, k, dims)
+    val ranked = org.apache.spark.sql.graft.ScopedCaches.scoped(
+      sq8Encode(v).withColumn("probe_cids",
+        probeCids(centroidLiteral(cents), nprobe)))
+    val index = ranked.select(
+      element_at(col("probe_cids"), 1).as("cid"),
+      col("vid").as("id_b"), col("q").as("q_b"),
+      col("amax").as("amax_b"), col("nrm").as("nrm_b"))
+    val queries = ranked.select(col("vid").as("id_a"), col("q").as("q_a"),
+      col("amax").as("amax_a"), col("nrm").as("nrm_a"),
+      explode(col("probe_cids")).as("cid"))
+    val kept = survivors(queries.join(index, Seq("cid"))
+      .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b"), listScore(ListCodec.Sq8)), rerank)
+    val va = ranked.select(col("vid").as("id_a"), col("e").as("ea"),
+      col("nrm").as("na"))
+    val vb = ranked.select(col("vid").as("id_b"), col("e").as("eb"),
+      col("nrm").as("nb"))
+    top1(kept.join(va, Seq("id_a")).join(vb, Seq("id_b"))
+      .select(col("id_a"), col("id_b"), cos6("ea", "na", "eb", "nb")))
+  }
+
+  // ---- PQ quantizer: the 16-64x compression rung above SQ8 ----------
 
   /** PQ codebooks with the deterministic "first-codes" training
     * discipline ([[firstKCentroids]]'s PQ edition, sim9's rule made
@@ -1135,7 +572,7 @@ object SimilarityOps {
     * driver/broadcast-resident by contract, like every tier's.
     * Returns flat (j, c, ce) rows.
     */
-  private def pqCodebooks(v: DataFrame, dims: Int, m: Int,
+  private[operators] def pqCodebooks(v: DataFrame, dims: Int, m: Int,
       codes: Int): Seq[(Int, Int, Seq[Double])] = {
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     // one byte per subspace holds 256 distinct ids; ids 128-255 store
@@ -1154,21 +591,17 @@ object SimilarityOps {
     } yield (j, c, e.slice(j * sub, (j + 1) * sub))
   }
 
-  /** The PQ codebooks as a (DataFrame, Column) pair — same
-    * representation switch as [[withCentroids]]: a plan literal up to
-    * 256 codewords total, else a one-row broadcast (sorted nested
-    * arrays, so code id == position everywhere). Column shape:
-    * array<struct<j, cs: array<struct<c, ce>>>>, outer by j ASC,
-    * inner by c ASC.
+  /** Per-query ADC distance table over `e`: t[j][c] =
+    * round(squared L2(subvector j, codeword c), 6) — sim9's exact
+    * left-to-right fold, so every engine replays it. The codebooks
+    * ride as ONE plan literal ([[centroidLiteral]]'s rationale) of
+    * shape array<struct<j, cs: array<struct<c, ce>>>>, outer by j,
+    * inner by c, so code id == position.
     */
-  /** The PQ codebooks as ONE plan node — [[centroidLiteral]]'s
-    * rationale, applied to the nested array<struct<j, cs>> shape
-    * (the r20 code paid an expression tree up to 256 codes and a
-    * broadcast cross join past it).
-    */
-  private def withCodebooks(df: DataFrame,
-      cb: Seq[(Int, Int, Seq[Double])]): (DataFrame, Column) = {
+  private[operators] def adcTable(
+      cb: Seq[(Int, Int, Seq[Double])]): Column = {
     import org.apache.spark.sql.types._
+    val sub = cb.head._3.length
     val rows = cb.groupBy(_._1).toSeq.sortBy(_._1).map { case (j, rs) =>
       org.apache.spark.sql.Row(j,
         rs.sortBy(_._2).map { case (_, c, ce) =>
@@ -1179,22 +612,18 @@ object SimilarityOps {
       StructField("c", IntegerType, nullable = false),
       StructField("ce", ArrayType(DoubleType, containsNull = false),
         nullable = false))), containsNull = false)
-    val cbkCol = org.apache.spark.sql.graft.GraftExpressionBridge.column(
+    val cbArr = org.apache.spark.sql.graft.GraftExpressionBridge.column(
       org.apache.spark.sql.catalyst.expressions.Literal.create(rows,
         ArrayType(StructType(Seq(
           StructField("j", IntegerType, nullable = false),
           StructField("cs", csType, nullable = false))),
           containsNull = false)))
-    (df, cbkCol)
+    transform(cbArr, y => transform(y.getField("cs"), x =>
+      round(aggregate(zip_with(
+        slice(col("e"), y.getField("j") * lit(sub) + lit(1), lit(sub)),
+        x.getField("ce"), (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, d) => acc + d), 6)))
   }
-
-  /** Squared L2 distance between two array<double> columns (sim9's
-    * exact 6-dp-rounded formulation — left-to-right fold, so every
-    * engine replays it).
-    */
-  private def dist2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Per-row PQ encoding over the `e` column: code j = argmin over
     * subspace j's codewords of round(dist2, 6), ties to the smaller
@@ -1208,7 +637,7 @@ object SimilarityOps {
     * the id on every serving surface — so a gappy companion fails
     * loudly here instead of mis-encoding.
     */
-  private def pqEncode(cb: Seq[(Int, Int, Seq[Double])]): Column = {
+  private[operators] def pqEncode(cb: Seq[(Int, Int, Seq[Double])]): Column = {
     val byJ = cb.groupBy(_._1).toSeq.sortBy(_._1)
     byJ.zipWithIndex.foreach { case ((j, rows), pos) =>
       require(j == pos && rows.map(_._2).sorted == rows.indices,
@@ -1221,515 +650,5 @@ object SimilarityOps {
       org.apache.spark.sql.graft.PqEncode(
         org.apache.spark.sql.graft.GraftExpressionBridge
           .expression(col("e")), arr))
-  }
-
-  /** Materialize a PRODUCT-QUANTIZED index as durable storage — the
-    * compression rung above SQ8 (reference point: faiss PQx). The
-    * main table carries ONE BYTE PER SUBSPACE per vector (m bytes
-    * against the float row's 8·dims — 64x at m=8, dims=64), so the
-    * asymmetric-distance scan reads a fraction of even the INT8
-    * lists' bytes; `_codebooks` holds the m×codes codewords (flat
-    * (j, c, ce) rows, bounded); `_vecs` is the float companion only
-    * the top-`rerank` candidates fetch for the exact-cosine re-rank.
-    * All three stamped with one build id ([[BucketedStores
-    * .stampBuild]]); `mor = true` adopts versioned + merge-on-read
-    * serving exactly like the other tiers (codes are self-contained
-    * per row — deletes and compactions never touch the quantizer).
-    * Encoding is sim9's exact rule (argmin of 6-dp-rounded subspace
-    * L2, ties to the smaller code), so a stored probe is
-    * oracle-replicable.
-    */
-  def writePqIndex(vecsDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, m: Int, codes: Int, table: String, buckets: Int = 8,
-      location: Option[String] = None, mor: Boolean = false): Unit = {
-    val spark = vecsDf.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_codebooks")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_vecs")
-    BucketedStores.dropReplayLedger(spark, table)
-    val v = ivfProject(vecsDf, idCol, vecCol)
-    val cb = pqCodebooks(v, dims, m, codes)
-    val sub = dims / m
-    val encoded = v.select(col("vid"), pqEncode(cb).as("codes"))
-    val lists = (if (mor) encoded.withColumn("_seq", lit(0L))
-      else encoded)
-      .write.bucketBy(buckets, "vid").sortBy("vid").mode("overwrite")
-    location.fold(lists)(l => lists.option("path", s"$l/codes"))
-      .saveAsTable(table)
-    locally {
-      import spark.implicits._
-      val cw = cb.toDF("j", "c", "ce").write.mode("overwrite")
-      location.fold(cw)(l => cw.option("path", s"$l/cbk"))
-        .saveAsTable(table + "_codebooks")
-    }
-    val vw = v.select(col("vid"), col("e"), col("nrm"))
-      .write.bucketBy(buckets, "vid").sortBy("vid").mode("overwrite")
-    location.fold(vw)(l => vw.option("path", s"$l/vecs"))
-      .saveAsTable(table + "_vecs")
-    val build = BucketedStores.newBuildId()
-    Seq(table, table + "_codebooks", table + "_vecs")
-      .foreach(BucketedStores.stampBuild(spark, _, build))
-    // the subspace geometry rides as table properties so the SQL
-    // surface (GRAFT_ANN's PQ dispatch) can expand without being
-    // handed dims/m again
-    spark.sql(s"ALTER TABLE ${table}_codebooks SET TBLPROPERTIES " +
-      s"('graft.pq.sub' = '$sub', 'graft.pq.m' = '$m')")
-    if (mor) {
-      BucketedStores.adoptVersioned(spark, table)
-      BucketedStores.morEnable(spark, table, Seq("vid"), "vid")
-    }
-  }
-
-  /** Probe a stored PQ index ([[writePqIndex]]): top-1 neighbor per
-    * query by ASYMMETRIC DISTANCE (per query, one m×codes distance
-    * table computed in-row against the codebooks; each corpus row
-    * costs m table lookups — no per-pair float math), quantized
-    * top-`rerank` survive ([[org.apache.spark.sql.graft.TopKPairs]],
-    * never a candidate window), and only those fetch floats from
-    * `_vecs` (gather-by-id at candidate scale for bounded batches)
-    * for the exact-cosine re-rank. The corpus-scale scan is the
-    * m-byte code rows; the bounded query batch broadcasts WITH its
-    * distance tables, so the code table never shuffles. ADC sums run
-    * through the codegen'd [[org.apache.spark.sql.graft
-    * .PqAdcDistance]] kernel — exact long micro-unit accumulation of
-    * the 6-dp entries, bit-equal to a DECIMAL(20,6) sum and
-    * bit-deterministic under any partition order. Query-side floats
-    * come from the query relation (external query tables work — the
-    * SQ8 lesson).
-    */
-  def probePqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, queriesDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, rerank: Int): DataFrame = {
-    // lineage: lists / codebooks / floats must carry one build id
-    requireQuantizerLineage(spark, table, Seq("_codebooks", "_vecs"))
-    val cbRows = spark.table(table + "_codebooks")
-      .orderBy(col("j"), col("c")).collect() // bounded: m×codes rows
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-    require(cbRows.nonEmpty, s"$table has no _codebooks companion")
-    val m = cbRows.map(_._1).distinct.length
-    val sub = dims / m
-    cbRows.foreach { case (j, c, ce) =>
-      require(ce.length == sub,
-        s"codebook ($j,$c) has ${ce.length} dims, expected $sub")
-    }
-    val qproj = ivfProject(queriesDf, idCol, vecCol)
-    val (qc, cbArr) = withCodebooks(qproj, cbRows.toSeq)
-    // per-query distance tables: t[j][c] = round(dist2(qsub_j, ce), 6)
-    val q = qc.select(col("vid").as("id_a"), col("nrm").as("na"),
-      transform(cbArr, y => transform(y.getField("cs"), x =>
-        round(dist2(slice(col("e"),
-          y.getField("j") * lit(sub) + lit(1), lit(sub)),
-          x.getField("ce")), 6))).as("qtab"))
-    // gather-regime count: parquet footers first (jobless, exact under
-    // the cap — see [[RelationRowBound]]), the bounded count job only
-    // when the plan shape is not provable
-    val gatherCap = math.max(GatherMaxQueries,
-      GatherMaxIds / math.max(rerank, 1))
-    val nQueries = RelationRowBound.boundedCount(queriesDf, gatherCap)
-      .getOrElse(scala.util.Try(
-        queriesDf.limit((gatherCap + 1).toInt).count())
-        .getOrElse(Long.MaxValue))
-    // the scan kernel: codegen'd ADC lookup sum ([[org.apache.spark
-    // .sql.graft.PqAdcDistance]]) — unsigned code decode built in,
-    // bit-equal to the DECIMAL-routed HOF sum it replaced (6-dp
-    // entries recover exactly in long micro-units), and ~free of the
-    // per-subspace closure dispatch + BigDecimal ops on the hottest
-    // loop of the tier
-    val adc = graft.functions.VectorFunctions
-      .pq_adc(col("codes"), col("qtab"))
-    val scored = spark.table(table)
-      .select(col("vid").as("id_b"), col("codes"))
-      .crossJoin(broadcast(q))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"), adc.as("adcd"))
-    // ADC is a DISTANCE: smaller is better, ties to the smaller id —
-    // negate for topk_pairs' (score DESC, id ASC) order
-    val survivors = scored
-      .groupBy(col("id_a"))
-      .agg(graft.functions.VectorFunctions
-        .topk_pairs(-col("adcd"), col("id_b"), rerank).as("tk"))
-      .select(col("id_a"), explode(col("tk")).as("p"))
-      .select(col("id_a"), col("p.id").as("id_b"))
-    val va = qproj.select(col("vid").as("id_a"), col("e").as("ea"),
-      col("nrm").as("na"))
-    gatherExactTop1(spark, table, survivors, va, nQueries, rerank)
-  }
-
-  // ---- IVF-PQ: coarse lists OVER the PQ codes ----------------------
-  //
-  // The flat PQ store ([[writePqIndex]]) reads few BYTES (m per
-  // vector) but scores EVERY corpus row per serving batch — candidate
-  // work grows ∝ n, the exact CPU cliff the fixed-k SQ8 measurement
-  // exposed (BENCH_SCALE.md Act 1: linear candidates went 1.56 s →
-  // 25.1 s over 64×→4096× before probed-list pruning). IVF-PQ is the
-  // standard composition (Jégou et al.'s IVFADC; faiss IndexIVFPQ):
-  // the SAME first-k coarse quantizer as every IVF tier partitions the
-  // code rows into cid-bucketed inverted lists, a query ADC-scores
-  // only its nprobe probed lists, and per-query work drops to
-  // nprobe·n/k — with k ~ √n, ~flat in corpus size like the float and
-  // SQ8 tiers (and the scan bytes stay m per CANDIDATE, compounding
-  // with the pruning).
-  //
-  // Codes encode the RAW vector, not the residual (faiss's
-  // `by_residual=false` IVFPQ variant): the encode rule stays
-  // [[pqEncode]] verbatim — byte-exact replicable by the oracle, and
-  // independent of the coarse assignment, so deletes, appends, and
-  // compactions never touch EITHER quantizer and a row's code is
-  // valid in any list. (Residual encoding buys recall at the cost of
-  // coupling codes to centroids; the exact-cosine rerank already
-  // recovers the recall here.)
-
-  /** Materialize an IVF-PQ index as durable storage: cid-bucketed
-    * inverted lists of (cid, vid, codes) rows — m bytes/vector
-    * payload behind the same coarse layout as [[writeIvfSq8Index]] —
-    * plus THREE companions: `_centroids` (the k-row coarse quantizer,
-    * [[firstKCentroids]]), `_codebooks` (the m×codes PQ codewords,
-    * [[pqCodebooks]], with the subspace geometry as table
-    * properties), and `_vecs` (the float rerank companion,
-    * vid-bucketed). All four carry ONE build stamp; `mor = true`
-    * adopts versioned + merge-on-read serving exactly like the other
-    * tiers.
-    *
-    * `trainIters > 0` runs that many Lloyd refinements of the first-k
-    * seeding ([[trainCentroids]] — sim6's trainer) before indexing:
-    * on CLUSTERED data the deterministic first-k quantizer centers
-    * its lists wherever the low vids happen to sit, so list sizes
-    * skew and nprobe·n/k degrades toward the hot list's size; trained
-    * centroids even the lists out (skew measured in AnnRecallSpec).
-    * Everything downstream is identical — the centroids companion
-    * just holds different rows, probes and maintenance never know
-    * (PQ codes encode the raw vector, so they are valid under either
-    * quantizer; Lloyd dropout may shrink k, determinism holds).
-    */
-  def writeIvfPqIndex(vecsDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, m: Int, codes: Int, k: Int, table: String,
-      buckets: Int = 8, location: Option[String] = None,
-      mor: Boolean = false, trainIters: Int = 0): Unit = {
-    val spark = vecsDf.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_centroids")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_codebooks")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_vecs")
-    BucketedStores.dropReplayLedger(spark, table)
-    val v = ivfProject(vecsDf, idCol, vecCol)
-    val cents =
-      if (trainIters == 0) firstKCentroids(v, k, dims)
-      else trainCentroids(vecsDf, idCol, vecCol, dims, k, trainIters)
-    val cb = pqCodebooks(v, dims, m, codes)
-    val sub = dims / m
-    // both quantizers ride the same projection: the coarse centroids
-    // pick the list, the kernel encodes the payload — one scan
-    val (vc, centArr) = withCentroids(v, cents)
-    val assigned = vc.select(
-      nearestCid(centArr).as("cid"),
-      col("vid"), pqEncode(cb).as("codes"))
-    val lists = (if (mor) assigned.withColumn("_seq", lit(0L))
-      else assigned)
-      .write.bucketBy(buckets, "cid").sortBy("cid").mode("overwrite")
-    location.fold(lists)(l => lists.option("path", s"$l/lists"))
-      .saveAsTable(table)
-    locally {
-      import spark.implicits._
-      val cw = cents.toDF("cid", "ce").write.mode("overwrite")
-      location.fold(cw)(l => cw.option("path", s"$l/cents"))
-        .saveAsTable(table + "_centroids")
-      val bw = cb.toDF("j", "c", "ce").write.mode("overwrite")
-      location.fold(bw)(l => bw.option("path", s"$l/cbk"))
-        .saveAsTable(table + "_codebooks")
-    }
-    val vw = v.select(col("vid"), col("e"), col("nrm"))
-      .write.bucketBy(buckets, "vid").sortBy("vid").mode("overwrite")
-    location.fold(vw)(l => vw.option("path", s"$l/vecs"))
-      .saveAsTable(table + "_vecs")
-    val build = BucketedStores.newBuildId()
-    Seq(table, table + "_centroids", table + "_codebooks",
-      table + "_vecs")
-      .foreach(BucketedStores.stampBuild(spark, _, build))
-    spark.sql(s"ALTER TABLE ${table}_codebooks SET TBLPROPERTIES " +
-      s"('graft.pq.sub' = '$sub', 'graft.pq.m' = '$m')")
-    if (mor) {
-      BucketedStores.adoptVersioned(spark, table)
-      BucketedStores.morEnable(spark, table, Seq("vid"), "vid")
-    }
-  }
-
-  /** Index MAINTENANCE for the stored IVF-PQ ([[writeIvfPqIndex]]):
-    * assign a vector delta to its nearest STORED centroid and encode
-    * it against the STORED codebooks — both quantizers frozen at
-    * build time, the standard append contract — then append through
-    * the same cid bucket layout AND into the `_vecs` float companion
-    * (the exact-cosine refine must be able to fetch appended vectors,
-    * or they could win the ADC cut and then vanish at the rerank
-    * join). Old files stay immutable; work is delta-scale only. Build
-    * stamps ride table properties, so appends preserve lineage.
-    * `batchId` gives at-least-once writers (streamed ingestion's
-    * `foreachBatch`) the ledger-guarded replay no-op — plain tables
-    * have no tombstone mechanics to subtract a duplicated batch, so
-    * prevention at the write is the only correct place.
-    */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaVecs: DataFrame, idCol: String, vecCol: String,
-      dims: Int, buckets: Int = 8,
-      batchId: Option[Long] = None): Unit = {
-    requirePlainStore(spark, table, "appendToIvfPqIndex")
-    if (!batchId.exists(
-        BucketedStores.appliedBatchSeq(spark, table, _).isDefined)) {
-      val enc = encodeForIvfPq(spark, table, deltaVecs, idCol, vecCol,
-        dims)
-      // WRITE ORDER IS THE CRASH CONTRACT: the float companion lands
-      // FIRST, the code lists second. A failure between the two writes
-      // then leaves float rows no code row references — harmless dead
-      // data the next compaction can drop — instead of committed codes
-      // whose vids have no rerank floats, which would win the ADC cut
-      // and silently vanish at the refine inner join.
-      ivfProject(deltaVecs, idCol, vecCol)
-        .select(col("vid"), col("e"), col("nrm"))
-        .write.bucketBy(buckets, "vid").sortBy("vid")
-        .mode("append").saveAsTable(table + "_vecs")
-      enc
-        .write.bucketBy(buckets, "cid").sortBy("cid")
-        .mode("append").saveAsTable(table)
-      batchId.foreach(
-        BucketedStores.recordAppliedBatch(spark, table, _, 0L))
-    }
-  }
-
-  /** Encode a vector delta under a stored IVF-PQ index's FROZEN
-    * quantizers — the delta-ADD half of merge-on-read maintenance on
-    * the quantized tiers, which previously required caller-encoded
-    * rows. Exactly [[appendToIvfPqIndex]]'s head, factored out:
-    * nearest STORED centroid picks the list, the STORED codebooks
-    * encode the payload ([[pqEncode]]'s 6-dp argmin rule — raw-vector
-    * codes, so the rows are valid in any list and no quantizer is
-    * touched). Returns lazy (cid, vid, codes) rows shaped for
-    * [[BucketedStores.morAppend]]; quantizer lineage is checked
-    * eagerly (the two bounded collects), so a rebuilt-out-from-under
-    * store fails here, before anything is written.
-    */
-  def encodeForIvfPq(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaVecs: DataFrame, idCol: String,
-      vecCol: String, dims: Int): DataFrame = {
-    requireQuantizerLineage(spark, table,
-      Seq("_centroids", "_codebooks", "_vecs"))
-    val cents = spark.table(table + "_centroids")
-      .orderBy(col("cid")).collect() // bounded: k rows by contract
-      .map(r => r.getLong(0) -> r.getSeq[Double](1))
-    require(cents.nonEmpty, s"index $table has no centroids")
-    cents.foreach { case (cid, ce) =>
-      require(ce.length == dims,
-        s"stored centroid $cid has ${ce.length} dims, expected $dims")
-    }
-    val cbRows = spark.table(table + "_codebooks")
-      .orderBy(col("j"), col("c")).collect() // bounded: m×codes rows
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-    require(cbRows.nonEmpty, s"$table has no _codebooks companion")
-    val v = ivfProject(deltaVecs, idCol, vecCol)
-    val (vc, centArr) = withCentroids(v, cents.toSeq)
-    vc.select(
-      nearestCid(centArr).as("cid"),
-      col("vid"), pqEncode(cbRows.toSeq).as("codes"))
-  }
-
-  /** The complete delta-ADD lifecycle for a MERGE-ON-READ IVF-PQ
-    * store: encode the delta under the frozen quantizers
-    * ([[encodeForIvfPq]]), land the float rerank rows in the `_vecs`
-    * companion FIRST (same crash contract as [[appendToIvfPqIndex]] —
-    * floats without codes are harmless dead data; codes without
-    * floats silently vanish at the refine join), then `morAppend` the
-    * code rows stamped with the next batch sequence. The serving view
-    * and every probe/SQL surface see the appended vectors on their
-    * next resolution; tombstone semantics are untouched (appended
-    * rows are alive — no tombstone can yet carry a higher seq).
-    * Returns the stamped sequence. (Time-travel caveat: the seq clock
-    * is tombstone-driven, so consecutive appends with no intervening
-    * delete share a sequence — `readMorAsOfSeq(seq - 1)` rolls back
-    * past ALL appends since the last tombstone batch, not just this
-    * one.)
-    *
-    * At-least-once writers (Structured Streaming `foreachBatch`
-    * redelivers a crashed batch under the SAME batchId) should pass
-    * that id as `batchId`: a replay of an already-landed batch is then
-    * a no-op returning the recorded seq, instead of duplicate rows the
-    * tombstone-anti-join serving view cannot subtract (visible as
-    * duplicate ranks at k > 1). See [[BucketedStores.recordAppliedBatch]]
-    * for the marker-last crash contract and its remaining window.
-    */
-  def morAppendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaVecs: DataFrame, idCol: String,
-      vecCol: String, dims: Int, buckets: Int = 8,
-      batchId: Option[Long] = None): Long =
-    batchId.flatMap(BucketedStores.appliedBatchSeq(spark, table, _))
-      .getOrElse {
-        // eager lineage check + lazy encode, BEFORE any write lands
-        val enc = encodeForIvfPq(spark, table, deltaVecs, idCol,
-          vecCol, dims)
-        ivfProject(deltaVecs, idCol, vecCol)
-          .select(col("vid"), col("e"), col("nrm"))
-          .write.bucketBy(buckets, "vid").sortBy("vid")
-          .mode("append").saveAsTable(table + "_vecs")
-        val seq = BucketedStores.morNextSeq(spark, table)
-        BucketedStores.morAppend(spark, table, enc, seq,
-          Seq("cid"), Seq("cid"), buckets)
-        batchId.foreach(
-          BucketedStores.recordAppliedBatch(spark, table, _, seq))
-        seq
-      }
-
-  /** [[encodeForIvfPq]]'s SQ8 sibling: encode a vector delta under a
-    * stored IVF-SQ8 index's FROZEN coarse quantizer — nearest stored
-    * centroid picks the list, the symmetric-absmax int8 quantization
-    * is per-row (self-contained, no trained state), so rows are valid
-    * under any maintenance. Lazy (cid, vid, q, amax, nrm) rows shaped
-    * for [[BucketedStores.morAppend]]; lineage checked eagerly.
-    */
-  def encodeForIvfSq8(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaVecs: DataFrame, idCol: String,
-      vecCol: String, dims: Int): DataFrame = {
-    requireQuantizerLineage(spark, table, Seq("_centroids", "_vecs"))
-    val cents = spark.table(table + "_centroids")
-      .orderBy(col("cid")).collect() // bounded: k rows by contract
-      .map(r => r.getLong(0) -> r.getSeq[Double](1))
-    require(cents.nonEmpty, s"index $table has no centroids")
-    cents.foreach { case (cid, ce) =>
-      require(ce.length == dims,
-        s"stored centroid $cid has ${ce.length} dims, expected $dims")
-    }
-    val v = ivfProject(deltaVecs, idCol, vecCol)
-    val (vc, centArr) = withCentroids(v, cents.toSeq)
-    vc
-      .withColumn("amax", aggregate(col("e"), lit(0.0),
-        (a, x) => greatest(a, abs(x))))
-      .withColumn("q", transform(col("e"), x =>
-        (signum(x) * least(lit(127.0),
-          floor(abs(x) * (lit(127.0) / col("amax")) + lit(0.5))))
-          .cast("byte")))
-      .select(nearestCid(centArr).as("cid"),
-        col("vid"), col("q"), col("amax"), col("nrm"))
-  }
-
-  /** The delta-ADD lifecycle for a MERGE-ON-READ IVF-SQ8 store —
-    * [[morAppendToIvfPqIndex]]'s contract on the second quantized
-    * tier: floats land in `_vecs` FIRST (crash contract: dead floats
-    * are harmless, codes without rerank floats silently lose their
-    * winners), then the `_seq`-stamped int8 rows append bucket-
-    * aligned. Returns the stamped sequence; `batchId` gives
-    * at-least-once writers the same replay no-op as the IVF-PQ helper.
-    */
-  def morAppendToIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaVecs: DataFrame, idCol: String,
-      vecCol: String, dims: Int, buckets: Int = 8,
-      batchId: Option[Long] = None): Long =
-    batchId.flatMap(BucketedStores.appliedBatchSeq(spark, table, _))
-      .getOrElse {
-        val enc = encodeForIvfSq8(spark, table, deltaVecs, idCol,
-          vecCol, dims)
-        ivfProject(deltaVecs, idCol, vecCol)
-          .select(col("vid"), col("e"), col("nrm"))
-          .write.bucketBy(buckets, "vid").sortBy("vid")
-          .mode("append").saveAsTable(table + "_vecs")
-        val seq = BucketedStores.morNextSeq(spark, table)
-        BucketedStores.morAppend(spark, table, enc, seq,
-          Seq("cid"), Seq("cid"), buckets)
-        batchId.foreach(
-          BucketedStores.recordAppliedBatch(spark, table, _, seq))
-        seq
-      }
-
-  /** Probe a stored IVF-PQ index ([[writeIvfPqIndex]]): the query
-    * ranks the k coarse centroids in-row ((cosine DESC, cid) at 6 dp
-    * — every IVF tier's probe rule), ADC-scores ONLY its `nprobe`
-    * probed lists (per-query distance tables computed in-row; m
-    * byte-table lookups per candidate, DECIMAL-routed so the ranking
-    * is bit-deterministic), the quantized top-`rerank` survive
-    * ([[org.apache.spark.sql.graft.TopKPairs]]), and only those fetch
-    * floats from `_vecs` for the exact-cosine re-rank. Per-query
-    * candidate work is nprobe·n/k (vs the flat PQ scan's n), the scan
-    * bytes are m per candidate, and [[probeRegime]]'s single bounded
-    * job drives both the probed-list In-filter and the
-    * candidate-gather refine — the full IVF scale shape on the
-    * highest-compression tier.
-    */
-  def probeIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, queriesDf: DataFrame, idCol: String, vecCol: String,
-      dims: Int, nprobe: Int, rerank: Int): DataFrame = {
-    requireQuantizerLineage(spark, table,
-      Seq("_centroids", "_codebooks", "_vecs"))
-    // BOTH quantizer companions in ONE driver job (a tagged union of
-    // the two bounded reads): each driver job carries ~0.3 s of fixed
-    // scheduling — the bulk of a quantized probe's serving overhead
-    // (BENCH_SCALE.md Act 2) — so the IVF-PQ probe runs THREE jobs
-    // before the caller's action (quantizer fetch, probeRegime,
-    // survivor gather), not four. Three is the floor for the gather
-    // regime: each later job's PLAN consumes the prior job's RESULT
-    // (quantizers → in-row probe ranking → probed-cid In-filter →
-    // survivor-vid In-filter), so any further fusion would forfeit a
-    // pushdown the shape depends on.
-    val qrows = spark.table(table + "_centroids")
-      .select(lit(0).as("t"), col("cid").cast("long").as("a"),
-        lit(0L).as("b"), col("ce"))
-      .unionByName(spark.table(table + "_codebooks")
-        .select(lit(1).as("t"), col("j").cast("long").as("a"),
-          col("c").cast("long").as("b"), col("ce")))
-      .collect() // bounded: k + m×codes rows by contract
-    val cents = qrows.filter(_.getInt(0) == 0)
-      .map(r => r.getLong(1) -> r.getSeq[Double](3))
-      .sortBy(_._1).toSeq
-    require(cents.nonEmpty && cents.length >= nprobe,
-      s"index $table has ${cents.length} centroids < nprobe $nprobe")
-    cents.foreach { case (cid, ce) =>
-      require(ce.length == dims,
-        s"stored centroid $cid has ${ce.length} dims, expected $dims")
-    }
-    val cbRows = qrows.filter(_.getInt(0) == 1)
-      .map(r => (r.getLong(1).toInt, r.getLong(2).toInt,
-        r.getSeq[Double](3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    require(cbRows.nonEmpty, s"$table has no _codebooks companion")
-    val m = cbRows.map(_._1).distinct.length
-    val sub = dims / m
-    cbRows.foreach { case (j, c, ce) =>
-      require(ce.length == sub,
-        s"codebook ($j,$c) has ${ce.length} dims, expected $sub")
-    }
-    val qproj = ivfProject(queriesDf, idCol, vecCol)
-    val (q1, centArr) = withCentroids(qproj, cents.toSeq)
-    val (q2, cbArr) = withCodebooks(q1, cbRows.toSeq)
-    // one query-side row per (query, probed cid): the distance table
-    // rides the explode — query-scale data, broadcast to the scan
-    val q = q2.select(col("vid").as("id_a"), col("nrm").as("na"),
-      transform(cbArr, y => transform(y.getField("cs"), x =>
-        round(dist2(slice(col("e"),
-          y.getField("j") * lit(sub) + lit(1), lit(sub)),
-          x.getField("ce")), 6))).as("qtab"),
-      explode(transform(
-        slice(array_sort(transform(centArr, c => struct(
-          (-round(array_dot(col("e"), c.getField("ce"))
-            / (col("nrm") * c.getField("cn")), 6)).as("ns"),
-          c.getField("cid").as("cid")))), 1, nprobe),
-        s => s.getField("cid"))).as("cid"))
-    val (nQueries, probed) = probeRegime(q, nprobe,
-      math.max(GatherMaxQueries,
-        GatherMaxIds / math.max(rerank, 1)),
-      base = Some(queriesDf))
-    val index = prunedLists(spark, table, probed, cents.length)
-      .select(col("cid"), col("vid").as("id_b"), col("codes"))
-    // codegen'd ADC lookup sum — unsigned decode built in, bit-equal
-    // to the DECIMAL formulation (see [[org.apache.spark.sql.graft
-    // .PqAdcDistance]])
-    val adc = graft.functions.VectorFunctions
-      .pq_adc(col("codes"), col("qtab"))
-    val scored = q.join(index, Seq("cid"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"), adc.as("adcd"))
-    // ADC is a DISTANCE: smaller is better, ties to the smaller id
-    val survivors = scored
-      .groupBy(col("id_a"))
-      .agg(graft.functions.VectorFunctions
-        .topk_pairs(-col("adcd"), col("id_b"), rerank).as("tk"))
-      .select(col("id_a"), explode(col("tk")).as("p"))
-      .select(col("id_a"), col("p.id").as("id_b"))
-    val va = qproj.select(col("vid").as("id_a"), col("e").as("ea"),
-      col("nrm").as("na"))
-    gatherExactTop1(spark, table, survivors, va, nQueries, rerank)
   }
 }

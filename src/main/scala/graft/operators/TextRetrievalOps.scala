@@ -87,7 +87,7 @@ object TextRetrievalOps {
       buckets: Int = 8): Unit = {
     val meta = spark.table(table + "_meta").head() // 1 row by contract
     val tok = tokens(deltaDocs, idCol, textCol)
-    // WRITE ORDER IS THE CRASH CONTRACT (appendToIvfPqIndex's rule):
+    // WRITE ORDER IS THE CRASH CONTRACT (IvfStore.append's rule):
     // doc lengths land BEFORE postings — a dl row without postings is
     // harmless dead data, but postings whose doc has no length row
     // silently vanish at the scoring join; meta is replaced LAST so a

@@ -515,7 +515,7 @@ object MultimodalQueries {
     * restricted to pairs touching the delta, which is exactly what the
     * oracle recomputes from scratch — two formulations, one result.
     * Completes the media family's stored-index lifecycle (text:
-    * dd11/writeLshIndex, vectors: sim6/writeIvfIndex, lexical:
+    * dd11/writeLshIndex, vectors: sim6/IvfStore.write, lexical:
     * tx38/BM25 postings).
     */
   val md10PhashIndexProbe = Q(

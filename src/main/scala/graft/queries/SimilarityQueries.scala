@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.SimilarityOps
+import graft.operators.{IvfStore, ListCodec, SimilarityOps}
 import Q._
 import Tables._
 
@@ -371,8 +371,8 @@ object SimilarityQueries {
     val t = s"sim_ivf_index_${Integer.toHexString(d.hashCode)}"
     if (!s.catalog.tableExists(t) ||
         !s.catalog.tableExists(t + "_centroids")) {
-      SimilarityOps.writeIvfIndex(embeddings(s, d), "vec_id", "embedding",
-        dims = 64, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id", "embedding",
+        dims = 64, codec = ListCodec.Flat, k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_ivf_idx").toString))
     }
@@ -381,7 +381,7 @@ object SimilarityQueries {
 
   /** sim4 served from a STORED index — the ANN serving shape (build
     * the index once per corpus snapshot, probe forever):
-    * [[graft.operators.SimilarityOps.writeIvfIndex]] materializes the
+    * [[graft.operators.IvfStore.write]] materializes the
     * inverted lists as a cid-bucketed sorted table + a k-row centroid
     * companion; the probe scores queries in-row against the stored
     * centroids and joins the lists BUCKET-ALIGNED — zero index-side
@@ -394,7 +394,7 @@ object SimilarityQueries {
     "sim7_ivf_stored_top1",
     (s, d) => {
       val t = ensureIvfIndex(s, d)
-      SimilarityOps.probeIvfIndex(s, t, spread(embeddings(s, d)),
+      IvfStore.probe(s, t, spread(embeddings(s, d)),
         "vec_id", "embedding", dims = 64, nprobe = 3)
         .orderBy(col("id_a"))
     },
@@ -637,8 +637,8 @@ object SimilarityQueries {
       val t = s"sim_ivf_del_${Integer.toHexString(d.hashCode)}"
       BucketedStores.dropVersioned(s, t)
       s.sql(s"DROP TABLE IF EXISTS ${t}_centroids")
-      SimilarityOps.writeIvfIndex(embeddings(s, d), "vec_id", "embedding",
-        dims = 64, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id", "embedding",
+        dims = 64, codec = ListCodec.Flat, k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_ivf_del").toString))
       BucketedStores.adoptVersioned(s, t)
@@ -649,7 +649,7 @@ object SimilarityQueries {
         buckets = 8, idCol = "vid", removeIds = deleteIds,
         additions = None)
       val survivors = embeddings(s, d).filter(col("vec_id") % 7 =!= 3)
-      SimilarityOps.probeIvfIndex(s, t, spread(survivors), "vec_id",
+      IvfStore.probe(s, t, spread(survivors), "vec_id",
         "embedding", dims = 64, nprobe = 3)
         .orderBy(col("id_a"))
     },
@@ -693,7 +693,7 @@ object SimilarityQueries {
 
   /** sim10 under MERGE-ON-READ maintenance (sim11): the index is
     * built with `_seq`-stamped lists serving through the tombstone
-    * view ([[graft.operators.SimilarityOps.writeIvfIndex]] `mor`),
+    * view ([[graft.operators.IvfStore.write]] `mor`),
     * and the delete changelog APPENDS (vid, seq) tombstones
     * ([[graft.operators.BucketedStores.morDelete]]) — no list
     * generation is rewritten, the centroid companion never changes.
@@ -708,8 +708,8 @@ object SimilarityQueries {
       val t = s"sim_ivf_mor_${Integer.toHexString(d.hashCode)}"
       BucketedStores.dropVersioned(s, t)
       s.sql(s"DROP TABLE IF EXISTS ${t}_centroids")
-      SimilarityOps.writeIvfIndex(embeddings(s, d), "vec_id", "embedding",
-        dims = 64, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id", "embedding",
+        dims = 64, codec = ListCodec.Flat, k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_ivf_mor").toString), mor = true)
       val deleteIds = embeddings(s, d)
@@ -718,7 +718,7 @@ object SimilarityQueries {
       BucketedStores.morDelete(s, t, deleteIds,
         BucketedStores.morNextSeq(s, t))
       val survivors = embeddings(s, d).filter(col("vec_id") % 7 =!= 3)
-      SimilarityOps.probeIvfIndex(s, t, spread(survivors), "vec_id",
+      IvfStore.probe(s, t, spread(survivors), "vec_id",
         "embedding", dims = 64, nprobe = 3)
         .orderBy(col("id_a"))
     },
@@ -727,7 +727,7 @@ object SimilarityQueries {
   /** sim12: sim7's stored-index serving as PURE SQL TEXT — the
     * `GRAFT_ANN('<index>', '<queries>', k, nprobe)` table-valued macro
     * ([[org.apache.spark.sql.graft.GraftAnnRewrite]]) expands at parse
-    * time into the same probe plan class probeIvfIndex builds
+    * time into the same probe plan class IvfStore.probe builds
     * (bucket-aligned list scan, broadcast centroid companion,
     * query-scale shuffle only). Same index, same nprobe, same
     * selection rule — so sim4's oracle verbatim, the third surface
@@ -753,8 +753,8 @@ object SimilarityQueries {
     if (!s.catalog.tableExists(t) ||
         !s.catalog.tableExists(t + "_centroids") ||
         !s.catalog.tableExists(t + "_vecs")) {
-      SimilarityOps.writeIvfSq8Index(embeddings(s, d), "vec_id",
-        "embedding", dims = 64, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id",
+        "embedding", dims = 64, codec = ListCodec.Sq8, k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_sq8_idx").toString))
     }
@@ -763,7 +763,7 @@ object SimilarityQueries {
 
   /** sim8 served from a STORED quantized index — the bandwidth-
     * optimized serving shape made durable
-    * ([[graft.operators.SimilarityOps.writeIvfSq8Index]]): the
+    * ([[graft.operators.IvfStore.write]]): the
     * cid-bucketed lists carry 1-byte/dim INT8 vectors (4-8× less scan
     * bandwidth than the float lists — at 100 TB, memory-resident vs
     * disk-bound), probes join bucket-aligned with zero index-side
@@ -777,7 +777,7 @@ object SimilarityQueries {
     "sim13_ivf_sq8_stored_top1",
     (s, d) => {
       val t = ensureSq8Index(s, d)
-      SimilarityOps.probeIvfSq8Index(s, t, spread(embeddings(s, d)),
+      IvfStore.probe(s, t, spread(embeddings(s, d)),
         "vec_id", "embedding", dims = 64, nprobe = 3, rerank = 10)
         .orderBy(col("id_a"))
     },
@@ -827,8 +827,8 @@ object SimilarityQueries {
       BucketedStores.dropVersioned(s, t)
       s.sql(s"DROP TABLE IF EXISTS ${t}_centroids")
       s.sql(s"DROP TABLE IF EXISTS ${t}_vecs")
-      SimilarityOps.writeIvfSq8Index(embeddings(s, d), "vec_id",
-        "embedding", dims = 64, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id",
+        "embedding", dims = 64, codec = ListCodec.Sq8, k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_sq8_del").toString))
       BucketedStores.adoptVersioned(s, t)
@@ -839,7 +839,7 @@ object SimilarityQueries {
         buckets = 8, idCol = "vid", removeIds = deleteIds,
         additions = None)
       val survivors = embeddings(s, d).filter(col("vec_id") % 7 =!= 3)
-      SimilarityOps.probeIvfSq8Index(s, t, spread(survivors), "vec_id",
+      IvfStore.probe(s, t, spread(survivors), "vec_id",
         "embedding", dims = 64, nprobe = 3, rerank = 4096)
         .orderBy(col("id_a"))
     },
@@ -847,7 +847,7 @@ object SimilarityQueries {
 
   /** sim16: sim15 under MERGE-ON-READ — the quantized lists are
     * `_seq`-stamped and serve through the tombstone view
-    * ([[SimilarityOps.writeIvfSq8Index]] `mor`), deletes APPEND
+    * ([[IvfStore.write]] `mor`), deletes APPEND
     * (vid, seq) tombstones ([[graft.operators.BucketedStores
     * .morDelete]]): no INT8 list generation is rewritten, no
     * companion changes. Same oracle as sim10/sim11/sim15: every
@@ -862,8 +862,8 @@ object SimilarityQueries {
       BucketedStores.dropVersioned(s, t)
       s.sql(s"DROP TABLE IF EXISTS ${t}_centroids")
       s.sql(s"DROP TABLE IF EXISTS ${t}_vecs")
-      SimilarityOps.writeIvfSq8Index(embeddings(s, d), "vec_id",
-        "embedding", dims = 64, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id",
+        "embedding", dims = 64, codec = ListCodec.Sq8, k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_sq8_mor").toString), mor = true)
       val deleteIds = embeddings(s, d)
@@ -872,7 +872,7 @@ object SimilarityQueries {
       BucketedStores.morDelete(s, t, deleteIds,
         BucketedStores.morNextSeq(s, t))
       val survivors = embeddings(s, d).filter(col("vec_id") % 7 =!= 3)
-      SimilarityOps.probeIvfSq8Index(s, t, spread(survivors), "vec_id",
+      IvfStore.probe(s, t, spread(survivors), "vec_id",
         "embedding", dims = 64, nprobe = 3, rerank = 4096)
         .orderBy(col("id_a"))
     },
@@ -880,7 +880,7 @@ object SimilarityQueries {
 
   /** sim17: the stored PRODUCT-QUANTIZED tier end to end — sim9's PQ
     * (m = 4 subspaces × 16 codes, the exact argmin-of-6dp-L2 encode
-    * rule) as DURABLE storage ([[SimilarityOps.writePqIndex]]: m
+    * rule) as DURABLE storage ([[IvfStore.write]]: m
     * bytes/vector code rows, `_codebooks` + `_vecs` companions, all
     * build-stamped), probed by asymmetric distance (per-query
     * distance tables, m lookups per corpus row) with the exact-cosine
@@ -898,12 +898,13 @@ object SimilarityQueries {
       if (!s.catalog.tableExists(t) ||
           !s.catalog.tableExists(t + "_codebooks") ||
           !s.catalog.tableExists(t + "_vecs")) {
-        SimilarityOps.writePqIndex(embeddings(s, d), "vec_id",
-          "embedding", dims = 64, m = 4, codes = 16, table = t,
+        IvfStore.write(embeddings(s, d), "vec_id",
+          "embedding", dims = 64, codec = ListCodec.Pq(4, 16), k = None,
+          table = t,
           location = Some(java.nio.file.Files
             .createTempDirectory("graft_pq_idx").toString))
       }
-      SimilarityOps.probePqIndex(s, t, spread(embeddings(s, d)),
+      IvfStore.probe(s, t, spread(embeddings(s, d)),
         "vec_id", "embedding", dims = 64, rerank = 4096)
         .orderBy(col("id_a"))
     },
@@ -924,7 +925,7 @@ object SimilarityQueries {
 
   /** sim18: the PQ tier under MERGE-ON-READ deletes — the code table
     * is `_seq`-stamped and serves through the tombstone view
-    * ([[SimilarityOps.writePqIndex]] `mor`), the delete changelog
+    * ([[IvfStore.write]] `mor`), the delete changelog
     * appends tombstones, no code row is rewritten and no companion
     * changes (PQ codes are self-contained per row). Full-rerank probe
     * of the survivors == exact cosine top-1 over the post-delete
@@ -938,8 +939,9 @@ object SimilarityQueries {
       BucketedStores.dropVersioned(s, t)
       s.sql(s"DROP TABLE IF EXISTS ${t}_codebooks")
       s.sql(s"DROP TABLE IF EXISTS ${t}_vecs")
-      SimilarityOps.writePqIndex(embeddings(s, d), "vec_id",
-        "embedding", dims = 64, m = 4, codes = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id",
+        "embedding", dims = 64, codec = ListCodec.Pq(4, 16), k = None,
+        table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_pq_mor").toString), mor = true)
       val deleteIds = embeddings(s, d)
@@ -948,7 +950,7 @@ object SimilarityQueries {
       BucketedStores.morDelete(s, t, deleteIds,
         BucketedStores.morNextSeq(s, t))
       val survivors = embeddings(s, d).filter(col("vec_id") % 7 =!= 3)
-      SimilarityOps.probePqIndex(s, t, spread(survivors),
+      IvfStore.probe(s, t, spread(survivors),
         "vec_id", "embedding", dims = 64, rerank = 4096)
         .orderBy(col("id_a"))
     },
@@ -981,8 +983,9 @@ object SimilarityQueries {
       if (!s.catalog.tableExists(t) ||
           !s.catalog.tableExists(t + "_codebooks") ||
           !s.catalog.tableExists(t + "_vecs")) {
-        SimilarityOps.writePqIndex(embeddings(s, d), "vec_id",
-          "embedding", dims = 64, m = 4, codes = 16, table = t,
+        IvfStore.write(embeddings(s, d), "vec_id",
+          "embedding", dims = 64, codec = ListCodec.Pq(4, 16), k = None,
+          table = t,
           location = Some(java.nio.file.Files
             .createTempDirectory("graft_pq_idx").toString))
       }
@@ -1002,8 +1005,9 @@ object SimilarityQueries {
         !s.catalog.tableExists(t + "_centroids") ||
         !s.catalog.tableExists(t + "_codebooks") ||
         !s.catalog.tableExists(t + "_vecs")) {
-      SimilarityOps.writeIvfPqIndex(embeddings(s, d), "vec_id",
-        "embedding", dims = 64, m = 4, codes = 16, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id",
+        "embedding", dims = 64, codec = ListCodec.Pq(4, 16), k = Some(16),
+        table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_ivfpq_idx").toString))
     }
@@ -1011,7 +1015,7 @@ object SimilarityQueries {
   }
 
   /** sim20: IVF-PQ — coarse inverted lists OVER the PQ codes
-    * ([[graft.operators.SimilarityOps.writeIvfPqIndex]], the faiss
+    * ([[graft.operators.IvfStore.write]], the faiss
     * IndexIVFPQ composition that closes the flat ADC scan's
     * corpus-proportional serving cost: per-query candidates drop to
     * nprobe·n/k while the scan bytes stay m per candidate). Same
@@ -1028,7 +1032,7 @@ object SimilarityQueries {
     "sim20_ivf_pq_stored_top1",
     (s, d) => {
       val t = ensureIvfPqIndex(s, d)
-      SimilarityOps.probeIvfPqIndex(s, t, spread(embeddings(s, d)),
+      IvfStore.probe(s, t, spread(embeddings(s, d)),
         "vec_id", "embedding", dims = 64, nprobe = 3, rerank = 4096)
         .orderBy(col("id_a"))
     },
@@ -1071,8 +1075,9 @@ object SimilarityQueries {
       s.sql(s"DROP TABLE IF EXISTS ${t}_centroids")
       s.sql(s"DROP TABLE IF EXISTS ${t}_codebooks")
       s.sql(s"DROP TABLE IF EXISTS ${t}_vecs")
-      SimilarityOps.writeIvfPqIndex(embeddings(s, d), "vec_id",
-        "embedding", dims = 64, m = 4, codes = 16, k = 16, table = t,
+      IvfStore.write(embeddings(s, d), "vec_id",
+        "embedding", dims = 64, codec = ListCodec.Pq(4, 16), k = Some(16),
+        table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_ivfpq_mor").toString), mor = true)
       val deleteIds = embeddings(s, d)
@@ -1081,7 +1086,7 @@ object SimilarityQueries {
       BucketedStores.morDelete(s, t, deleteIds,
         BucketedStores.morNextSeq(s, t))
       val survivors = embeddings(s, d).filter(col("vec_id") % 7 =!= 3)
-      SimilarityOps.probeIvfPqIndex(s, t, spread(survivors), "vec_id",
+      IvfStore.probe(s, t, spread(survivors), "vec_id",
         "embedding", dims = 64, nprobe = 3, rerank = 4096)
         .orderBy(col("id_a"))
     },
@@ -1124,7 +1129,7 @@ object SimilarityQueries {
     "sim24_ivfpq_bounded_rerank",
     (s, d) => {
       val t = ensureIvfPqIndex(s, d)
-      SimilarityOps.probeIvfPqIndex(s, t, spread(embeddings(s, d)),
+      IvfStore.probe(s, t, spread(embeddings(s, d)),
         "vec_id", "embedding", dims = 64, nprobe = 3, rerank = 10)
         .orderBy(col("id_a"))
     },
@@ -1194,7 +1199,7 @@ object SimilarityQueries {
     * is built over a PREFIX of the corpus (vec_id < 400, which
     * contains both first-16 quantizers, so the frozen quantizers
     * equal a one-shot build's), the remaining vectors arrive as a
-    * delta through [[SimilarityOps.morAppendToIvfPqIndex]]
+    * delta through [[IvfStore.morAppend]]
     * (frozen-quantizer encode + float companion + `_seq`-stamped
     * bucket-aligned code append — never a list rewrite), and the
     * appended store serves THROUGH THE SQL SURFACE. With rerank
@@ -1213,11 +1218,11 @@ object SimilarityQueries {
       s.sql(s"DROP TABLE IF EXISTS ${t}_vecs")
       val base = embeddings(s, d).filter(col("vec_id") < 400)
       val delta = embeddings(s, d).filter(col("vec_id") >= 400)
-      SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding",
-        dims = 64, m = 4, codes = 16, k = 16, table = t,
+      IvfStore.write(base, "vec_id", "embedding",
+        dims = 64, codec = ListCodec.Pq(4, 16), k = Some(16), table = t,
         location = Some(java.nio.file.Files
           .createTempDirectory("graft_ivfpq_app").toString), mor = true)
-      SimilarityOps.morAppendToIvfPqIndex(s, t, delta, "vec_id",
+      IvfStore.morAppend(s, t, delta, "vec_id",
         "embedding", dims = 64)
       spread(embeddings(s, d)).createOrReplaceTempView("sim25_queries")
       s.sql("SELECT id_a, ann_id, score FROM " +

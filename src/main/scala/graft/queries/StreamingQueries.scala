@@ -1310,7 +1310,7 @@ object StreamingQueries {
 
   /** Streamed MoR delta-ADD (st31) — st30's ingestion through the
     * MERGE-ON-READ maintenance path instead of plain appends: every
-    * micro-batch lands via `morAppendToIvfPqIndex` (frozen-quantizer
+    * micro-batch lands via `IvfStore.morAppend` (frozen-quantizer
     * encode, `_vecs`-first crash ordering, `_seq`-stamped rows), so
     * the store keeps serving — tombstones, time travel, versioned
     * view — between batches. Low-id base ⇒ frozen quantizers equal

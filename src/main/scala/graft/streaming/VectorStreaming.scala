@@ -5,13 +5,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.SimilarityOps
+import graft.operators.{IvfStore, ListCodec}
 
 /** Streaming over the EMBEDDINGS table: online ANN index ingestion.
   *
   * The batch ANN story has the one-shot index (sim4), the stored index
   * (sim7), and the incremental batch append
-  * ([[graft.operators.SimilarityOps.appendToIvfIndex]]). This is the
+  * ([[graft.operators.IvfStore.append]]). This is the
   * streaming tier: vectors ARRIVE as a stream and are folded into the
   * standing IVF index micro-batch by micro-batch — the shape an
   * embedding service actually runs between full index rebuilds.
@@ -29,7 +29,7 @@ import graft.operators.SimilarityOps
   * LOW id range, so the k lowest-id seed centroids of the base equal
   * those of the full corpus, and after the stream drains the
   * incrementally-built index holds exactly the rows a one-shot
-  * [[SimilarityOps.writeIvfIndex]] over everything would hold — the
+  * [[IvfStore.write]] over everything would hold — the
   * final full-corpus probe must therefore reproduce sim4/sim7
   * row-for-row (three independent index constructions, one answer).
   *
@@ -58,12 +58,13 @@ object VectorStreaming {
     val base = vecs.filter(col("vec_id") < cut)
     val delta = vecs.filter(col("vec_id") >= cut)
     // seed-centroid equivalence needs the k lowest ids in the base;
-    // writeIvfIndex's own require(k rows) would fire later and less
+    // IvfStore.write's own require(k rows) would fire later and less
     // legibly, so check the contract here
     require(base.limit(k).count() == k,
       s"base id range [$idMin,$cut) has < $k vectors")
-    SimilarityOps.writeIvfIndex(base, "vec_id", "embedding", dims, k,
-      table, buckets, location = Some(java.nio.file.Files
+    IvfStore.write(base, "vec_id", "embedding", dims,
+      ListCodec.Flat, Some(k), table, buckets,
+      location = Some(java.nio.file.Files
         .createTempDirectory(s"graft_st15_loc_$run").toString))
     val staged = DocumentsStreaming.stageIdSlices(delta, slices, "vec_id")
     val outDir = java.nio.file.Files
@@ -74,7 +75,7 @@ object VectorStreaming {
     // the appends ran in the stream's cloned session; refresh the
     // probing session's file listing before the full-corpus probe
     spark.catalog.refreshTable(table)
-    SimilarityOps.probeIvfIndex(spark, table, vecs,
+    IvfStore.probe(spark, table, vecs,
       "vec_id", "embedding", dims, nprobe)
       .write.mode("overwrite").parquet(outDir)
     // result is materialized — drop the per-run tables (catalog
@@ -102,8 +103,9 @@ object VectorStreaming {
       slices: Int = 4): DataFrame = {
     val run = nameCounter.incrementAndGet()
     val table = s"graft_st16_ivf_$run"
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding", dims, k,
-      table, location = Some(java.nio.file.Files
+    IvfStore.write(vecs, "vec_id", "embedding", dims,
+      ListCodec.Flat, Some(k), table,
+      location = Some(java.nio.file.Files
         .createTempDirectory(s"graft_st16_loc_$run").toString))
     val staged = DocumentsStreaming.stageIdSlices(vecs, slices, "vec_id")
     val outDir = java.nio.file.Files
@@ -115,7 +117,7 @@ object VectorStreaming {
       .parquet(staged)
       .writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        SimilarityOps.probeIvfIndex(spark, table, batch,
+        IvfStore.probe(spark, table, batch,
           "vec_id", "embedding", dims, nprobe)
           .write.mode("append").parquet(outDir)
       }
@@ -150,8 +152,9 @@ object VectorStreaming {
     val table = s"graft_st27_ivf_$run"
     BucketedStores.dropVersioned(spark, table)
     spark.sql(s"DROP TABLE IF EXISTS ${table}_centroids")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding", dims, k,
-      table, location = Some(java.nio.file.Files
+    IvfStore.write(vecs, "vec_id", "embedding", dims,
+      ListCodec.Flat, Some(k), table,
+      location = Some(java.nio.file.Files
         .createTempDirectory(s"graft_st27_loc_$run").toString),
       mor = true)
     val staged = DocumentsStreaming.stageIdSlices(deleteIds, slices,
@@ -199,15 +202,15 @@ object VectorStreaming {
   /** Streamed QUANTIZED index ingestion (st30) — st15's online-ANN
     * indexing half on the IVF-PQ tier: vectors arrive as a stream and
     * fold into the stored code lists micro-batch by micro-batch
-    * against BOTH frozen quantizers ([[graft.operators.SimilarityOps
-    * .appendToIvfPqIndex]]: coarse assignment by the stored
+    * against BOTH frozen quantizers ([[graft.operators.IvfStore
+    * .append]]: coarse assignment by the stored
     * centroids, encoding by the stored codebooks, plus the `_vecs`
     * append the refine needs). Neither quantizer is ever retrained
     * mid-stream. Seed equivalence: the base is the LOW id range, so
     * the first-k centroids AND the first-`codes` codebook rows of the
     * base equal the full corpus's — after the stream drains, the
     * incrementally-built index holds exactly what a one-shot
-    * [[graft.operators.SimilarityOps.writeIvfPqIndex]] over
+    * [[graft.operators.IvfStore.write]] over
     * everything builds, and the full-rerank probe equals the float
     * IVF answer (sim4's oracle).
     */
@@ -225,8 +228,9 @@ object VectorStreaming {
     require(base.limit(seedRows).count() == seedRows,
       s"base id range [$idMin,$cut) has < $seedRows vectors — the " +
         "frozen quantizers would differ from the one-shot build's")
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding", dims,
-      m, codes, k, table, buckets, location = Some(java.nio.file.Files
+    IvfStore.write(base, "vec_id", "embedding", dims,
+      ListCodec.Pq(m, codes), Some(k), table, buckets,
+      location = Some(java.nio.file.Files
         .createTempDirectory(s"graft_st30_loc_$run").toString))
     val staged = DocumentsStreaming.stageIdSlices(delta, slices, "vec_id")
     val chk = java.nio.file.Files
@@ -238,7 +242,7 @@ object VectorStreaming {
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // foreachBatch is at-least-once: the batchId makes a replayed
         // batch a ledger-guarded no-op instead of duplicate rows
-        SimilarityOps.appendToIvfPqIndex(spark, table, batch,
+        IvfStore.append(spark, table, batch,
           "vec_id", "embedding", dims, buckets, batchId = Some(bid))
       }
       .option("checkpointLocation", chk)
@@ -251,7 +255,7 @@ object VectorStreaming {
     spark.catalog.refreshTable(table + "_vecs")
     val outDir = java.nio.file.Files
       .createTempDirectory(s"graft_st30_out_$run").toString
-    SimilarityOps.probeIvfPqIndex(spark, table, vecs,
+    IvfStore.probe(spark, table, vecs,
       "vec_id", "embedding", dims, nprobe, rerank)
       .write.mode("overwrite").parquet(outDir)
     Seq(table, s"${table}_centroids", s"${table}_codebooks",
@@ -278,8 +282,9 @@ object VectorStreaming {
       rerank: Int = 4096, slices: Int = 4): DataFrame = {
     val run = nameCounter.incrementAndGet()
     val table = s"graft_st29_ivfpq_$run"
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding", dims,
-      m, codes, k, table, location = Some(java.nio.file.Files
+    IvfStore.write(vecs, "vec_id", "embedding", dims,
+      ListCodec.Pq(m, codes), Some(k), table,
+      location = Some(java.nio.file.Files
         .createTempDirectory(s"graft_st29_loc_$run").toString))
     val staged = DocumentsStreaming.stageIdSlices(vecs, slices, "vec_id")
     val outDir = java.nio.file.Files
@@ -315,7 +320,7 @@ object VectorStreaming {
   /** Streamed delta-ADD on a MERGE-ON-READ IVF-PQ store (st31) —
     * st30's ingestion on the maintenance tier the helpers closed:
     * each micro-batch lands through
-    * [[graft.operators.SimilarityOps.morAppendToIvfPqIndex]]
+    * [[graft.operators.IvfStore.morAppend]]
     * (frozen-quantizer encode, `_vecs`-first crash ordering,
     * `_seq`-stamped bucket-aligned code append — never a list or
     * generation rewrite), so the standing store keeps SERVING between
@@ -326,7 +331,7 @@ object VectorStreaming {
     * under the stream fails the NEXT batch loudly, before a write).
     * Low-id base ⇒ the frozen quantizers equal the one-shot build's,
     * so after the drain the MoR serving view holds exactly what a
-    * fresh [[SimilarityOps.writeIvfPqIndex]] over everything builds,
+    * fresh [[IvfStore.write]] over everything builds,
     * and the full-rerank SQL probe equals the float IVF answer —
     * sim4's oracle verbatim (the fifth independent construction:
     * one-shot, stored, streamed-plain, batch-MoR (sim25), and now
@@ -347,8 +352,9 @@ object VectorStreaming {
     require(base.limit(seedRows).count() == seedRows,
       s"base id range [$idMin,$cut) has < $seedRows vectors — the " +
         "frozen quantizers would differ from the one-shot build's")
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding", dims,
-      m, codes, k, table, buckets, location = Some(java.nio.file.Files
+    IvfStore.write(base, "vec_id", "embedding", dims,
+      ListCodec.Pq(m, codes), Some(k), table, buckets,
+      location = Some(java.nio.file.Files
         .createTempDirectory(s"graft_st31_loc_$run").toString),
       mor = true)
     val staged = DocumentsStreaming.stageIdSlices(delta, slices, "vec_id")
@@ -366,7 +372,7 @@ object VectorStreaming {
           BucketedStores.currentGeneration(spark, table))
         // foreachBatch is at-least-once: the batchId makes a replayed
         // batch a ledger-guarded no-op instead of duplicate rows
-        SimilarityOps.morAppendToIvfPqIndex(spark, table, batch,
+        IvfStore.morAppend(spark, table, batch,
           "vec_id", "embedding", dims, buckets,
           batchId = Some(bid)): Unit
       }
@@ -413,7 +419,7 @@ object VectorStreaming {
         // lists table is append-only until the stream drains).
         // the batchId makes a post-restart REDELIVERY of a crashed
         // batch a ledger no-op instead of duplicate list rows
-        SimilarityOps.appendToIvfIndex(spark, table, batch,
+        IvfStore.append(spark, table, batch,
           "vec_id", "embedding", dims, buckets, batchId = Some(bid))
       }
       .option("checkpointLocation", chk)

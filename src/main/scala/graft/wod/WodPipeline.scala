@@ -379,12 +379,14 @@ object WodPipeline {
       // the whole (dataset, level) slice — without this, only a
       // corpus-wide overwrite would ever convert it (the differ would
       // report it missing forever with nothing able to act on that).
+      // An input with no row in either store (an empty member) counts
+      // as covered through the inputs the sub-run's commit recorded.
       val committed = isComplete(spark, subStore)
       lazy val (castRows, castProv) = storeCensus(spark, subStore)
       lazy val (errRows, errProv) = storeCensus(spark, errSub)
       lazy val fresh = ts.map(t =>
         fs.makeQualified(new Path(t.src)).toString)
-        .filterNot(castProv ++ errProv)
+        .filterNot(castProv ++ errProv ++ recordedInputs(fs, subStore))
       if (committed && fresh.isEmpty) {
         println(s"[wod] bulk skip (complete): $subStore")
         BulkRun(ds, lvl, ts.size, castRows, errRows, skipped = true)
@@ -401,6 +403,25 @@ object WodPipeline {
     // a crash anywhere above leaves resume to the per-sub-run probes.
     if (!rootDone) fs.create(new Path(castStore, "_SUCCESS"), true).close()
     results
+  }
+
+  /** The planned inputs of a committed bulk sub-run, one qualified
+    * path per line: written right after the cast store commits, so a
+    * crash before the commit records nothing, and the cast write's
+    * overwrite clears a previous run's list.
+    */
+  private def inputsFile(subStore: String): Path =
+    new Path(subStore, "_inputs")
+
+  private def recordedInputs(fs: FileSystem,
+      subStore: String): Set[String] = {
+    val f = inputsFile(subStore)
+    if (!fs.exists(f)) Set.empty
+    else {
+      val in = fs.open(f)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
+      finally in.close()
+    }
   }
 
   /** Row count + `src_file` provenance of a (possibly absent /
@@ -505,6 +526,13 @@ object WodPipeline {
           .option(GeoParquetFileFormat.GeoAutoOption, "auto")
           .save(subStore)
       else writer.parquet(subStore)
+      val sfs = new Path(subStore).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val out = sfs.create(inputsFile(subStore), true)
+      try out.write(tasks.map(t =>
+          sfs.makeQualified(new Path(t.src)).toString + "\n").mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
       (nCasts, nErrors)
     } finally rows.unpersist()
   }

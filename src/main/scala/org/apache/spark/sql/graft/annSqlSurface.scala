@@ -1,78 +1,55 @@
 /** SQL surface for stored-index ANN serving.
   *
-  * The similarity tier's stored IVF indexes
-  * ([[graft.operators.SimilarityOps.writeIvfIndex]] — cid-bucketed
-  * inverted lists + a k-row centroid companion) were API-only while
+  * The stored ANN index ([[graft.operators.IvfStore]] — lists plus
+  * companions, one store for every list codec) was API-only while
   * as-of joins, time travel, and the maintenance verbs all gained SQL
   * spellings. This closes the asymmetry with a table-valued macro in
   * the same delegating-parser discipline:
   *
   *   SELECT * FROM GRAFT_ANN('<index>', '<queries_table>', <k>, <nprobe>)
-  *   SELECT * FROM GRAFT_ANN('<sq8_index>', '<queries>', <k>, <nprobe>, <rerank>)
+  *   SELECT * FROM GRAFT_ANN('<index>', '<queries>', <k>, <nprobe>, <rerank>)
   *
   * expands AT PARSE TIME into the stock-grammar derived table that
-  * probes the stored index. The 4-arg form serves float IVF stores
-  * ([[graft.operators.SimilarityOps.writeIvfIndex]]); the 5-arg form
-  * serves QUANTIZED stores, dispatched on the lists' schema with
-  * loud errors on a missing/extra rerank:
+  * probes the stored index, shaped to [[graft.operators.IvfStore.probe]]'s
+  * plan and generalized to top-k. The codec comes from the lists'
+  * schema ([[graft.operators.IvfStore.layout]]): Flat lists answer by
+  * exact cosine (4-arg form); quantized lists (Sq8: the `array_dot_q8`
+  * int8 kernel over an `int8_quantize`d query; Pq: the codegen'd
+  * `pq_adc` lookup sum over a per-query distance table) keep the
+  * top-`rerank` per query and re-rank them by exact cosine off the
+  * `_vecs` companion (5-arg form; loud errors on a missing or extra
+  * rerank). Lists with a `cid` column probe their `nprobe` nearest
+  * lists; flat PQ code rows scan whole, so `nprobe` must be 1. Output
+  * columns: `id_a, ann_id, score, rank` (rank 1..k per query, by
+  * (score DESC, id ASC)).
   *
-  *  - (q, amax) rows → IVF-SQ8 ([[graft.operators.SimilarityOps
-  *    .writeIvfSq8Index]]): int8 scan kernel (`array_dot_q8`), in-row
-  *    query quantization (`int8_quantize`), exact-float re-rank off
-  *    the `_vecs` companion — identical to [[graft.operators
-  *    .SimilarityOps.probeIvfSq8Index]];
-  *  - (codes) rows WITHOUT cid → flat PQ ([[graft.operators
-  *    .SimilarityOps.writePqIndex]]): whole-corpus asymmetric-
-  *    distance scan through the codegen'd `pq_adc` kernel (nprobe
-  *    pinned to 1 — no coarse lists);
-  *  - (cid, codes) rows → IVF-PQ ([[graft.operators.SimilarityOps
-  *    .writeIvfPqIndex]]): nprobe probed code lists + `pq_adc` +
-  *    exact re-rank — identical to [[graft.operators.SimilarityOps
-  *    .probeIvfPqIndex]], the scale-safe PQ layout.
-  *
-  * The float form is semantically identical to
-  * [[graft.operators.SimilarityOps.probeIvfIndex]] (same rounded-
-  * cosine probe selection `(cos DESC, cid)`, same candidate scoring,
-  * same `(score DESC, id)` tie-break), generalized to top-k. Output
-  * columns: `id_a, ann_id, score, rank` (rank 1..k per query).
-  *
-  * The expansion is pure SQL over the engine's registered kernels
-  * (`array_dot`, `array_norm` — native codegen'd expressions), so the
-  * plan is exactly the API plan class: the corpus-scale inverted lists
-  * come off the bucket-aligned scan, only the (query × nprobe)-scale
-  * side shuffles, and the k-row centroid companion joins broadcast.
-  * The SQL form trades probeIvfIndex's centroid literal for a
-  * broadcast join (same bytes), and mirrors the API path's probed-
-  * list pruning: ONE bounded parse-time aggregate (the macro twin of
-  * `probeRegime`) resolves the union of all queries' probed cids and
-  * injects it as an `IN` filter on the lists join, so the unprobed
-  * lists' bytes stay unread on the SQL surface too (cid-bucket +
-  * row-group pruning). Over the cap (corpus-as-queries) or on any
-  * resolution failure the filter is simply omitted — results are
-  * identical either way. View definitions (`CREATE VIEW … GRAFT_ANN`)
-  * never bake the content-dependent In-list into their stored text.
+  * The expansion is pure SQL over the engine's registered kernels, so
+  * the plan is the API plan class: the corpus-scale lists come off the
+  * bucket-aligned scan, only the (query × nprobe)-scale side shuffles,
+  * and the k-row centroid companion folds to an array via an
+  * uncorrelated scalar subquery (the SQL spelling of the API's
+  * centroid literal; same bytes). Probed-list pruning mirrors the API:
+  * ONE bounded parse-time aggregate (the macro twin of `probeRegime`)
+  * resolves the union of all queries' probed cids and injects it as an
+  * `IN` filter on the lists join, so the unprobed lists' bytes stay
+  * unread on the SQL surface too. Over the cap (corpus-as-queries) or
+  * on any resolution failure the filter is simply omitted — results
+  * are identical either way. View definitions (`CREATE VIEW …
+  * GRAFT_ANN`) never bake the content-dependent In-list into their
+  * stored text.
   *
   * Contract (documented, loudly enforced): the queries relation
-  * exposes `vec_id` and `embedding` (the engine's embedding-table
-  * shape); the index store and its `_centroids` companion must exist
-  * in the catalog at parse time. A merge-on-read index store works
-  * unchanged — `<index>` resolves to its serving view, so tombstoned
-  * vectors are already subtracted. TIME TRAVEL composes: a retained
-  * index generation (`GRAFT_ANN('idx__v1', …)`) probes the historical
-  * lists against that generation's SNAPSHOTTED centroid companion
-  * (`idx__v1_centroids`, pinned at swap time by
-  * [[graft.operators.BucketedStores]]). List maintenance never
-  * retrains the quantizer, but a later FULL REBUILD (`writeIvfIndex`
-  * re-run, streamed index rebuild) drops and retrains the BASE
-  * companion while retained generations survive — so the resolver
-  * never falls back from a generation name to the base companion: a
-  * generation without its snapshot fails loudly instead of silently
-  * probing old lists against a possibly-retrained quantizer. The
-  * SQ8 tier time-travels the same way — a quantized generation needs
-  * BOTH of its snapshots (`idx__v1_centroids` AND `idx__v1_vecs`,
-  * the float rerank companion pinned as a shallow catalog snapshot),
-  * and every lists/companion pairing is additionally checked for a
-  * matching quantizer BUILD STAMP before serving.
+  * exposes `vec_id` and `embedding`; the index store and every
+  * companion its layout needs must exist at parse time. A
+  * merge-on-read store works unchanged — `<index>` resolves to its
+  * serving view, so tombstoned vectors are already subtracted. TIME
+  * TRAVEL composes: a retained generation (`GRAFT_ANN('idx__v1', …)`)
+  * probes against that generation's SNAPSHOTTED companions (pinned at
+  * swap time by [[graft.operators.BucketedStores]]); a generation
+  * without its snapshots fails loudly instead of silently probing old
+  * lists against a possibly-retrained base quantizer, and every
+  * lists/companion pairing must carry a matching quantizer BUILD
+  * STAMP ([[graft.operators.IvfStore.resolve]]).
   *
   * Reference parity note: the reference pipeline
   * (CI-CMG/wod-ascii-to-parquet-spark) has no similarity tier; the
@@ -150,16 +127,11 @@ object GraftAnnRewrite {
          |FROM (
          |  SELECT pcid AS cid
          |  FROM (SELECT ea, array_norm(ea) AS na,
-         |               (SELECT collect_list(named_struct(
-         |                  'cid', cid, 'ce', ce, 'cn', array_norm(ce)))
-         |                FROM $centroids) AS cents
+         |               (SELECT $CentsSql FROM $centroids) AS cents
          |        FROM (SELECT transform(embedding,
          |                gx -> CAST(gx AS DOUBLE)) AS ea
          |              FROM $queries))
-         |  LATERAL VIEW explode(transform(slice(array_sort(
-         |    transform(cents, c -> named_struct(
-         |      'ns', -round(array_dot(ea, c.ce) / (na * c.cn), 6),
-         |      'cid', c.cid))), 1, $nprobe), s -> s.cid)) gp AS pcid
+         |  LATERAL VIEW ${probeRankSql(nprobe)} gp AS pcid
          |  LIMIT $cap)""".stripMargin).head()
     if (row == null || row.getLong(0) >= cap) None
     else {
@@ -223,130 +195,45 @@ object GraftAnnRewrite {
         }
         if (k < 1) fail(s"k must be >= 1, got $k")
         if (nprobe < 1) fail(s"nprobe must be >= 1, got $nprobe")
-        // time-travel composition: a retained index GENERATION
-        // (`store__v<n>`, from versioned maintenance with retain > 0)
-        // probes against its OWN snapshotted centroid companion
-        // (`store__v<n>_centroids`, pinned at swap time). Never fall
-        // back to the base companion for a generation name: a full
-        // rebuild retrains the base quantizer while retained
-        // generations survive, and old lists × new centroids is a
-        // silent mis-probe. A generation without its snapshot is a
-        // loud error, not a guess.
-        val centroids = store + "_centroids"
-        if (!spark.catalog.tableExists(store))
-          fail(s"$store is not a stored IVF index — expected catalog " +
-            s"tables $store (inverted lists) and $centroids " +
-            "(write one with SimilarityOps.writeIvfIndex)")
-        // PQ tier dispatch FIRST: a product-quantized store's rows
-        // carry `codes` (m bytes/vector) and its quantizer companion
-        // is `_codebooks`, not `_centroids`
-        val isPq = spark.table(store).columns
-          .map(_.toLowerCase(java.util.Locale.ROOT)).contains("codes")
-        if (isPq) {
-          val sb = new StringBuilder(s)
-          sb.replace(toks(i).start, close.end,
-            pqBody(spark, store, queries, k, nprobe, rerank,
-              pruneOk = !isViewDef))
-          return Some(sb.toString)
-        }
-        if (!spark.catalog.tableExists(centroids)) {
-          if ("(.+)__v\\d+$".r.findFirstMatchIn(store).isDefined)
-            fail(s"$store is a retained index generation with no " +
-              s"snapshotted quantizer companion ($centroids): its " +
-              "lists were assigned under a quantizer the base " +
-              "companion may no longer hold (a full rebuild " +
-              "retrains it), so probing would be silently wrong. " +
-              "Re-run the store maintenance (any compaction/delta " +
-              "swap snapshots companions) or probe the serving name.")
-          else
-            fail(s"$store is not a stored IVF index — expected " +
-              s"catalog tables $store (inverted lists) and " +
-              s"$centroids (write one with " +
-              "SimilarityOps.writeIvfIndex)")
-        }
-        // quantizer lineage: when both the lists (a versioned serving
-        // view resolves to its current generation) and the companion
-        // carry a build stamp, they must match — a mismatch means a
-        // rebuild retrained the quantizer out from under these lists,
-        // or a stale snapshot was forced onto a generation; probing
-        // would silently mis-assign probe lists, so fail loudly
-        {
-          val listsTable = scala.util.Try(graft.operators.BucketedStores
-            .currentGeneration(spark, store)).getOrElse(store)
-          val ls = graft.operators.BucketedStores
-            .buildStamp(spark, listsTable)
-          val cs = graft.operators.BucketedStores
-            .buildStamp(spark, centroids)
-          (ls, cs) match {
-            case (Some(l), Some(c)) if l != c =>
-              fail(s"quantizer build mismatch: $listsTable lists " +
-                s"were assigned under build $l but $centroids " +
-                s"carries build $c — the quantizer was rebuilt out " +
-                "from under these lists; rebuild the index before " +
-                "serving")
-            case _ => ()
+        // layout, companions (a retained generation probes its OWN
+        // snapshots, never the base's) and build-stamp lineage
+        val (codec, coarse) =
+          try graft.operators.IvfStore.resolve(spark, store)
+          catch {
+            case e: IllegalArgumentException =>
+              fail(e.getMessage.stripPrefix("requirement failed: "))
           }
-        }
-        // tier dispatch: an SQ8 store's lists carry (q, amax) instead
-        // of e — it probes through the quantized expansion (int8 scan
-        // kernel + exact-float rerank off the _vecs companion) and
-        // REQUIRES <rerank>; a float store must not be given one
-        val isSq8 = {
-          val cols = spark.table(store).columns
-            .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-          cols.contains("q") && cols.contains("amax")
-        }
-        val body = if (isSq8) {
-          val rr = rerank.getOrElse(fail(s"$store is a quantized " +
-            "(SQ8) index store — the <rerank> argument is required: " +
+        val rr = if (codec.refines) {
+          val rr = rerank.getOrElse(fail(s"$store is a quantized index " +
+            "store — the <rerank> argument is required: " +
             s"GRAFT_ANN('$store', '<queries>', k, nprobe, rerank)"))
           if (rr < k) fail(s"rerank ($rr) must be >= k ($k) — the " +
             "exact re-rank can only return candidates the quantized " +
             "pass kept")
-          val vecs = store + "_vecs"
-          if (!spark.catalog.tableExists(vecs)) {
-            if ("(.+)__v\\d+$".r.findFirstMatchIn(store).isDefined)
-              fail(s"$store is a retained SQ8 index generation with " +
-                s"no snapshotted float companion ($vecs): the exact " +
-                "re-rank needs the floats the generation's lists " +
-                "were built from, and the base companion may have " +
-                "been rebuilt since. Re-run the store maintenance " +
-                "(any swap snapshots both companions) or probe the " +
-                "serving name.")
-            else
-              fail(s"$store has no float companion $vecs for the " +
-                "exact re-rank (write the index with " +
-                "SimilarityOps.writeIvfSq8Index)")
-          }
-          // same lineage discipline as the centroids: a stamped
-          // lists/_vecs pair must carry ONE build id
-          {
-            val listsTable = scala.util.Try(graft.operators
-              .BucketedStores.currentGeneration(spark, store))
-              .getOrElse(store)
-            val ls = graft.operators.BucketedStores
-              .buildStamp(spark, listsTable)
-            val vs = graft.operators.BucketedStores
-              .buildStamp(spark, vecs)
-            (ls, vs) match {
-              case (Some(l), Some(v)) if l != v =>
-                fail(s"quantizer build mismatch: $listsTable lists " +
-                  s"carry build $l but $vecs carries build $v — " +
-                  "the index was rebuilt out from under these " +
-                  "lists; rebuild before serving")
-              case _ => ()
-            }
-          }
-          sq8Expansion(store, centroids, vecs, queries, k, nprobe, rr,
-            if (isViewDef) None
-            else probedCids(spark, centroids, queries, nprobe))
+          rr
         } else {
           rerank.foreach(_ => fail(s"$store is a float IVF store — " +
-            "<rerank> only applies to quantized (SQ8) stores"))
-          expansion(store, centroids, queries, k, nprobe,
-            if (isViewDef) None
-            else probedCids(spark, centroids, queries, nprobe))
+            "<rerank> only applies to quantized (SQ8/PQ) stores"))
+          0
         }
+        if (!coarse && nprobe != 1)
+          fail(s"$store has no coarse lists (no cid column — a flat " +
+            s"code scan), so <nprobe> must be 1, got $nprobe")
+        val sub = codec match {
+          case _: graft.operators.ListCodec.Pq =>
+            scala.util.Try {
+              spark.sql(s"SHOW TBLPROPERTIES ${store}_codebooks").collect()
+                .find(_.getString(0) == "graft.pq.sub")
+                .map(_.getString(1).toInt)
+            }.toOption.flatten.getOrElse(fail(s"${store}_codebooks " +
+              "carries no graft.pq.sub property — write the index " +
+              "with IvfStore.write"))
+          case _ => 0
+        }
+        val body = expansion(store, codec, coarse, queries, k, nprobe,
+          rr, sub,
+          if (isViewDef || !coarse) None
+          else probedCids(spark, store + "_centroids", queries, nprobe))
         val sb = new StringBuilder(s)
         sb.replace(toks(i).start, close.end, body)
         return Some(sb.toString)
@@ -356,43 +243,105 @@ object GraftAnnRewrite {
     None
   }
 
-  /** The stock-grammar probe, shaped to probeIvfIndex's own plan:
-    * probe selection happens IN-ROW (the k-row companion folds to an
-    * array via an uncorrelated scalar subquery — the SQL spelling of
-    * the API's broadcast centroid literal; no per-query window, no
-    * cross-join shuffle), and top-1 is a max-struct aggregate (map-
-    * side partials) rather than a window — the window form only for
-    * k > 1, where WindowGroupLimit keeps it candidate-bounded. CTE
-    * names are macro-prefixed and scoped to the derived table, so two
-    * GRAFT_ANN calls in one statement can't collide.
+  /** The centroid companion folded to the in-row probe array. */
+  private val CentsSql = "collect_list(named_struct(" +
+    "'cid', cid, 'ce', ce, 'cn', array_norm(ce)))"
+
+  /** THE nprobe ranking in SQL text — character for character the rule
+    * of the API's [[graft.operators.SimilarityOps.probeCids]] over
+    * (ea, na, cents): (cosine DESC, cid ASC) at 6 dp. The parse-time
+    * cid resolution and the expansion share it, so the resolved set
+    * can never exclude a list the expansion probes.
     */
-  private def expansion(store: String, centroids: String,
-      queries: String, k: Int, nprobe: Int,
-      cids: Option[Seq[Long]]): String = {
-    val head =
-      s"""(WITH graft_ann_cents AS (
-         |  SELECT collect_list(named_struct(
-         |           'cid', cid, 'ce', ce, 'cn', array_norm(ce))) AS cs
-         |  FROM $centroids),
-         |graft_ann_q AS (
-         |  SELECT vec_id AS id_a,
-         |         transform(embedding, gx -> CAST(gx AS DOUBLE)) AS ea
-         |  FROM $queries),
-         |graft_ann_probe AS (
-         |  SELECT id_a, ea, na, pcid AS cid
-         |  FROM (SELECT id_a, ea, array_norm(ea) AS na,
-         |               (SELECT cs FROM graft_ann_cents) AS cents
-         |        FROM graft_ann_q)
-         |  LATERAL VIEW explode(transform(slice(array_sort(
-         |    transform(cents, c -> named_struct(
-         |      'ns', -round(array_dot(ea, c.ce) / (na * c.cn), 6),
-         |      'cid', c.cid))), 1, $nprobe), s -> s.cid)) gp AS pcid),
-         |graft_ann_cand AS (
-         |  SELECT p.id_a, i.vid AS ann_id,
-         |         round(array_dot(p.ea, i.e) / (p.na * i.nrm), 6) AS score
-         |  FROM graft_ann_probe p JOIN $store i
-         |    ON i.cid = p.cid AND i.vid <> p.id_a${cidFilterSql("i", cids)})
-         |""".stripMargin
+  private def probeRankSql(nprobe: Int): String =
+    s"""explode(transform(slice(array_sort(
+       |    transform(cents, c -> named_struct(
+       |      'ns', -round(array_dot(ea, c.ce) / (na * c.cn), 6),
+       |      'cid', c.cid))), 1, $nprobe), s -> s.cid))""".stripMargin
+
+  /** The one expansion, per codec: the query side is prepared once
+    * (`graft_ann_qz`: floats for Flat, plus the `int8_quantize`d query
+    * for Sq8 or the per-query m×codes distance table for Pq), probes
+    * its `nprobe` lists in-row (coarse stores only), and the scan join
+    * carries just the codec's query payload. Flat candidates are
+    * final; quantized candidates keep the top-`rerank` per query
+    * (bounded `topk_pairs`, never a candidate window) and re-rank by
+    * exact cosine — query floats from the QUERY side, corpus floats
+    * from `_vecs`. Top-1 is a max-struct aggregate (map-side partials);
+    * k > 1 is the bounded `topk_pairs` tail, the same (score DESC,
+    * id ASC) order. CTE names are macro-prefixed and scoped to the
+    * derived table, so two GRAFT_ANN calls in one statement can't
+    * collide.
+    */
+  private def expansion(store: String, codec: graft.operators.ListCodec,
+      coarse: Boolean, queries: String, k: Int, nprobe: Int, rerank: Int,
+      sub: Int, cids: Option[Seq[Long]]): String = {
+    import graft.operators.ListCodec._
+    // (query-prep columns, inner columns they need, payload the scan
+    // join carries, candidate score)
+    val (prep, inner, carried, score) = codec match {
+      case Flat => ("", "", "ea, na",
+        "round(array_dot(p.ea, i.e) / (p.na * i.nrm), 6)")
+      case Sq8 => (", amax_a, int8_quantize(ea, amax_a) AS qa",
+        ", aggregate(ea, CAST(0.0 AS DOUBLE), " +
+          "(ga, gx) -> greatest(ga, abs(gx))) AS amax_a",
+        "qa, amax_a, na",
+        "round(CAST(array_dot_q8(p.qa, i.q) AS DOUBLE) / " +
+          "((127.0D / p.amax_a) * (127.0D / i.amax)) / (p.na * i.nrm), 6)")
+      case _: Pq => (
+        s""", transform(cbk, gy -> transform(gy.cs, gx ->
+           |           round(aggregate(zip_with(
+           |             slice(ea, gy.j * $sub + 1, $sub), gx.ce,
+           |             (ga, gb) -> (ga - gb) * (ga - gb)),
+           |             CAST(0.0 AS DOUBLE),
+           |             (gacc, gz) -> gacc + gz), 6))) AS qtab""".stripMargin,
+        ", (SELECT cbk FROM graft_ann_cbk) AS cbk", "qtab",
+        "-pq_adc(i.codes, p.qtab)")
+    }
+    val scan = if (codec.refines) "graft_ann_sc" else "graft_ann_cand"
+    val join =
+      if (coarse) "graft_ann_probe p JOIN " + store +
+        s" i ON i.cid = p.cid AND i.vid <> p.id_a${cidFilterSql("i", cids)}"
+      else s"$store i JOIN graft_ann_qz p ON i.vid <> p.id_a"
+    val ctes = Seq(
+      Option.when(coarse)(
+        s"graft_ann_cents AS (SELECT $CentsSql AS cs FROM ${store}_centroids)"),
+      Option.when(codec.isInstanceOf[Pq])(
+        s"""graft_ann_cbk AS (
+           |  SELECT sort_array(collect_list(named_struct(
+           |           'j', j, 'cs', cs))) AS cbk
+           |  FROM (SELECT j, sort_array(collect_list(named_struct(
+           |                 'c', c, 'ce', ce))) AS cs
+           |        FROM ${store}_codebooks GROUP BY j))""".stripMargin),
+      Some(s"""graft_ann_qz AS (
+              |  SELECT id_a, ea, array_norm(ea) AS na$prep
+              |  FROM (SELECT id_a, ea$inner
+              |        FROM (SELECT vec_id AS id_a, transform(embedding,
+              |                gx -> CAST(gx AS DOUBLE)) AS ea
+              |              FROM $queries)))""".stripMargin),
+      Option.when(coarse)(
+        s"""graft_ann_probe AS (
+           |  SELECT id_a, $carried, pcid AS cid
+           |  FROM (SELECT *, (SELECT cs FROM graft_ann_cents) AS cents
+           |        FROM graft_ann_qz)
+           |  LATERAL VIEW ${probeRankSql(nprobe)} gp AS pcid)""".stripMargin),
+      Some(s"""$scan AS (
+              |  SELECT p.id_a, i.vid AS ann_id, $score AS score
+              |  FROM $join)""".stripMargin),
+      Option.when(codec.refines)(
+        s"""graft_ann_sv AS (
+           |  SELECT id_a, gp.id AS ann_id FROM (
+           |    SELECT id_a, topk_pairs(score, ann_id, $rerank) AS tk
+           |    FROM graft_ann_sc GROUP BY id_a)
+           |  LATERAL VIEW explode(tk) gsv AS gp)""".stripMargin),
+      Option.when(codec.refines)(
+        s"""graft_ann_cand AS (
+           |  SELECT sv.id_a, sv.ann_id,
+           |         round(array_dot(qz.ea, vb.e) / (qz.na * vb.nrm), 6)
+           |           AS score
+           |  FROM graft_ann_sv sv
+           |  JOIN graft_ann_qz qz ON qz.id_a = sv.id_a
+           |  JOIN ${store}_vecs vb ON vb.vid = sv.ann_id)""".stripMargin))
     val tail =
       if (k == 1)
         """SELECT id_a, -gbest.nid AS ann_id, gbest.score AS score,
@@ -401,335 +350,11 @@ object GraftAnnRewrite {
           |        'score', score, 'nid', -ann_id)) AS gbest
           |      FROM graft_ann_cand GROUP BY id_a))""".stripMargin
       else
-        // bounded topk_pairs aggregate, not a candidate-set window:
-        // the float candidates are corpus-scale, and a row_number
-        // window would shuffle + sort them all (see TopKPairs)
         s"""SELECT id_a, gp.id AS ann_id, gp.score AS score,
            |       gpos + 1 AS rank
            |FROM (SELECT id_a, topk_pairs(score, ann_id, $k) AS tk
            |      FROM graft_ann_cand GROUP BY id_a)
            |LATERAL VIEW posexplode(tk) gtk AS gpos, gp)""".stripMargin
-    head + tail
-  }
-
-  /** PQ dispatch: contract checks + lineage stamps, then the ADC
-    * expansion. A FLAT PQ store ([[graft.operators.SimilarityOps
-    * .writePqIndex]] — no `cid` column) scans the whole code table,
-    * so `nprobe` must be 1; an IVF-PQ store ([[graft.operators
-    * .SimilarityOps.writeIvfPqIndex]] — cid-bucketed code lists plus
-    * a `_centroids` companion) probes its `nprobe` nearest lists like
-    * every IVF tier. `rerank` is required on both (the ADC pass only
-    * prunes — the exact-cosine re-rank decides).
-    */
-  private def pqBody(spark: SparkSession, store: String,
-      queries: String, k: Int, nprobe: Int,
-      rerank: Option[Int], pruneOk: Boolean): String = {
-    val codebooks = store + "_codebooks"
-    val vecs = store + "_vecs"
-    val isGen = "(.+)__v\\d+$".r.findFirstMatchIn(store).isDefined
-    if (!spark.catalog.tableExists(codebooks)) {
-      if (isGen)
-        fail(s"$store is a retained PQ index generation with no " +
-          s"snapshotted quantizer companion ($codebooks): its codes " +
-          "were assigned under codebooks the base companion may no " +
-          "longer hold, so probing would be silently wrong. Re-run " +
-          "the store maintenance or probe the serving name.")
-      else
-        fail(s"$store is not a stored PQ index — expected catalog " +
-          s"tables $store (code rows), $codebooks and $vecs (write " +
-          "one with SimilarityOps.writePqIndex)")
-    }
-    if (!spark.catalog.tableExists(vecs)) {
-      if (isGen)
-        fail(s"$store is a retained PQ index generation with no " +
-          s"snapshotted float companion ($vecs) for the exact " +
-          "re-rank. Re-run the store maintenance or probe the " +
-          "serving name.")
-      else
-        fail(s"$store has no float companion $vecs for the exact " +
-          "re-rank (write the index with SimilarityOps.writePqIndex)")
-    }
-    val rr = rerank.getOrElse(fail(s"$store is a PRODUCT-QUANTIZED " +
-      "index store — the <rerank> argument is required: " +
-      s"GRAFT_ANN('$store', '<queries>', k, nprobe, rerank)"))
-    if (rr < k) fail(s"rerank ($rr) must be >= k ($k) — the exact " +
-      "re-rank can only return candidates the ADC pass kept")
-    // IVF-PQ vs flat PQ: coarse lists show as a `cid` column
-    val isIvf = spark.table(store).columns
-      .map(_.toLowerCase(java.util.Locale.ROOT)).contains("cid")
-    if (!isIvf && nprobe != 1)
-      fail(s"$store is a FLAT product-quantized store — the ADC scan " +
-        "has no coarse lists to probe, so <nprobe> must be 1, got " +
-        s"$nprobe (build with SimilarityOps.writeIvfPqIndex for a " +
-        "probed-list PQ store)")
-    val centroids = store + "_centroids"
-    if (isIvf && !spark.catalog.tableExists(centroids)) {
-      if (isGen)
-        fail(s"$store is a retained IVF-PQ index generation with no " +
-          s"snapshotted coarse-quantizer companion ($centroids): its " +
-          "lists were assigned under a quantizer the base companion " +
-          "may no longer hold, so probing would be silently wrong. " +
-          "Re-run the store maintenance or probe the serving name.")
-      else
-        fail(s"$store has coarse lists (cid) but no $centroids " +
-          "companion (write the index with " +
-          "SimilarityOps.writeIvfPqIndex)")
-    }
-    val listsTable = scala.util.Try(graft.operators.BucketedStores
-      .currentGeneration(spark, store)).getOrElse(store)
-    val ls = graft.operators.BucketedStores.buildStamp(spark, listsTable)
-    (Seq(codebooks, vecs) ++ (if (isIvf) Seq(centroids) else Nil))
-      .foreach { c =>
-        (ls, graft.operators.BucketedStores.buildStamp(spark, c)) match {
-          case (Some(l), Some(cc)) if l != cc =>
-            fail(s"quantizer build mismatch: $listsTable code rows " +
-              s"carry build $l but $c carries build $cc — the index " +
-              "was rebuilt out from under these rows; rebuild before " +
-              "serving")
-          case _ => ()
-        }
-      }
-    val writer =
-      if (isIvf) "SimilarityOps.writeIvfPqIndex"
-      else "SimilarityOps.writePqIndex"
-    val sub = scala.util.Try {
-      spark.sql(s"SHOW TBLPROPERTIES $codebooks").collect()
-        .find(_.getString(0) == "graft.pq.sub").map(_.getString(1).toInt)
-    }.toOption.flatten.getOrElse(fail(s"$codebooks carries no " +
-      s"graft.pq.sub property — write the index with $writer"))
-    if (isIvf)
-      ivfPqExpansion(store, centroids, codebooks, vecs, queries, k,
-        nprobe, sub, rr,
-        if (pruneOk) probedCids(spark, centroids, queries, nprobe)
-        else None)
-    else pqExpansion(store, codebooks, vecs, queries, k, sub, rr)
-  }
-
-  /** The PQ expansion, shaped to probePqIndex's plan: codebooks fold
-    * to ONE sorted nested array (code id == position); each query
-    * computes its m×codes distance table IN-ROW; the flat code scan
-    * joins the broadcast query side and pays m table lookups per
-    * pair through the codegen'd `pq_adc` kernel (exact micro-unit
-    * sum of the 6-dp entries — bit-equal to a DECIMAL(20,6) sum,
-    * bit-deterministic under any partition order, unsigned code
-    * decode built in); survivors come from the bounded `topk_pairs`
-    * aggregate; the exact-cosine re-rank reads query floats from the
-    * QUERY side and corpus floats from the `_vecs` companion.
-    */
-  private def pqExpansion(store: String, codebooks: String,
-      vecs: String, queries: String, k: Int, sub: Int,
-      rerank: Int): String = {
-    val head =
-      s"""(WITH graft_pq_cbk AS (
-         |  SELECT sort_array(collect_list(named_struct(
-         |           'j', j, 'cs', cs))) AS cbk
-         |  FROM (SELECT j, sort_array(collect_list(named_struct(
-         |                 'c', c, 'ce', ce))) AS cs
-         |        FROM $codebooks GROUP BY j)),
-         |graft_pq_q AS (
-         |  SELECT vec_id AS id_a,
-         |         transform(embedding, gx -> CAST(gx AS DOUBLE)) AS ea
-         |  FROM $queries),
-         |graft_pq_qt AS (
-         |  SELECT id_a, ea, array_norm(ea) AS na,
-         |         transform(cbk, gy -> transform(gy.cs, gx ->
-         |           round(aggregate(zip_with(
-         |             slice(ea, gy.j * $sub + 1, $sub), gx.ce,
-         |             (ga, gb) -> (ga - gb) * (ga - gb)),
-         |             CAST(0.0 AS DOUBLE),
-         |             (gacc, gz) -> gacc + gz), 6))) AS qtab
-         |  FROM (SELECT id_a, ea,
-         |               (SELECT cbk FROM graft_pq_cbk) AS cbk
-         |        FROM graft_pq_q)),
-         |graft_pq_sc AS (
-         |  SELECT q.id_a, p.vid AS ann_id,
-         |         pq_adc(p.codes, q.qtab) AS adcd
-         |  FROM $store p JOIN graft_pq_qt q ON p.vid <> q.id_a),
-         |graft_pq_sv AS (
-         |  SELECT id_a, gp.id AS ann_id FROM (
-         |    SELECT id_a, topk_pairs(-adcd, ann_id, $rerank) AS tk
-         |    FROM graft_pq_sc GROUP BY id_a)
-         |  LATERAL VIEW explode(tk) gsv AS gp),
-         |graft_pq_cand AS (
-         |  SELECT sv.id_a, sv.ann_id,
-         |         round(array_dot(qz.ea, vb.e) / (qz.na * vb.nrm), 6)
-         |           AS score
-         |  FROM graft_pq_sv sv
-         |  JOIN graft_pq_qt qz ON qz.id_a = sv.id_a
-         |  JOIN $vecs vb ON vb.vid = sv.ann_id)
-         |""".stripMargin
-    val tail =
-      if (k == 1)
-        """SELECT id_a, -gbest.nid AS ann_id, gbest.score AS score,
-          |       1 AS rank
-          |FROM (SELECT id_a, max(named_struct(
-          |        'score', score, 'nid', -ann_id)) AS gbest
-          |      FROM graft_pq_cand GROUP BY id_a))""".stripMargin
-      else
-        s"""SELECT id_a, gp.id AS ann_id, gp.score AS score,
-           |       gpos + 1 AS rank
-           |FROM (SELECT id_a, topk_pairs(score, ann_id, $k) AS tk
-           |      FROM graft_pq_cand GROUP BY id_a)
-           |LATERAL VIEW posexplode(tk) gtk AS gpos, gp)""".stripMargin
-    head + tail
-  }
-
-  /** The IVF-PQ expansion, shaped to probeIvfPqIndex's plan: the
-    * codebooks fold to one sorted nested array (code id == position,
-    * decoded UNSIGNED — pmod 256 — because ids past 127 store as
-    * negative bytes); the k-row coarse companion folds to the probe
-    * array; each query computes its m×codes distance table AND ranks
-    * its `nprobe` lists in-row; the ADC scan joins ONLY the probed
-    * cid lists (bucket-aligned, m bytes per candidate); survivors
-    * come from the bounded `topk_pairs` aggregate and re-rank by
-    * exact cosine off the `_vecs` companion.
-    */
-  private def ivfPqExpansion(store: String, centroids: String,
-      codebooks: String, vecs: String, queries: String, k: Int,
-      nprobe: Int, sub: Int, rerank: Int,
-      cids: Option[Seq[Long]]): String = {
-    val head =
-      s"""(WITH graft_pq_cbk AS (
-         |  SELECT sort_array(collect_list(named_struct(
-         |           'j', j, 'cs', cs))) AS cbk
-         |  FROM (SELECT j, sort_array(collect_list(named_struct(
-         |                 'c', c, 'ce', ce))) AS cs
-         |        FROM $codebooks GROUP BY j)),
-         |graft_ann_cents AS (
-         |  SELECT collect_list(named_struct(
-         |           'cid', cid, 'ce', ce, 'cn', array_norm(ce))) AS cs
-         |  FROM $centroids),
-         |graft_pq_q AS (
-         |  SELECT vec_id AS id_a,
-         |         transform(embedding, gx -> CAST(gx AS DOUBLE)) AS ea
-         |  FROM $queries),
-         |graft_pq_qt AS (
-         |  SELECT id_a, ea, array_norm(ea) AS na,
-         |         transform(cbk, gy -> transform(gy.cs, gx ->
-         |           round(aggregate(zip_with(
-         |             slice(ea, gy.j * $sub + 1, $sub), gx.ce,
-         |             (ga, gb) -> (ga - gb) * (ga - gb)),
-         |             CAST(0.0 AS DOUBLE),
-         |             (gacc, gz) -> gacc + gz), 6))) AS qtab
-         |  FROM (SELECT id_a, ea,
-         |               (SELECT cbk FROM graft_pq_cbk) AS cbk
-         |        FROM graft_pq_q)),
-         |graft_pq_probe AS (
-         |  SELECT id_a, qtab, pcid AS cid
-         |  FROM (SELECT id_a, ea, na, qtab,
-         |               (SELECT cs FROM graft_ann_cents) AS cents
-         |        FROM graft_pq_qt)
-         |  LATERAL VIEW explode(transform(slice(array_sort(
-         |    transform(cents, c -> named_struct(
-         |      'ns', -round(array_dot(ea, c.ce) / (na * c.cn), 6),
-         |      'cid', c.cid))), 1, $nprobe), s -> s.cid)) gp AS pcid),
-         |graft_pq_sc AS (
-         |  SELECT q.id_a, p.vid AS ann_id,
-         |         pq_adc(p.codes, q.qtab) AS adcd
-         |  FROM $store p JOIN graft_pq_probe q
-         |    ON p.cid = q.cid AND p.vid <> q.id_a${cidFilterSql("p", cids)}),
-         |graft_pq_sv AS (
-         |  SELECT id_a, gp.id AS ann_id FROM (
-         |    SELECT id_a, topk_pairs(-adcd, ann_id, $rerank) AS tk
-         |    FROM graft_pq_sc GROUP BY id_a)
-         |  LATERAL VIEW explode(tk) gsv AS gp),
-         |graft_pq_cand AS (
-         |  SELECT sv.id_a, sv.ann_id,
-         |         round(array_dot(qz.ea, vb.e) / (qz.na * vb.nrm), 6)
-         |           AS score
-         |  FROM graft_pq_sv sv
-         |  JOIN graft_pq_qt qz ON qz.id_a = sv.id_a
-         |  JOIN $vecs vb ON vb.vid = sv.ann_id)
-         |""".stripMargin
-    val tail =
-      if (k == 1)
-        """SELECT id_a, -gbest.nid AS ann_id, gbest.score AS score,
-          |       1 AS rank
-          |FROM (SELECT id_a, max(named_struct(
-          |        'score', score, 'nid', -ann_id)) AS gbest
-          |      FROM graft_pq_cand GROUP BY id_a))""".stripMargin
-      else
-        s"""SELECT id_a, gp.id AS ann_id, gp.score AS score,
-           |       gpos + 1 AS rank
-           |FROM (SELECT id_a, topk_pairs(score, ann_id, $k) AS tk
-           |      FROM graft_pq_cand GROUP BY id_a)
-           |LATERAL VIEW posexplode(tk) gtk AS gpos, gp)""".stripMargin
-    head + tail
-  }
-
-  /** The quantized-store expansion, shaped to probeIvfSq8Index's plan:
-    * queries quantize IN-ROW (`int8_quantize` kernel, amax folded as a
-    * scalar so it evaluates once per row), probe lists come off the
-    * cid-bucket-aligned scan carrying 1-byte/dim vectors, candidates
-    * score with the exact `array_dot_q8` integer kernel, the quantized
-    * top-`rerank` per query survive (WindowGroupLimit bounds it), and
-    * only those few join the `_vecs` float companion for the exact-
-    * cosine re-rank — the faiss refine shape as stock SQL text. Same
-    * tie-breaks as the API probe: (qscore DESC, ann_id) at the
-    * quantized cut, (score DESC, ann_id) at the final rank.
-    */
-  private def sq8Expansion(store: String, centroids: String,
-      vecs: String, queries: String, k: Int, nprobe: Int,
-      rerank: Int, cids: Option[Seq[Long]]): String = {
-    val head =
-      s"""(WITH graft_ann_cents AS (
-         |  SELECT collect_list(named_struct(
-         |           'cid', cid, 'ce', ce, 'cn', array_norm(ce))) AS cs
-         |  FROM $centroids),
-         |graft_ann_q AS (
-         |  SELECT vec_id AS id_a,
-         |         transform(embedding, gx -> CAST(gx AS DOUBLE)) AS ea
-         |  FROM $queries),
-         |graft_ann_qz AS (
-         |  SELECT id_a, ea, array_norm(ea) AS na, amax_a,
-         |         int8_quantize(ea, amax_a) AS qa
-         |  FROM (SELECT id_a, ea,
-         |               aggregate(ea, CAST(0.0 AS DOUBLE),
-         |                 (ga, gx) -> greatest(ga, abs(gx))) AS amax_a
-         |        FROM graft_ann_q)),
-         |graft_ann_probe AS (
-         |  SELECT id_a, qa, amax_a, na, pcid AS cid
-         |  FROM (SELECT id_a, qa, amax_a, na, ea,
-         |               (SELECT cs FROM graft_ann_cents) AS cents
-         |        FROM graft_ann_qz)
-         |  LATERAL VIEW explode(transform(slice(array_sort(
-         |    transform(cents, c -> named_struct(
-         |      'ns', -round(array_dot(ea, c.ce) / (na * c.cn), 6),
-         |      'cid', c.cid))), 1, $nprobe), s -> s.cid)) gp AS pcid),
-         |graft_ann_qs AS (
-         |  SELECT p.id_a, i.vid AS ann_id,
-         |         round(CAST(array_dot_q8(p.qa, i.q) AS DOUBLE)
-         |               / ((127.0D / p.amax_a) * (127.0D / i.amax))
-         |               / (p.na * i.nrm), 6) AS qscore
-         |  FROM graft_ann_probe p JOIN $store i
-         |    ON i.cid = p.cid AND i.vid <> p.id_a${cidFilterSql("i", cids)}),
-         |graft_ann_sv AS (
-         |  SELECT id_a, gp.id AS ann_id FROM (
-         |    SELECT id_a, topk_pairs(qscore, ann_id, $rerank) AS tk
-         |    FROM graft_ann_qs GROUP BY id_a)
-         |  LATERAL VIEW explode(tk) gsv AS gp),
-         |graft_ann_cand AS (
-         |  SELECT sv.id_a, sv.ann_id,
-         |         round(array_dot(qz.ea, vb.e) / (qz.na * vb.nrm), 6)
-         |           AS score
-         |  FROM graft_ann_sv sv
-         |  JOIN graft_ann_qz qz ON qz.id_a = sv.id_a
-         |  JOIN $vecs vb ON vb.vid = sv.ann_id)
-         |""".stripMargin
-    val tail =
-      if (k == 1)
-        """SELECT id_a, -gbest.nid AS ann_id, gbest.score AS score,
-          |       1 AS rank
-          |FROM (SELECT id_a, max(named_struct(
-          |        'score', score, 'nid', -ann_id)) AS gbest
-          |      FROM graft_ann_cand GROUP BY id_a))""".stripMargin
-      else
-        s"""SELECT id_a, ann_id, score, rank FROM (
-           |  SELECT id_a, ann_id, score,
-           |         ROW_NUMBER() OVER (PARTITION BY id_a
-           |           ORDER BY score DESC, ann_id) AS rank
-           |  FROM graft_ann_cand)
-           |WHERE rank <= $k)""".stripMargin
-    head + tail
+    ctes.flatten.mkString("(WITH ", ",\n", "\n") + tail
   }
 }

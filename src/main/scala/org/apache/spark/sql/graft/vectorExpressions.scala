@@ -58,7 +58,7 @@ case class ArrayDotProduct(left: Expression, right: Expression)
 
 /** Codegen'd EXACT integer dot product over two array<tinyint>
   * columns — the scan kernel of the stored-SQ8 probe
-  * ([[graft.operators.SimilarityOps.probeIvfSq8Index]]): per
+  * ([[graft.operators.IvfStore.probe]]): per
   * candidate × per dimension, so a `zip_with`+`aggregate` HOF chain
   * here costs per-element closure dispatch on the hottest loop of the
   * quantized tier (measured: the HOF form made the stored-SQ8 probe
@@ -116,8 +116,7 @@ case class ArrayDotQ8(left: Expression, right: Expression)
 }
 
 /** Codegen'd ASYMMETRIC-DISTANCE lookup sum — the scan kernel of the
-  * PQ tiers ([[graft.operators.SimilarityOps.probePqIndex]] /
-  * [[graft.operators.SimilarityOps.probeIvfPqIndex]] and the
+  * PQ codec ([[graft.operators.IvfStore.probe]] and the
   * GRAFT_ANN expansions): per candidate, sum the m per-subspace
   * distance-table entries its code bytes select. The HOF spelling
   * (`aggregate(zip_with(...))` with per-entry DECIMAL(20,6) casts)
@@ -214,8 +213,8 @@ case class PqAdcDistance(left: Expression, right: Expression)
 }
 
 /** Codegen'd PQ ENCODE — the index-BUILD kernel of the PQ tiers
-  * ([[graft.operators.SimilarityOps.writePqIndex]] /
-  * `writeIvfPqIndex` / the delta-encode helpers): code j = argmin
+  * ([[graft.operators.IvfStore.write]] and
+  * [[graft.operators.IvfStore.encode]]): code j = argmin
   * over subspace j's codewords of the 6-dp-rounded subspace L2, ties
   * to the smaller code id — sim9's exact rule, previously an
   * interpreted `transform(array_min(transform(...)))` HOF chain that
@@ -347,7 +346,10 @@ object PqEncode {
   * evaluated once per ROW — the HOF spelling (`transform` referencing
   * an amax column) re-evaluates the reduction per ELEMENT after
   * projection collapse (the Int8QuantStats trap, same fix). amax ≤ 0
-  * (the zero vector) quantizes to all zeros.
+  * (the zero vector) quantizes to all zeros. The elements are never
+  * null, but the type declares them nullable: stored SQ8 lists
+  * ([[graft.operators.IvfStore]]) keep the optional-element parquet
+  * schema their files have always carried.
   */
 case class Int8Quantize(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -355,7 +357,7 @@ case class Int8Quantize(left: Expression, right: Expression)
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), DoubleType)
   override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.ByteType, containsNull = false)
+    ArrayType(org.apache.spark.sql.types.ByteType, containsNull = true)
   override def prettyName: String = "int8_quantize"
 
   override def nullSafeEval(a: Any, b: Any): Any = {

@@ -132,12 +132,12 @@ class IndexDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(pre, pre + "_centroids")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 64, k = 16, table = pre,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 64, codec = ListCodec.Flat, k = Some(16), table = pre,
       location = Some(java.nio.file.Files
         .createTempDirectory("idxdel_ivf_pre").toString))
     val survivors = vecs.filter(col("vec_id") % 7 =!= 3)
-    val preAns = SimilarityOps.probeIvfIndex(spark, pre, survivors,
+    val preAns = IvfStore.probe(spark, pre, survivors,
       "vec_id", "embedding", dims = 64, nprobe = 3)
     assert(preAns.filter(col("ann_id") % 7 === 3).count() > 0,
       "fixture must return deleted vectors pre-maintenance")

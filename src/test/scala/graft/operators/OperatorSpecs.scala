@@ -428,8 +428,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (i, Seq.tabulate(8)(j => ((i * 13 + j * 5) % 17 - 8).toDouble / 3)))
       .toDF("vec_id", "embedding")
     val table = "t_sq8_spec"
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 8, k = 4, table = table, buckets = 2,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Sq8, k = Some(4), table = table, buckets = 2,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sq8").toString))
     // the bandwidth claim is the STORED type: 1 byte per dimension
@@ -440,7 +440,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       dims = 8, k = 4, nprobe = 2, rerank = 5)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val storedDf = SimilarityOps.probeIvfSq8Index(spark, table, vecs,
+    val storedDf = IvfStore.probe(spark, table, vecs,
       "vec_id", "embedding", dims = 8, nprobe = 2, rerank = 5)
       .orderBy(col("id_a"))
     val stored = storedDf.collect()
@@ -523,17 +523,19 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // scores, same tie-break)
     val f = "t_env_flat"
     val q = "t_env_sq8"
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 8, k = 4, table = f, location = Some(java.nio.file.Files
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Flat, k = Some(4), table = f,
+      location = Some(java.nio.file.Files
         .createTempDirectory("t_env_f").toString))
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 8, k = 4, table = q, location = Some(java.nio.file.Files
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Sq8, k = Some(4), table = q,
+      location = Some(java.nio.file.Files
         .createTempDirectory("t_env_q").toString))
-    val flat = SimilarityOps.probeIvfIndex(spark, f, vecs,
+    val flat = IvfStore.probe(spark, f, vecs,
       "vec_id", "embedding", dims = 8, nprobe = 2)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val sq8Full = SimilarityOps.probeIvfSq8Index(spark, q, vecs,
+    val sq8Full = IvfStore.probe(spark, q, vecs,
       "vec_id", "embedding", dims = 8, nprobe = 2, rerank = 48)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -553,12 +555,12 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (i, Seq.tabulate(8)(j => ((i * 13 + j * 5) % 17 - 8).toDouble / 3)))
       .toDF("vec_id", "embedding")
     val t = "t_prune_idx"
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 8, k = 64, table = t,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Flat, k = Some(64), table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_prune").toString))
     val queries = vecs.filter(col("vec_id") < 4)
-    val df = SimilarityOps.probeIvfIndex(spark, t, queries,
+    val df = IvfStore.probe(spark, t, queries,
       "vec_id", "embedding", dims = 8, nprobe = 2)
     val ex = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -570,23 +572,22 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
   }
 
-  test("large-k quantizers ship as a runtime broadcast, not a plan " +
-      "literal, and the probe stays exact: k > CentroidLiteralMax " +
-      "with nprobe = k IS exhaustive exact search") {
+  test("large-k quantizers ship as one plan literal and the probe " +
+      "stays exact: k = 100 with nprobe = k IS exhaustive exact " +
+      "search") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val corpus = (0L until 300L).map(i =>
       (i, Seq.fill(6)(rnd.nextDouble() * 4 - 2)))
     val vecs = corpus.toDF("vec_id", "embedding")
     val t = "t_bigk_idx"
-    val k = 100 // > CentroidLiteralMax = 64 → the broadcast path
-    assert(k > SimilarityOps.CentroidLiteralMax)
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 6, k = k, table = t, buckets = 2,
+    val k = 100 // the r20 code shipped k > 64 as a broadcast cross join
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 6, codec = ListCodec.Flat, k = Some(k), table = t, buckets = 2,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_bigk").toString))
     val queries = vecs.filter(col("vec_id") < 5)
-    val got = SimilarityOps.probeIvfIndex(spark, t, queries,
+    val got = IvfStore.probe(spark, t, queries,
       "vec_id", "embedding", dims = 6, nprobe = k)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -624,11 +625,11 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (i, Seq.fill(6)(rnd.nextDouble() * 4 - 2)))).toDF(
       "vec_id", "embedding")
     val t = "t_sq8_ext"
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 6, k = 4, table = t, buckets = 2,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 6, codec = ListCodec.Sq8, k = Some(4), table = t, buckets = 2,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sq8_ext").toString))
-    val got = SimilarityOps.probeIvfSq8Index(spark, t, queries,
+    val got = IvfStore.probe(spark, t, queries,
       "vec_id", "embedding", dims = 6, nprobe = 4, rerank = 40)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -672,8 +673,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (i, Seq.fill(8)(rnd.nextDouble() * 4 - 2)))
     val vecs = corpus.toDF("vec_id", "embedding")
     val t = "t_pq_spec"
-    SimilarityOps.writePqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 4, codes = 8, table = t, buckets = 2,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(4, 8), k = None, table = t, buckets = 2,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pq").toString))
     // the compression claim IS the stored type: array<tinyint>, m slots
@@ -695,7 +696,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     val queries = ((900L, corpus(7)._2) +: (901L until 904L).map(i =>
       (i, Seq.fill(8)(rnd.nextDouble() * 4 - 2)))).toDF(
       "vec_id", "embedding")
-    val df = SimilarityOps.probePqIndex(spark, t, queries,
+    val df = IvfStore.probe(spark, t, queries,
       "vec_id", "embedding", dims = 8, rerank = 60)
     val got = df.orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -746,8 +747,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     BucketedStores.dropVersioned(spark, t)
     Seq(s"${t}_codebooks", s"${t}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
-    SimilarityOps.writePqIndex(vecs, "vec_id", "embedding",
-      dims = 4, m = 2, codes = 4, table = t, buckets = 2,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Pq(2, 4), k = None, table = t, buckets = 2,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pq_tt").toString))
     BucketedStores.adoptVersioned(spark, t)
@@ -759,7 +760,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       .foreach(x => assert(spark.catalog.tableExists(x),
         s"swap must snapshot both PQ companions per generation ($x)"))
     val queries = vecs.filter(col("vec_id") < 3)
-    def probe(name: String) = SimilarityOps.probePqIndex(spark, name,
+    def probe(name: String) = IvfStore.probe(spark, name,
       queries, "vec_id", "embedding", dims = 4, rerank = 20)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -807,8 +808,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (4L, Seq(0.1, 0.99, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
     val table = "t_ivf_append_spec"
-    SimilarityOps.writeIvfIndex(corpus, "vec_id", "embedding",
-      dims = 4, k = 2, table = table, buckets = 2,
+    IvfStore.write(corpus, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Flat, k = Some(2), table = table, buckets = 2,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_ivf_append").toString))
     val loc = new java.io.File(new java.net.URI(
@@ -822,13 +823,13 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
     val delta = Seq((10L, Seq(0.98, 0.05, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.appendToIvfIndex(spark, table, delta,
+    IvfStore.append(spark, table, delta,
       "vec_id", "embedding", dims = 4, buckets = 2)
     // a follow-up query nearest the appended vector must retrieve IT
     // through the stored lists (nprobe=1: only the hot list is read)
     val probe = Seq((11L, Seq(0.97, 0.06, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
-    val got = SimilarityOps.probeIvfIndex(spark, table, probe,
+    val got = IvfStore.probe(spark, table, probe,
       "vec_id", "embedding", dims = 4, nprobe = 1)
       .as[(Long, Long, Double)].collect()
     assert(got.length == 1 && got.head._2 == 10L,
@@ -1198,18 +1199,19 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val f = "t_envpq_flat"
     val q = "t_envpq_ivfpq"
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 8, k = 4, table = f, location = Some(java.nio.file.Files
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Flat, k = Some(4), table = f,
+      location = Some(java.nio.file.Files
         .createTempDirectory("t_envpq_f").toString))
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = q,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = q,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_envpq_q").toString))
-    val flat = SimilarityOps.probeIvfIndex(spark, f, vecs,
+    val flat = IvfStore.probe(spark, f, vecs,
       "vec_id", "embedding", dims = 8, nprobe = 2)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val pqFull = SimilarityOps.probeIvfPqIndex(spark, q, vecs,
+    val pqFull = IvfStore.probe(spark, q, vecs,
       "vec_id", "embedding", dims = 8, nprobe = 2, rerank = 96)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1230,15 +1232,15 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (i, Seq.tabulate(8)(j => ((i * 13 + j * 5) % 17 - 8).toDouble / 3)))
       .toDF("vec_id", "embedding")
     val t = "t_prunepq_idx"
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 64, table = t,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(64), table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_prunepq").toString))
     val queries = vecs.filter(col("vec_id") < 4)
     // rerank above the gather cap (GatherMaxIds/rerank < 4 queries):
     // the probe stays a fully LAZY pipeline, so the final plan still
     // holds the pruned code-lists scan to assert on
-    val df = SimilarityOps.probeIvfPqIndex(spark, t, queries,
+    val df = IvfStore.probe(spark, t, queries,
       "vec_id", "embedding", dims = 8, nprobe = 2, rerank = 8192)
     val ex = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -1252,7 +1254,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // bounded rerank takes the GATHER refine: the final plan restarts
     // from the collected survivors and pushes their vids into the
     // `_vecs` fetch as In(vid) — the faiss gather-by-id shape
-    val dfg = SimilarityOps.probeIvfPqIndex(spark, t, queries,
+    val dfg = IvfStore.probe(spark, t, queries,
       "vec_id", "embedding", dims = 8, nprobe = 2, rerank = 8)
     val exg = dfg.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -1278,20 +1280,20 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     val delta = vecs.filter(col("vec_id") >= 60)
     val inc = "t_pqapp_inc"
     val one = "t_pqapp_one"
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = inc,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = inc,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqapp_i").toString))
-    SimilarityOps.appendToIvfPqIndex(spark, inc, delta,
+    IvfStore.append(spark, inc, delta,
       "vec_id", "embedding", dims = 8)
     spark.catalog.refreshTable(inc)
     spark.catalog.refreshTable(inc + "_vecs")
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = one,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = one,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqapp_o").toString))
     def probeAll(t: String) =
-      SimilarityOps.probeIvfPqIndex(spark, t, vecs, "vec_id",
+      IvfStore.probe(spark, t, vecs, "vec_id",
         "embedding", dims = 8, nprobe = 2, rerank = 8)
         .orderBy(col("id_a")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1311,12 +1313,12 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     graft.operators.BucketedStores.dropVersioned(spark, mor)
     Seq(s"${mor}_centroids", s"${mor}_codebooks", s"${mor}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = mor,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = mor,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqapp_m").toString), mor = true)
     val e = intercept[IllegalArgumentException] {
-      SimilarityOps.appendToIvfPqIndex(spark, mor, delta,
+      IvfStore.append(spark, mor, delta,
         "vec_id", "embedding", dims = 8)
     }
     assert(e.getMessage.contains("morAppend"), e.getMessage)
@@ -1336,8 +1338,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     val t = "t_upq_idx"
     val m = 2
     val codes = 200 // > 128: ids 128-199 wrap negative as bytes
-    SimilarityOps.writePqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = m, codes = codes, table = t,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(m, codes), k = None, table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_upq").toString))
     // the wrap is actually exercised: some stored code bytes are < 0
@@ -1391,7 +1393,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // rerank = 1: the survivor IS the ADC top-1 — a signed read of a
     // wrapped code would pick a different survivor here (full rerank
     // would mask the decode bug behind the exact re-rank)
-    val got = SimilarityOps.probePqIndex(spark, t, qdf,
+    val got = IvfStore.probe(spark, t, qdf,
       "vec_id", "embedding", dims = 8, rerank = 1)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -1422,8 +1424,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     Seq(s"${t}_centroids", s"${t}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     // location = None → MANAGED companions (files die with DROP TABLE)
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 6, k = 4, table = t)
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 6, codec = ListCodec.Sq8, k = Some(4), table = t)
     BucketedStores.adoptVersioned(spark, t)
     val snap = s"${t}__v1_vecs"
     assert(spark.catalog.tableExists(snap), "adoption must snapshot _vecs")
@@ -1463,20 +1465,20 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       Seq(t, s"${t}_centroids", s"${t}_codebooks", s"${t}_vecs")
         .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     }
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = mor,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = mor,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqmorapp_m").toString), mor = true)
-    val seq = SimilarityOps.morAppendToIvfPqIndex(spark, mor, delta,
+    val seq = IvfStore.morAppend(spark, mor, delta,
       "vec_id", "embedding", dims = 8)
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = one,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = one,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqmorapp_o").toString))
     // the encode helper alone produces EXACTLY the one-shot's rows
     // for the delta vids — frozen-quantizer encode is list-assignment
     // + pqEncode, nothing else
-    val encRows = SimilarityOps.encodeForIvfPq(spark, one, delta,
+    val encRows = IvfStore.encode(spark, one, delta,
       "vec_id", "embedding", dims = 8)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Byte](2))).toSet
@@ -1488,7 +1490,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       "encodeForIvfPq must reproduce the one-shot build's (cid, vid, " +
         "codes) rows for the delta — same frozen quantizers")
     def probeAll(t: String) =
-      SimilarityOps.probeIvfPqIndex(spark, t, vecs, "vec_id",
+      IvfStore.probe(spark, t, vecs, "vec_id",
         "embedding", dims = 8, nprobe = 2, rerank = 8)
         .orderBy(col("id_a")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1504,7 +1506,7 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // retained generations are immutable history: the plain-append
     // helper refuses the name shape outright
     val e = intercept[IllegalArgumentException] {
-      SimilarityOps.appendToIvfPqIndex(spark, s"${one}__v1", delta,
+      IvfStore.append(spark, s"${one}__v1", delta,
         "vec_id", "embedding", dims = 8)
     }
     assert(e.getMessage.contains("GENERATION"), e.getMessage)
@@ -1532,18 +1534,18 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       Seq(t, s"${t}_centroids", s"${t}_vecs")
         .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     }
-    SimilarityOps.writeIvfSq8Index(base, "vec_id", "embedding",
-      dims = 8, k = 4, table = mor,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Sq8, k = Some(4), table = mor,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sq8morapp_m").toString), mor = true)
-    val seq = SimilarityOps.morAppendToIvfSq8Index(spark, mor, delta,
+    val seq = IvfStore.morAppend(spark, mor, delta,
       "vec_id", "embedding", dims = 8)
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 8, k = 4, table = one,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Sq8, k = Some(4), table = one,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sq8morapp_o").toString))
     def probeAll(t: String) =
-      SimilarityOps.probeIvfSq8Index(spark, t, vecs, "vec_id",
+      IvfStore.probe(spark, t, vecs, "vec_id",
         "embedding", dims = 8, nprobe = 2, rerank = 8)
         .orderBy(col("id_a")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1575,17 +1577,17 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     Seq(mor, s"${mor}_centroids", s"${mor}_codebooks", s"${mor}_vecs",
         s"${mor}_applied")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = mor,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = mor,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqmorreplay").toString), mor = true)
-    val seq1 = SimilarityOps.morAppendToIvfPqIndex(spark, mor, d1,
+    val seq1 = IvfStore.morAppend(spark, mor, d1,
       "vec_id", "embedding", dims = 8, batchId = Some(7L))
     val (gen1, vecs1) = (spark.table(mor).count(),
       spark.table(s"${mor}_vecs").count())
     // the REPLAY: same batchId — duplicate rows here would surface as
     // duplicate ranks at k > 1 (the anti-join view never dedups)
-    val seqR = SimilarityOps.morAppendToIvfPqIndex(spark, mor, d1,
+    val seqR = IvfStore.morAppend(spark, mor, d1,
       "vec_id", "embedding", dims = 8, batchId = Some(7L))
     assert(seqR === seq1, "a replayed batch must return the seq its " +
       "first landing stamped")
@@ -1594,16 +1596,16 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       "a replayed batchId must not append a single row to either " +
         "the code lists or the float companion")
     // a NEW batch still lands, and its replay is also a no-op
-    SimilarityOps.morAppendToIvfPqIndex(spark, mor, d2,
+    IvfStore.morAppend(spark, mor, d2,
       "vec_id", "embedding", dims = 8, batchId = Some(8L)): Unit
     assert(spark.table(mor).count() === 80L)
-    SimilarityOps.morAppendToIvfPqIndex(spark, mor, d2,
+    IvfStore.morAppend(spark, mor, d2,
       "vec_id", "embedding", dims = 8, batchId = Some(8L)): Unit
     assert(spark.table(mor).count() === 80L &&
       spark.table(s"${mor}_vecs").count() === 80L)
     // the guarded store answers exactly like an unguarded good run:
     // serving parity is the point of the guard
-    val got = SimilarityOps.probeIvfPqIndex(spark, mor, vecs,
+    val got = IvfStore.probe(spark, mor, vecs,
       "vec_id", "embedding", dims = 8, nprobe = 2, rerank = 8)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -1620,15 +1622,15 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     Seq(plain, s"${plain}_centroids", s"${plain}_codebooks",
         s"${plain}_vecs", s"${plain}_applied")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
-    SimilarityOps.writeIvfPqIndex(base, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 4, table = plain,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(4), table = plain,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_pqplainreplay").toString))
-    SimilarityOps.appendToIvfPqIndex(spark, plain, d1,
+    IvfStore.append(spark, plain, d1,
       "vec_id", "embedding", dims = 8, batchId = Some(3L))
     val (pg, pv) = (spark.table(plain).count(),
       spark.table(s"${plain}_vecs").count())
-    SimilarityOps.appendToIvfPqIndex(spark, plain, d1,
+    IvfStore.append(spark, plain, d1,
       "vec_id", "embedding", dims = 8, batchId = Some(3L))
     assert(spark.table(plain).count() === pg &&
       spark.table(s"${plain}_vecs").count() === pv,
@@ -1651,21 +1653,21 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     val t = "t_ledgerreset"
     Seq(t, s"${t}_centroids", s"${t}_applied")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
-    SimilarityOps.writeIvfIndex(base, "vec_id", "embedding",
-      dims = 8, k = 4, table = t,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Flat, k = Some(4), table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_ledgerreset").toString))
-    SimilarityOps.appendToIvfIndex(spark, t, delta,
+    IvfStore.append(spark, t, delta,
       "vec_id", "embedding", dims = 8, batchId = Some(0L))
     assert(spark.table(t).count() === 40L)
     // REBUILD: a new store — the writer restarting from batch 0 must
     // not have its backlog swallowed by the old store's ledger
-    SimilarityOps.writeIvfIndex(base, "vec_id", "embedding",
-      dims = 8, k = 4, table = t,
+    IvfStore.write(base, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Flat, k = Some(4), table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_ledgerreset2").toString))
     assert(spark.table(t).count() === 30L, "rebuild starts from base")
-    SimilarityOps.appendToIvfIndex(spark, t, delta,
+    IvfStore.append(spark, t, delta,
       "vec_id", "embedding", dims = 8, batchId = Some(0L))
     assert(spark.table(t).count() === 40L,
       "batchId 0 must LAND on the rebuilt index — stale ledger rows " +
@@ -1690,8 +1692,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
         .ExplainMode.fromString("formatted"))
     // IVF-PQ tier
     val tq = "t_sqlprune_ivfpq"
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 2, codes = 16, k = 64, table = tq,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(2, 16), k = Some(64), table = tq,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sqlprune_pq").toString))
     val dq = spark.sql(
@@ -1711,8 +1713,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
       "CREATE VIEW must not bake a parse-time In-list into stored text")
     // float tier
     val tf = "t_sqlprune_ivf"
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 8, k = 64, table = tf,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Flat, k = Some(64), table = tf,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sqlprune_f").toString))
     val df = spark.sql(
@@ -1722,8 +1724,8 @@ class OperatorSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() === 4)
     // SQ8 tier
     val ts = "t_sqlprune_sq8"
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 8, k = 64, table = ts,
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Sq8, k = Some(64), table = ts,
       location = Some(java.nio.file.Files
         .createTempDirectory("t_sqlprune_s").toString))
     val ds = spark.sql(

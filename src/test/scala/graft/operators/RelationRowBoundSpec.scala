@@ -69,6 +69,24 @@ class RelationRowBoundSpec extends AnyFunSuite with BeforeAndAfterAll {
       t100.select(explode(array(col("id"), col("id")))), 1000).isEmpty)
   }
 
+  test("the footer walk is bounded: past MaxFooters files an " +
+      "under-cap sum proves nothing, an over-cap one still proves " +
+      "itself from the first footers") {
+    // 20 files of exactly 5 rows each (range splits evenly)
+    val path = s"$dir/t20files"
+    spark.range(0L, 100L, 1L, 20).write.parquet(path)
+    val t20 = spark.read.parquet(path)
+    assert(t20.inputFiles.length === 20 &&
+      t20.inputFiles.length > RelationRowBound.MaxFooters)
+    // 16 footers read, 4 files left, 80 rows ≤ cap: unprovable
+    assert(RelationRowBound.boundedCount(t20, 1000).isEmpty)
+    assert(RelationRowBound.exceeds(t20, 90).isEmpty)
+    // over-cap within the first footers: proven without reading on
+    assert(RelationRowBound.boundedCount(t20, 10).exists(_ > 10))
+    assert(RelationRowBound.exceeds(t20, 10).contains(true))
+    assert(RelationRowBound.exceeds(t20, 79).contains(true))
+  }
+
   test("local relation counts without files") {
     import spark.implicits._
     assert(RelationRowBound.boundedCount(

@@ -153,15 +153,16 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "agrees with probeIvfIndex exactly, top-k ranks correctly, and " +
       "macro misuse fails loudly") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 4, k = 2, table = "cmd_ann_idx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Flat, k = Some(2), table = "cmd_ann_idx",
+      location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_ann_q")
     // top-1 must agree with the API probe, row for row
-    val api = SimilarityOps.probeIvfIndex(spark, "cmd_ann_idx", vecs,
+    val api = IvfStore.probe(spark, "cmd_ann_idx", vecs,
       "vec_id", "embedding", dims = 4, nprobe = 2)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -227,14 +228,15 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "equals probeIvfSq8Index row for row; rerank is required there, " +
       "forbidden on float stores, and must cover k") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 24L).map(i =>
       (i, Array.tabulate(6)(j => ((i * 11 + j * 7) % 13 - 6).toFloat / 2f)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 6, k = 3, table = "cmd_sq8_idx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 6, codec = ListCodec.Sq8, k = Some(3), table = "cmd_sq8_idx",
+      location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_sq8_q")
-    val api = SimilarityOps.probeIvfSq8Index(spark, "cmd_sq8_idx", vecs,
+    val api = IvfStore.probe(spark, "cmd_sq8_idx", vecs,
       "vec_id", "embedding", dims = 6, nprobe = 2, rerank = 5)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -264,8 +266,9 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e2.getMessage.contains("must be >= k"), e2.getMessage)
     // float store + rerank → loud
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 6, k = 3, table = "cmd_sq8_flat", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 6, codec = ListCodec.Flat, k = Some(3), table = "cmd_sq8_flat",
+      location = Some(tmp()))
     val e3 = intercept[AnalysisException] {
       spark.sql(
         "SELECT * FROM GRAFT_ANN('cmd_sq8_flat', 'cmd_sq8_q', 1, 2, 5)")
@@ -295,12 +298,13 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "at swap time), and a generation without one fails loudly " +
       "instead of silently probing the rebuilt base quantizer") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 4, k = 2, table = "cmd_tt_idx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Flat, k = Some(2), table = "cmd_tt_idx",
+      location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_tt_q")
     BucketedStores.adoptVersioned(spark, "cmd_tt_idx")
     BucketedStores.applyDeltaAtomic(spark, "cmd_tt_idx",
@@ -346,12 +350,13 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("quantizer snapshots follow the retention window: every live " +
       "generation has one, a retired generation's is dropped with it") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 3 + j * 5) % 9 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 4, k = 2, table = "cmd_ret_idx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Flat, k = Some(2), table = "cmd_ret_idx",
+      location = Some(tmp()))
     BucketedStores.adoptVersioned(spark, "cmd_ret_idx")
     def delta(vid: Long): Unit =
       BucketedStores.applyDeltaAtomic(spark, "cmd_ret_idx",
@@ -377,16 +382,16 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "probePqIndex row for row; rerank is required, nprobe is " +
       "pinned to 1 (flat ADC scan), and top-k ranks correctly") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val rnd = new scala.util.Random(31)
     val vecs = (0L until 40L).map(i =>
       (i, Array.fill(8)((rnd.nextDouble() * 4 - 2).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writePqIndex(vecs, "vec_id", "embedding",
-      dims = 8, m = 4, codes = 8, table = "cmd_pq_idx",
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 8, codec = ListCodec.Pq(4, 8), k = None, table = "cmd_pq_idx",
       location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_pq_q")
-    val api = SimilarityOps.probePqIndex(spark, "cmd_pq_idx", vecs,
+    val api = IvfStore.probe(spark, "cmd_pq_idx", vecs,
       "vec_id", "embedding", dims = 8, rerank = 6)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -431,12 +436,13 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "through a full base rebuild, and a missing snapshot of " +
       "either companion fails loudly") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfSq8Index(vecs, "vec_id", "embedding",
-      dims = 4, k = 2, table = "cmd_sq8tt_idx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Sq8, k = Some(2), table = "cmd_sq8tt_idx",
+      location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_sq8tt_q")
     BucketedStores.adoptVersioned(spark, "cmd_sq8tt_idx")
     BucketedStores.applyDeltaAtomic(spark, "cmd_sq8tt_idx",
@@ -499,12 +505,12 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a full base rebuild, and each missing snapshot fails loudly " +
       "by name") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfPqIndex(vecs, "vec_id", "embedding",
-      dims = 4, m = 2, codes = 4, k = 2, table = "cmd_pqtt_idx",
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Pq(2, 4), k = Some(2), table = "cmd_pqtt_idx",
       location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_pqtt_q")
     BucketedStores.adoptVersioned(spark, "cmd_pqtt_idx")
@@ -576,12 +582,13 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "on the stamp mismatch, the serving name fails after a base " +
       "rebuild, and a swap refuses to back-fill across the rebuild") {
     import spark.implicits._
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 5 + j * 7) % 13 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 4, k = 2, table = "cmd_stamp_idx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Flat, k = Some(2), table = "cmd_stamp_idx",
+      location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_stamp_q")
     // writer stamps lists + companion with ONE build id
     val b0 = BucketedStores.buildStamp(spark, "cmd_stamp_idx")
@@ -618,7 +625,7 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       eServe.getMessage)
     // ...and the API probe refuses identically
     val eApi = intercept[IllegalArgumentException] {
-      SimilarityOps.probeIvfIndex(spark, "cmd_stamp_idx", vecs,
+      IvfStore.probe(spark, "cmd_stamp_idx", vecs,
         "vec_id", "embedding", dims = 4, nprobe = 2)
     }
     assert(eApi.getMessage.contains("quantizer build mismatch"),
@@ -853,7 +860,7 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "— a hybrid lexical+vector retrieval joins both derived tables " +
       "through a single parse") {
     import spark.implicits._
-    import graft.operators.{SimilarityOps, TextRetrievalOps}
+    import graft.operators.{IvfStore, ListCodec, TextRetrievalOps}
     val docs = Seq(
       (0L, "spark joins spark shuffles windows"),
       (1L, "vector hash vector vector"),
@@ -865,8 +872,9 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vecs = (0L until 4L).map(i =>
       (i, Array.tabulate(4)(j => ((i * 5 + j * 3) % 7 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    SimilarityOps.writeIvfIndex(vecs, "vec_id", "embedding",
-      dims = 4, k = 2, table = "cmd_hy_vidx", location = Some(tmp()))
+    IvfStore.write(vecs, "vec_id", "embedding",
+      dims = 4, codec = ListCodec.Flat, k = Some(2), table = "cmd_hy_vidx",
+      location = Some(tmp()))
     vecs.createOrReplaceTempView("cmd_hy_q")
     // one statement, two macros: lexical hits annotated with each
     // hit's nearest vector neighbor — both rewrites splice in one

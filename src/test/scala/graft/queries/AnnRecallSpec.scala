@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions.{array_dot, array_norm}
-import graft.operators.SimilarityOps
+import graft.operators.{IvfStore, ListCodec, SimilarityOps}
 
 /** CI gate for ANN quality (VERDICT r4 #4): sim3 reports recall@1 and
   * coverage, but nothing failed if a parameter change silently degraded
@@ -88,8 +88,9 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(t, s"${t}_centroids", s"${t}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     val v = vectors.select(col("vec_id"), col("e"))
-    SimilarityOps.writeIvfSq8Index(v, "vec_id", "e", dims = 64,
-      k = 16, table = t, location = Some(java.nio.file.Files
+    IvfStore.write(v, "vec_id", "e", dims = 64,
+      codec = ListCodec.Sq8, k = Some(16), table = t,
+      location = Some(java.nio.file.Files
         .createTempDirectory("recall_sq8").toString))
     def recallOf(df: DataFrame): Double = {
       val row = df.select(col("id_a"), col("ann_id"))
@@ -101,7 +102,7 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (row.getLong(0) == 0) 0.0
       else row.getLong(1).toDouble / row.getLong(0)
     }
-    val sq8 = recallOf(SimilarityOps.probeIvfSq8Index(spark, t, v,
+    val sq8 = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, nprobe = 3, rerank = 10))
     val flat = recallOf(SimilarityOps.ivfTop1(v, "vec_id", "e",
       dims = 64, k = 16, nprobe = 3))
@@ -120,8 +121,9 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(t, s"${t}_codebooks", s"${t}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     val v = vectors.select(col("vec_id"), col("e"))
-    SimilarityOps.writePqIndex(v, "vec_id", "e", dims = 64,
-      m = 4, codes = 16, table = t, location = Some(java.nio.file.Files
+    IvfStore.write(v, "vec_id", "e", dims = 64,
+      codec = ListCodec.Pq(4, 16), k = None, table = t,
+      location = Some(java.nio.file.Files
         .createTempDirectory("recall_pq").toString))
     def recallOf(df: DataFrame): Double = {
       val row = df.select(col("id_a"), col("ann_id"))
@@ -133,11 +135,11 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (row.getLong(0) == 0) 0.0
       else row.getLong(1).toDouble / row.getLong(0)
     }
-    val narrow = recallOf(SimilarityOps.probePqIndex(spark, t, v,
+    val narrow = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, rerank = 10))
-    val wide = recallOf(SimilarityOps.probePqIndex(spark, t, v,
+    val wide = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, rerank = 100))
-    val full = recallOf(SimilarityOps.probePqIndex(spark, t, v,
+    val full = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, rerank = 4096))
     info(f"pq recall@1: rerank10=$narrow%.3f rerank100=$wide%.3f " +
       f"full=$full%.3f")
@@ -312,8 +314,8 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(t, s"${t}_centroids", s"${t}_codebooks", s"${t}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     val v = vectors.select(col("vec_id"), col("e"))
-    SimilarityOps.writeIvfPqIndex(v, "vec_id", "e", dims = 64,
-      m = 4, codes = 16, k = 16, table = t,
+    IvfStore.write(v, "vec_id", "e", dims = 64,
+      codec = ListCodec.Pq(4, 16), k = Some(16), table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory("recall_ivfpq").toString))
     def recallOf(df: DataFrame): Double = {
@@ -326,11 +328,11 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (row.getLong(0) == 0) 0.0
       else row.getLong(1).toDouble / row.getLong(0)
     }
-    val narrow = recallOf(SimilarityOps.probeIvfPqIndex(spark, t, v,
+    val narrow = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, nprobe = 3, rerank = 10))
-    val wide = recallOf(SimilarityOps.probeIvfPqIndex(spark, t, v,
+    val wide = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, nprobe = 3, rerank = 100))
-    val full = recallOf(SimilarityOps.probeIvfPqIndex(spark, t, v,
+    val full = recallOf(IvfStore.probe(spark, t, v,
       "vec_id", "e", dims = 64, nprobe = 3, rerank = 4096))
     val flat = recallOf(SimilarityOps.ivfTop1(v, "vec_id", "e",
       dims = 64, k = 16, nprobe = 3))
@@ -379,11 +381,12 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = "recall_pqclu_idx"
     Seq(t, s"${t}_codebooks", s"${t}_vecs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
-    SimilarityOps.writePqIndex(v, "vec_id", "e", dims = dims,
-      m = 4, codes = 32, table = t, location = Some(java.nio.file.Files
+    IvfStore.write(v, "vec_id", "e", dims = dims,
+      codec = ListCodec.Pq(4, 32), k = None, table = t,
+      location = Some(java.nio.file.Files
         .createTempDirectory("recall_pqclu").toString))
     def recallAt(rr: Int): Double = {
-      val row = SimilarityOps.probePqIndex(spark, t, v, "vec_id", "e",
+      val row = IvfStore.probe(spark, t, v, "vec_id", "e",
         dims = dims, rerank = rr)
         .select(col("id_a"), col("ann_id"))
         .join(exactDf, "id_a")
@@ -483,12 +486,12 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(t, s"${t}_centroids", s"${t}_codebooks", s"${t}_vecs")
         .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     }
-    SimilarityOps.writeIvfPqIndex(v, "vec_id", "e", dims = dims,
-      m = 4, codes = 32, k = 16, table = t0,
+    IvfStore.write(v, "vec_id", "e", dims = dims,
+      codec = ListCodec.Pq(4, 32), k = Some(16), table = t0,
       location = Some(java.nio.file.Files
         .createTempDirectory("recall_pqf").toString))
-    SimilarityOps.writeIvfPqIndex(v, "vec_id", "e", dims = dims,
-      m = 4, codes = 32, k = 16, table = t1,
+    IvfStore.write(v, "vec_id", "e", dims = dims,
+      codec = ListCodec.Pq(4, 32), k = Some(16), table = t1,
       location = Some(java.nio.file.Files
         .createTempDirectory("recall_pqt").toString), trainIters = 2)
     def skewOf(t: String): (Double, Int) = {
@@ -509,7 +512,7 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
     // engine surface, itself DuckDB-oracled): same deterministic
     // trainer, same probe rule, exact cosine decides — the stored
     // trained quantizer changes WHICH lists exist, never the answer
-    val stored = SimilarityOps.probeIvfPqIndex(spark, t1, v,
+    val stored = IvfStore.probe(spark, t1, v,
       "vec_id", "e", dims = dims, nprobe = 3, rerank = 2048)
       .orderBy(col("id_a")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

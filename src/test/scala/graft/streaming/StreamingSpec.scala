@@ -452,7 +452,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "provably absorbs — final answer equals the uninterrupted run") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, max, min}
-    import graft.operators.SimilarityOps
+    import graft.operators.{IvfStore, ListCodec}
     val vecs = graft.queries.Tables.embeddings(spark, dir)
     // uninterrupted streamed build (the registered st15 path)
     val expected = VectorStreaming.ivfIngestStream(spark, vecs,
@@ -465,8 +465,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = vecs.filter(col("vec_id") < cut)
     val delta = vecs.filter(col("vec_id") >= cut)
     val table = "graft_spec_st15_resume"
-    SimilarityOps.writeIvfIndex(base, "vec_id", "embedding", dims = 64,
-      k = 16, table = table,
+    IvfStore.write(base, "vec_id", "embedding", dims = 64,
+      codec = ListCodec.Flat, k = Some(16), table = table,
       location = Some(Files.createTempDirectory("st15_loc").toString))
     val fullStage = DocumentsStreaming.stageIdSlices(delta, 4, "vec_id")
     val files = Files.list(Paths.get(fullStage)).iterator()
@@ -500,7 +500,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nIndexed > nVecs,
       s"redelivered slice must duplicate index rows: $nIndexed <= $nVecs")
     // ... and the probe's per-query MAX-collapse absorbs it exactly
-    val got = SimilarityOps.probeIvfIndex(spark, table, vecs,
+    val got = IvfStore.probe(spark, table, vecs,
       "vec_id", "embedding", dims = 64, nprobe = 3)
       .orderBy(col("id_a")).collect().toSeq
     spark.sql(s"DROP TABLE IF EXISTS $table")

@@ -32,8 +32,9 @@ object IvfPqDiag {
     val corpus = spark.read.parquet(path)
     val k = math.min(1024, 16 * math.sqrt(scale.toDouble)).toInt.max(16)
     val t = s"ivfpqdiag_idx_$scale"
-    graft.operators.SimilarityOps.writeIvfPqIndex(corpus, "vec_id",
-      "embedding", dims = 64, m = 4, codes = 16, k = k, table = t,
+    graft.operators.IvfStore.write(corpus, "vec_id",
+      "embedding", dims = 64, codec = graft.operators.ListCodec.Pq(4, 16),
+      k = Some(k), table = t,
       location = Some(java.nio.file.Files
         .createTempDirectory(s"ivfpqdiag_i$scale").toString))
 
@@ -97,8 +98,8 @@ object IvfPqDiag {
       jobs.clear(); starts.clear(); ntasks.clear(); hist.clear()
       sampling = true
       val t0 = System.nanoTime()
-      val n = graft.operators.SimilarityOps
-        .probeIvfPqIndex(spark, t, queries, "vec_id", "embedding",
+      val n = graft.operators.IvfStore
+        .probe(spark, t, queries, "vec_id", "embedding",
           dims = 64, nprobe = 3, rerank = rr).count()
       val tot = (System.nanoTime() - t0) / 1e9
       sampling = false

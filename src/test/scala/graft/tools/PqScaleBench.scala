@@ -82,30 +82,33 @@ object PqScaleBench {
       // codebook training actually cost per ingested vector — the
       // number that decides whether a pq_encode kernel is warranted
       val tBuildFlat = time {
-        graft.operators.SimilarityOps.writePqIndex(corpus, "vec_id",
-          "embedding", dims = 64, m = 4, codes = 16, table = flat,
+        graft.operators.IvfStore.write(corpus, "vec_id",
+          "embedding", dims = 64, codec = graft.operators.ListCodec.Pq(4, 16),
+          k = None, table = flat,
           location = Some(java.nio.file.Files
             .createTempDirectory(s"pqscale_f$scale").toString)); 0L
       }
       val tBuildIvf = time {
-        graft.operators.SimilarityOps.writeIvfPqIndex(corpus, "vec_id",
-          "embedding", dims = 64, m = 4, codes = 16, k = k, table = ivf,
+        graft.operators.IvfStore.write(corpus, "vec_id",
+          "embedding", dims = 64, codec = graft.operators.ListCodec.Pq(4, 16),
+          k = Some(k), table = ivf,
           location = Some(java.nio.file.Files
             .createTempDirectory(s"pqscale_i$scale").toString)); 0L
       }
       val tBuildFloatIvf = time {
-        graft.operators.SimilarityOps.writeIvfIndex(corpus, "vec_id",
-          "embedding", dims = 64, k = k, table = fivf,
+        graft.operators.IvfStore.write(corpus, "vec_id",
+          "embedding", dims = 64, codec = graft.operators.ListCodec.Flat,
+          k = Some(k), table = fivf,
           location = Some(java.nio.file.Files
             .createTempDirectory(s"pqscale_fi$scale").toString)); 0L
       }
       spark.sql(s"DROP TABLE IF EXISTS $fivf")
       spark.sql(s"DROP TABLE IF EXISTS ${fivf}_centroids")
-      def probeFlat(rr: Int): Long = graft.operators.SimilarityOps
-        .probePqIndex(spark, flat, queries, "vec_id", "embedding",
+      def probeFlat(rr: Int): Long = graft.operators.IvfStore
+        .probe(spark, flat, queries, "vec_id", "embedding",
           dims = 64, rerank = rr).count()
-      def probeIvf(rr: Int): Long = graft.operators.SimilarityOps
-        .probeIvfPqIndex(spark, ivf, queries, "vec_id", "embedding",
+      def probeIvf(rr: Int): Long = graft.operators.IvfStore
+        .probe(spark, ivf, queries, "vec_id", "embedding",
           dims = 64, nprobe = 3, rerank = rr).count()
       probeFlat(10); probeIvf(10) // warm-up (JIT + catalog)
       probeFlat(1); probeIvf(1)

@@ -22,8 +22,9 @@ object Sq8Diag {
           x => x + (col("r") % 97).cast("float") * lit(0.001f))
           .as("embedding"))
     val sq8 = "sq8diag_idx"
-    graft.operators.SimilarityOps.writeIvfSq8Index(corpus, "vec_id",
-      "embedding", dims = 64, k = 16, table = sq8,
+    graft.operators.IvfStore.write(corpus, "vec_id",
+      "embedding", dims = 64, codec = graft.operators.ListCodec.Sq8,
+      k = Some(16), table = sq8,
       location = Some(java.nio.file.Files
         .createTempDirectory(s"sq8diag").toString))
     val queries = base.filter(col("vec_id") < 64)
@@ -34,8 +35,8 @@ object Sq8Diag {
     }
     // full probe (gather on) — 3 reps, first is JIT-cold
     (1 to 3).foreach(i => time(s"probe_full_$i")(
-      graft.operators.SimilarityOps
-        .probeIvfSq8Index(spark, sq8, queries, "vec_id", "embedding",
+      graft.operators.IvfStore
+        .probe(spark, sq8, queries, "vec_id", "embedding",
           dims = 64, nprobe = 3, rerank = 10).count()))
     // pieces: candidate scan only (no window)
     val cents = spark.table(sq8 + "_centroids")

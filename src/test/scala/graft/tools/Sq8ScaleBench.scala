@@ -90,19 +90,21 @@ object Sq8ScaleBench {
         .max(16)
       val flat = s"sq8scale_flat_$scale"
       val sq8 = s"sq8scale_sq8_$scale"
-      graft.operators.SimilarityOps.writeIvfIndex(corpus, "vec_id",
-        "embedding", dims = 64, k = k, table = flat,
+      graft.operators.IvfStore.write(corpus, "vec_id",
+        "embedding", dims = 64, codec = graft.operators.ListCodec.Flat,
+        k = Some(k), table = flat,
         location = Some(java.nio.file.Files
           .createTempDirectory(s"sq8scale_f$scale").toString))
-      graft.operators.SimilarityOps.writeIvfSq8Index(corpus, "vec_id",
-        "embedding", dims = 64, k = k, table = sq8,
+      graft.operators.IvfStore.write(corpus, "vec_id",
+        "embedding", dims = 64, codec = graft.operators.ListCodec.Sq8,
+        k = Some(k), table = sq8,
         location = Some(java.nio.file.Files
           .createTempDirectory(s"sq8scale_q$scale").toString))
-      def probeFlat(): Long = graft.operators.SimilarityOps
-        .probeIvfIndex(spark, flat, queries, "vec_id", "embedding",
+      def probeFlat(): Long = graft.operators.IvfStore
+        .probe(spark, flat, queries, "vec_id", "embedding",
           dims = 64, nprobe = 3).count()
-      def probeSq8(): Long = graft.operators.SimilarityOps
-        .probeIvfSq8Index(spark, sq8, queries, "vec_id", "embedding",
+      def probeSq8(): Long = graft.operators.IvfStore
+        .probe(spark, sq8, queries, "vec_id", "embedding",
           dims = 64, nprobe = 3, rerank = 10).count()
       // warm regime: one untimed warm-up, then min-of-reps
       probeFlat(); probeSq8()

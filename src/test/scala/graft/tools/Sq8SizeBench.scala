@@ -18,12 +18,14 @@ object Sq8SizeBench {
     val vecs = graft.queries.Tables.embeddings(spark, sfDir)
     val flat = "sq8bench_flat"
     val sq8 = "sq8bench_sq8"
-    graft.operators.SimilarityOps.writeIvfIndex(vecs, "vec_id",
-      "embedding", dims = 64, k = 16, table = flat,
+    graft.operators.IvfStore.write(vecs, "vec_id",
+      "embedding", dims = 64, codec = graft.operators.ListCodec.Flat,
+      k = Some(16), table = flat,
       location = Some(java.nio.file.Files
         .createTempDirectory("sq8bench_flat").toString))
-    graft.operators.SimilarityOps.writeIvfSq8Index(vecs, "vec_id",
-      "embedding", dims = 64, k = 16, table = sq8,
+    graft.operators.IvfStore.write(vecs, "vec_id",
+      "embedding", dims = 64, codec = graft.operators.ListCodec.Sq8,
+      k = Some(16), table = sq8,
       location = Some(java.nio.file.Files
         .createTempDirectory("sq8bench_sq8").toString))
     def bytesOf(t: String): Long = {
@@ -37,11 +39,11 @@ object Sq8SizeBench {
     def time(f: => Long): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    def probeFlat(): Long = graft.operators.SimilarityOps
-      .probeIvfIndex(spark, flat, vecs, "vec_id", "embedding",
+    def probeFlat(): Long = graft.operators.IvfStore
+      .probe(spark, flat, vecs, "vec_id", "embedding",
         dims = 64, nprobe = 3).count()
-    def probeSq8(): Long = graft.operators.SimilarityOps
-      .probeIvfSq8Index(spark, sq8, vecs, "vec_id", "embedding",
+    def probeSq8(): Long = graft.operators.IvfStore
+      .probe(spark, sq8, vecs, "vec_id", "embedding",
         dims = 64, nprobe = 3, rerank = 10).count()
     probeFlat(); probeSq8() // warm
     val tf = (1 to 3).map(_ => time(probeFlat())).min

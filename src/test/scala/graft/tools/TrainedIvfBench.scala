@@ -68,15 +68,16 @@ object TrainedIvfBench {
     Seq(0, 2).foreach { iters =>
       val t = s"tivf_idx_$iters"
       val tBuild = time {
-        graft.operators.SimilarityOps.writeIvfPqIndex(corpus, "vec_id",
-          "e", dims = dims, m = 4, codes = 32, k = k, table = t,
+        graft.operators.IvfStore.write(corpus, "vec_id",
+          "e", dims = dims, codec = graft.operators.ListCodec.Pq(4, 32),
+          k = Some(k), table = t,
           location = Some(java.nio.file.Files
             .createTempDirectory(s"tivf_$iters").toString),
           trainIters = iters); 0L
       }
       val (skew, lists, maxList) = skewOf(t)
-      def probe(): Long = graft.operators.SimilarityOps
-        .probeIvfPqIndex(spark, t, queries, "vec_id", "e",
+      def probe(): Long = graft.operators.IvfStore
+        .probe(spark, t, queries, "vec_id", "e",
           dims = dims, nprobe = 3, rerank = 10).count()
       probe() // warm-up
       val tP = (1 to reps).map(_ => time(probe())).min
