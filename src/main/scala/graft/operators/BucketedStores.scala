@@ -467,13 +467,23 @@ object BucketedStores extends org.apache.spark.internal.Logging {
     */
   def dropVersioned(spark: SparkSession, name: String): Unit = {
     SketchStats.dropStats(spark, name)
-    spark.sql(s"DROP VIEW IF EXISTS $name")
-    spark.sql(s"DROP TABLE IF EXISTS $name")
+    // DROP VIEW on a plain table throws WRONG_COMMAND_FOR_OBJECT_TYPE
+    spark.sql(s"DROP ${if (isView(spark, name)) "VIEW" else "TABLE"} " +
+      s"IF EXISTS $name")
     spark.catalog.listTables().collect().map(_.name)
       .filter(t => t.startsWith(name + "__v") ||
         t.matches(java.util.regex.Pattern.quote(name) + "__t\\d+"))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
+
+  /** True when the catalog holds `table` as a persistent view. */
+  private[operators] def isView(spark: SparkSession,
+      table: String): Boolean =
+    scala.util.Try(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst
+        .TableIdentifier(table)).tableType ==
+      org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
+      .getOrElse(false)
 
   // ---- MERGE-ON-READ maintenance ------------------------------------
   //

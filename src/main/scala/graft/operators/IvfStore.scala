@@ -112,13 +112,6 @@ object IvfStore {
   private def isGeneration(table: String): Boolean =
     "(.+)__v\\d+$".r.findFirstMatchIn(table).isDefined
 
-  private def isView(spark: SparkSession, table: String): Boolean =
-    scala.util.Try(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst
-        .TableIdentifier(table)).tableType ==
-      org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-      .getOrElse(false)
-
   /** Resolve a stored index for serving or maintenance: its layout,
     * every companion the layout needs, and their lineage. A retained
     * generation (`name__v<N>`) whose snapshots are missing fails by
@@ -167,7 +160,7 @@ object IvfStore {
     // a plain table short-circuits: currentGeneration's catalog listing
     // is a per-call query, too slow for the hot serving path
     val lists =
-      if (isView(spark, table))
+      if (BucketedStores.isView(spark, table))
         scala.util.Try(
           BucketedStores.currentGeneration(spark, table)).getOrElse(table)
       else table
@@ -484,7 +477,7 @@ object IvfStore {
         "refuses to mutate time-travel history. Append to the serving " +
         "name's plain store (or via IvfStore.morAppend for a " +
         "merge-on-read store); retained generations stay immutable.")
-    require(!isView(spark, table),
+    require(!BucketedStores.isView(spark, table),
       s"$table is a versioned serving VIEW — IvfStore.append appends " +
         "to plain stores only. For a merge-on-read store use " +
         "IvfStore.morAppend (BucketedStores.morAppend underneath; " +

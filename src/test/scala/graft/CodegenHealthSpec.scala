@@ -4,9 +4,14 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.Registry
+import graft.wod.{CastRender, Geohash, WodPipeline}
 
 /** Codegen health gate. Round 17's audit found that
   * `BkSampleQuantile.doGenCode` emitted a hard-coded local variable
@@ -25,7 +30,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     compile error is a test failure, not a log line;
   *  2. a source scan asserts the set of `doGenCode` implementors
   *     equals the set this suite covers, so the NEXT kernel cannot
-  *     land without joining the dual-evaluation gate.
+  *     land without joining the dual-evaluation gate;
+  *  3. a repeated pass of the serving mix recompiles none of its
+  *     code: the compiled-class cache
+  *     ([[GraftSession.CodegenCacheEntries]]) holds every class one
+  *     pass generates.
   */
 class CodegenHealthSpec extends AnyFunSuite {
 
@@ -71,10 +80,7 @@ class CodegenHealthSpec extends AnyFunSuite {
     SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = GraftSession.builder("local[2]", 2)
       .config("spark.sql.codegen.fallback", "false")
       .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
       .getOrCreate()
@@ -230,6 +236,153 @@ class CodegenHealthSpec extends AnyFunSuite {
             B.expression(lit(1.5)), Array(1.0, 2.0))).as("v"))
         .head()
       assert(qb.getInt(0) === 1 && qb.getInt(1) === 1)
+    } finally spark.stop()
+  }
+
+  /** (compiles, generated classes, compile ms) since JVM start. */
+  private def codegenCounters: (Long, Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount,
+      CodeGenerator.compileTime / 1e6)
+
+  /** Spark's JVM-wide compiled-class cache, a guava cache keyed by
+    * (class loader, source); Spark gives it no public accessor.
+    */
+  private def compiledClassCache: java.util.Map[AnyRef, AnyRef] = {
+    val m = CodeGenerator.getClass.getDeclaredMethod("cache")
+    m.setAccessible(true)
+    val cache = m.invoke(CodeGenerator)
+    cache.getClass.getMethod("cache").invoke(cache)
+      .asInstanceOf[org.sparkproject.guava.cache.Cache[AnyRef, AnyRef]]
+      .asMap()
+  }
+
+  /** `body`'s result and the source of every class compiled while it
+    * runs: CodeGenerator logs each source at DEBUG before compiling it.
+    */
+  private def withCompiledSources[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = CodeGenerator.getClass.getName.stripSuffix("$")
+    val sources = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("compiled-sources", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("/* 001 */")) sources.add(m)
+      }
+    }
+    capture.start()
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.DEBUG)
+    logger.addAppender(capture)
+    logger.setAdditive(false)
+    try (body, sources.asScala.toSeq)
+    finally {
+      logger.removeAppender(capture)
+      logger.setAdditive(true)
+      Configurator.setLevel(name, level)
+      capture.stop()
+    }
+  }
+
+  test("the compiled-class cache keeps a whole serving pass, and a " +
+      "repeat recompiles none of it") {
+    SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .foreach(_.stop())
+    val spark = GraftSession.builder("local[2]", 2)
+      // log whole sources, so two sources compare in full
+      .config("spark.sql.codegen.logging.maxLines", "-1")
+      .getOrCreate()
+    val tmp = Files.createTempDirectory("graft_codegen_cache")
+    try {
+      // 40 one-level casts in two members
+      val in = tmp.resolve("in")
+      Seq("CTDO1.gz" -> (1 to 20), "CTDO2.gz" -> (21 to 40)).foreach {
+        case (file, casts) =>
+          val p = in.resolve(s"CTD/OBS/$file")
+          Files.createDirectories(p.getParent)
+          val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
+          try casts.foreach(n =>
+            gz.write(CastRender.oneLevel(n).getBytes("US-ASCII")))
+          finally gz.close()
+      }
+      val out = tmp.resolve("out").toString
+      WodPipeline.convertBulk(spark, WodPipeline.Config(input = in.toString,
+        output = out, datasets = Seq("CTD")))
+      val prefix = {
+        val (lat, lon) = CastRender.position(1)
+        Geohash.encode(CastRender.value(lat, 3), CastRender.value(lon, 3))
+          .take(4)
+      }
+
+      val dir = "/root/testdata/sf0.001"
+      val queries = Seq("q1_pricing_summary", "q40_sketch_planned_join",
+        "em1_knn_top1", "sim4_ivf_ann_top1", "sim20_ivf_pq_stored_top1",
+        "sim24_ivfpq_bounded_rerank").map(Registry.byName)
+      val actions: Seq[(String, () => Int)] =
+        queries.map(q => q.name -> (() => q.fn(spark, dir).collect().length)) ++
+        Seq(
+          "wod_full" -> (() => spark.read.format("wod").load(in.toString)
+            .collect().length),
+          "wod_projected" -> (() => spark.read.format("wod")
+            .load(in.toString).select("castNumber", "geohash3")
+            .collect().length),
+          "geohash_prefix" -> (() => spark.read.parquet(s"$out/bulk/casts")
+            .filter(col("geohash").like(prefix + "%"))
+            .select("castNumber", "geohash").collect().length))
+      case class Run(name: String, rows: Int, compiles: Long,
+          classes: Long, compileMs: Double, sources: Seq[String])
+      def pass(): Seq[Run] = actions.map { case (name, run) =>
+        val (c0, k0, t0) = codegenCounters
+        val (rows, sources) = withCompiledSources(run())
+        val (c1, k1, t1) = codegenCounters
+        Run(name, rows, c1 - c0, k1 - k0, t1 - t0, sources)
+      }
+
+      pass() // builds the stored indexes the sim queries serve from
+      compiledClassCache.clear()
+      val first = pass()
+      val kept = new java.util.HashSet[AnyRef](compiledClassCache.keySet)
+      val second = pass()
+      assert(first.forall(_.rows > 0), s"every action returns rows: $first")
+      assert(second.map(_.rows) === first.map(_.rows))
+
+      // from an empty cache, one pass compiles each source it needs once
+      val needed = first.map(_.compiles).sum
+      assert(needed > 100, "one pass must need more compiled classes " +
+        s"than Spark's default cache holds (100), got $needed")
+      assert(kept.size === needed, "the cache must keep every source " +
+        s"one pass compiles: $needed compiled, ${kept.size} kept")
+      assert(compiledClassCache.keySet.containsAll(kept),
+        "the repeat pass evicted first-pass classes")
+
+      // a repeat compiles no first-pass source again. What it may
+      // compile is source no first-pass source equals: Spark names a
+      // LIMIT's counter field from a JVM-wide sequence
+      // (`_limit_counter_<n>`), AQE numbers whole-stage ids in
+      // stage-creation order, which varies with timing, and now and
+      // then plans a variant the first pass did not run. The count
+      // varies between runs, so it is not pinned.
+      val firstSources = first.flatMap(_.sources).toSet
+      for (r <- second) {
+        assert(r.compiles === r.sources.size,
+          s"${r.name}: ${r.compiles} compiles, ${r.sources.size} captured")
+        if (r.sources.isEmpty)
+          assert((r.classes, r.compileMs) === ((0L, 0.0)), r.name)
+        assert(!r.sources.exists(firstSources),
+          s"${r.name} compiled a first-pass source again")
+      }
+      // pinned: the stored IVF-PQ probes' regime job
+      // (IvfStore.probeRegime) has a LIMIT, so its stage compiles on
+      // every action; no other action plans a LIMIT
+      assert(second.filter(_.sources.exists(_.contains("_limit_counter_")))
+        .map(_.name) === Seq("sim20_ivf_pq_stored_top1",
+          "sim24_ivfpq_bounded_rerank"))
     } finally spark.stop()
   }
 }

@@ -6,17 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("SQL users reach the graft kernels via spark.sql.extensions") {
-    // getOrCreate would hand back another suite's live session, which
-    // was built WITHOUT the extensions — force a fresh context (later
+    // getOrCreate would hand back another suite's live session — force
+    // a fresh context whose extensions come from this builder (later
     // suites lazily getOrCreate their own again)
     SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[2]", 2).getOrCreate()
     try {
       val row = spark.sql(
         """SELECT array_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dot,

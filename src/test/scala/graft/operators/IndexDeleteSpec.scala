@@ -221,6 +221,25 @@ class IndexDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     BucketedStores.dropVersioned(spark, t)
   }
 
+  test("dropVersioned removes a plain table and a versioned store " +
+      "without error") {
+    def write(t: String): Unit = documents.limit(20).select(col("doc_id"))
+      .write.option("path", java.nio.file.Files
+        .createTempDirectory(s"graft_drop_$t").toString)
+      .saveAsTable(t)
+    val plain = "idxdel_drop_plain"
+    val versioned = "idxdel_drop_versioned"
+    Seq(plain, versioned).foreach(BucketedStores.dropVersioned(spark, _))
+    write(plain)
+    write(versioned)
+    BucketedStores.adoptVersioned(spark, versioned)
+    assert(spark.catalog.getTable(versioned).tableType === "VIEW")
+    Seq(plain, versioned).foreach(BucketedStores.dropVersioned(spark, _))
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("idxdel_drop_"))
+    assert(left.isEmpty, s"left behind: ${left.mkString(", ")}")
+  }
+
   test("MoR as-of-seq read reproduces the state after each committed " +
       "batch, within the compaction era") {
     import org.apache.spark.sql.functions.lit

@@ -43,10 +43,8 @@ class IvfCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createTempDirectory("graft_codec").toString
 
   private def drop(t: String): Unit = {
-    if (spark.catalog.tableExists(t) &&
-        spark.catalog.getTable(t).tableType == "VIEW")
-      BucketedStores.dropVersioned(spark, t)
-    (Seq(t, s"${t}_applied") ++ IvfStore.Companions.map(t + _.suffix))
+    BucketedStores.dropVersioned(spark, t)
+    (s"${t}_applied" +: IvfStore.Companions.map(t + _.suffix))
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
   }
 

@@ -122,4 +122,21 @@ object CastRender {
     val rec = "C" + intF(total) + bodyStr
     rec + (" " * ((80 - rec.length % 80) % 80))
   }
+
+  /** The position of [[oneLevel]] cast `n`: (lat, lon) in thousandths
+    * of a degree, spread over many geohash cells.
+    */
+  def position(n: Int): (Long, Long) =
+    (-60000L + n * 7919L % 120000, -170000L + n * 15485L % 340000)
+
+  /** A valid one-level cast; `n` sets its number and position. */
+  def oneLevel(n: Int, located: Boolean = true): String = {
+    val (lat, lon) = position(n)
+    val c = AsciiCast(n, "US", 77, 1999, 6, 15, None,
+      Option.when(located)(value(lat, 3)), Option.when(located)(value(lon, 3)),
+      1, 0, Seq(AsciiVariable(7, 0, Nil)), None, None, Nil, Nil, Nil, Nil,
+      Seq(AsciiLevel(Some(123.4), 0, 0, Seq(AsciiMeasurement(7, 21.0, 0, 0)))))
+    render(c, Map("lat" -> (lat, 3), "lon" -> (lon, 3),
+      "dep_0" -> (1234L, 1), "val_0_7" -> (2100L, 2)))
+  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import CastRender.{render, value}
+import CastRender.{oneLevel => cast}
 
 /** The one WOD reader's error contract on rendered gzip members, through
   * SQL (`spark.read.format("wod")`), [[WodPipeline.run]] and
@@ -28,17 +28,6 @@ class WodErrorChannelSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def in = tmp.resolve("in")
   private def member(rel: String): String = in.resolve(rel).toString
   private def qualified(rel: String): String = "file:" + member(rel)
-
-  /** A valid one-level cast; `n` sets its number and position. */
-  private def cast(n: Int, located: Boolean = true): String = {
-    val (lat, lon) = (-60000L + n * 7919L % 120000, -170000L + n * 15485L % 340000)
-    val c = AsciiCast(n, "US", 77, 1999, 6, 15, None,
-      Option.when(located)(value(lat, 3)), Option.when(located)(value(lon, 3)),
-      1, 0, Seq(AsciiVariable(7, 0, Nil)), None, None, Nil, Nil, Nil, Nil,
-      Seq(AsciiLevel(Some(123.4), 0, 0, Seq(AsciiMeasurement(7, 21.0, 0, 0)))))
-    render(c, Map("lat" -> (lat, 3), "lon" -> (lon, 3),
-      "dep_0" -> (1234L, 1), "val_0_7" -> (2100L, 2)))
-  }
 
   /** gzip with a sync flush after each record; returns the member and
     * the compressed length after each record.
