@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.{FileNotFoundException, IOException, InputStream, Reader}
 import java.util
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.GZIPInputStream
 
 import scala.jdk.CollectionConverters._
@@ -9,9 +10,10 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -39,6 +41,20 @@ import graft.wod.{AsciiCast, Cast, CastError, CastParser, Transform => WodTransf
   * one per unreadable or damaged member, with every cast column null.
   * A scan that does not reference `_error` returns exactly the valid
   * casts.
+  *
+  * A scan pays its set-up once, not once per member or per planning
+  * pass:
+  *  - the files are listed once per scan ([[WodScan]]), though physical
+  *    planning and AQE re-planning each ask for the partitions;
+  *  - the Hadoop conf ships to the executors as one broadcast;
+  *  - readers borrow compiled `Cast` serializers from a JVM-wide pool
+  *    instead of generating one per member;
+  *  - a reader's row is a view of the serializer's row and the metadata
+  *    columns, not a per-reader projection: Spark puts a `ProjectExec`
+  *    on every row-based v2 scan, codegen'd once per query, and that
+  *    node makes the one `UnsafeRow` copy.
+  * The work left per member is gunzip, parse, transform and one row
+  * conversion.
   */
 class WodDataSource extends TableProvider with DataSourceRegister {
 
@@ -64,6 +80,22 @@ object WodDataSource {
   val fullSchema: StructType = castSchema
     .add(SourceFileColumn, StringType)
     .add(ErrorColumn, ExpressionEncoder[CastError]().schema)
+
+  /** Compiled `Cast` serializers not in use. `createSerializer`
+    * generates the serializer's Java source again on every call (about
+    * 20 ms, before the compiled-class cache is consulted), so a reader
+    * borrows one here and gives it back when its member is exhausted or
+    * it closes. The queue never holds more serializers than the JVM has
+    * had readers open at once. Not a `ThreadLocal`: one thread may have
+    * two readers open.
+    */
+  private[graft] val serializers =
+    new ConcurrentLinkedQueue[ExpressionEncoder.Serializer[Cast]]()
+
+  private[sources] def borrowSerializer(): ExpressionEncoder.Serializer[Cast] = {
+    val s = serializers.poll()
+    if (s != null) s else castEncoder.createSerializer()
+  }
 }
 
 final class WodTable(properties: Map[String, String])
@@ -121,17 +153,18 @@ final class WodScan(options: CaseInsensitiveStringMap,
   /** One partition per .gz file under the load path(s), named by its
     * fully qualified path — driver-side metadata listing only. Paths
     * may be globs; `load(a, b)` arrives as a JSON array in `paths`.
+    * Listed once: physical planning and AQE re-planning both call
+    * `planInputPartitions` on this scan, and a new action builds a new
+    * scan, so the listing never outlives its action.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
+  private lazy val partitions: Array[InputPartition] = {
     val paths = Option(options.get("paths"))
       .map(new ObjectMapper().readValue(_, classOf[Array[String]]).toSeq)
       .getOrElse(Seq.empty) ++ Option(options.get("path"))
     require(paths.nonEmpty, "wod source requires a load path")
     val files = paths.flatMap { p =>
       val path = new Path(p)
-      val fs = path.getFileSystem(conf)
+      val fs = path.getFileSystem(hadoopConf)
       val matched = Option(fs.globStatus(path)).getOrElse(Array.empty)
       if (matched.isEmpty) throw new FileNotFoundException(
         s"wod source: path does not exist: $p")
@@ -151,25 +184,34 @@ final class WodScan(options: CaseInsensitiveStringMap,
     files.sorted.map(f => WodInputPartition(f): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    WodReaderFactory(conf, required)
-  }
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** One broadcast Hadoop conf per scan (Spark's `FileScan` idiom), not
+    * one serialized copy per task.
+    */
+  private lazy val readerFactory = WodReaderFactory(
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(
+      new SerializableConfiguration(hadoopConf)), required)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  private def hadoopConf: Configuration =
+    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 }
 
 final case class WodInputPartition(file: String) extends InputPartition
 
-final case class WodReaderFactory(conf: SerializableConfiguration,
+final case class WodReaderFactory(conf: Broadcast[SerializableConfiguration],
     required: StructType) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new WodPartitionReader(p.asInstanceOf[WodInputPartition].file, conf.value,
-      required)
+    new WodPartitionReader(p.asInstanceOf[WodInputPartition].file,
+      conf.value.value, required)
 }
 
-/** Streams one gzip member: parse → transform → serialize (pruned to
-  * the required columns), constant memory, no driver involvement. The
-  * only place the engine opens, gunzips and parses a WOD member.
+/** Streams one gzip member: parse → transform → serialize, emitted as
+  * a view of the required columns; constant memory, no driver
+  * involvement. The only place the engine opens, gunzips and parses a
+  * WOD member. The row `get` returns is reused by the next `next`.
   */
 final class WodPartitionReader(file: String, conf: Configuration,
     required: StructType)
@@ -186,17 +228,17 @@ final class WodPartitionReader(file: String, conf: Configuration,
   // cast (levels × vars objects); at corpus scale that is most of the
   // transform work.
   private val skipProfile = !required.fieldNames.contains("depths")
-  private val serializer = castEncoder.createSerializer()
-  private val castOnly = required.fieldNames.sameElements(castSchema.fieldNames)
-  private lazy val project = UnsafeProjection.create(
-    required.fieldNames.toIndexedSeq.map { name =>
-      val i = fullSchema.fieldIndex(name)
-      BoundReference(i, fullSchema(i).dataType, nullable = true)
-    })
+  // borrowed on the first `next`, given back exactly once: when the
+  // member is exhausted or on `close`, whichever comes first (under
+  // `coalesce` a task closes its readers only when it ends)
+  private var serializer: ExpressionEncoder.Serializer[Cast] = _
   private val nullCast = new GenericInternalRow(castSchema.length)
   private val meta = new GenericInternalRow(
     Array[Any](UTF8String.fromString(file), null))
   private val joined = new JoinedRow
+  private val view = ProjectingInternalRow(required,
+    required.fieldNames.toIndexedSeq.map(fullSchema.fieldIndex))
+  view.project(joined)
 
   private var in: Reader = _
   private var parsed: Iterator[Either[CastError, AsciiCast]] = _
@@ -213,9 +255,16 @@ final class WodPartitionReader(file: String, conf: Configuration,
     in
   }
 
-  private def row(cast: InternalRow, error: InternalRow): InternalRow =
-    if (castOnly) cast
-    else { meta.update(1, error); project(joined(cast, meta)) }
+  private def row(cast: InternalRow, error: InternalRow): InternalRow = {
+    meta.update(1, error)
+    joined(cast, meta)
+    view
+  }
+
+  private def release(): Unit = if (serializer != null) {
+    serializers.offer(serializer)
+    serializer = null
+  }
 
   private def fail(err: CastError): Unit =
     if (keepErrors) current = row(nullCast, InternalRow(
@@ -226,7 +275,10 @@ final class WodPartitionReader(file: String, conf: Configuration,
     current = null
     while (current == null && !done)
       try {
-        if (parsed == null) parsed = CastParser.casts(open(), dataset, skipProfile)
+        if (parsed == null) {
+          serializer = borrowSerializer()
+          parsed = CastParser.casts(open(), dataset, skipProfile)
+        }
         if (!parsed.hasNext) done = true
         else parsed.next() match {
           case Right(ascii) => WodTransform.toCast(dataset, ascii) match {
@@ -244,12 +296,16 @@ final class WodPartitionReader(file: String, conf: Configuration,
           done = true
           fail(CastError(dataset, -1, s"unreadable member $file: $e"))
       }
+    if (done) release()
     current != null
   }
 
   override def get(): InternalRow = current
 
-  override def close(): Unit = if (in != null) in.close()
+  override def close(): Unit = {
+    release()
+    if (in != null) in.close()
+  }
 }
 
 /** Byte-per-char `Reader` (WOD is single-byte ASCII) that makes exactly

@@ -129,6 +129,30 @@ object CastRender {
   def position(n: Int): (Long, Long) =
     (-60000L + n * 7919L % 120000, -170000L + n * 15485L % 340000)
 
+  /** Writes `casts` as one gzip member at `p`, creating its directories. */
+  def writeMember(p: java.nio.file.Path, casts: Seq[String]): Unit = {
+    val bytes = new java.io.ByteArrayOutputStream
+    val gz = new java.util.zip.GZIPOutputStream(bytes)
+    casts.foreach(c => gz.write(c.getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
+    gz.close()
+    java.nio.file.Files.createDirectories(p.getParent)
+    java.nio.file.Files.write(p, bytes.toByteArray)
+  }
+
+  /** A valid cast of `levels` levels of variable 1 (depth `i + 1` m,
+    * value `20 + i / 100`) at (lat, lon), each given as (raw, precision).
+    */
+  def profile(n: Int, country: String, year: Int, lat: (Long, Int),
+      lon: (Long, Int), levels: Int): String = {
+    val c = AsciiCast(n, country, 77, year, 6, 15, None,
+      Some(value(lat._1, lat._2)), Some(value(lon._1, lon._2)), levels, 0,
+      Seq(AsciiVariable(1, 0, Nil)), None, None, Nil, Nil, Nil, Nil,
+      (0 until levels).map(i => AsciiLevel(Some(i + 1.0), 0, 0,
+        Seq(AsciiMeasurement(1, value(2000L + i, 2), 0, 0)))))
+    render(c, Map("lat" -> lat, "lon" -> lon) ++ (0 until levels).flatMap(i =>
+      Seq(s"dep_$i" -> ((i + 1).toLong, 0), s"val_${i}_1" -> (2000L + i, 2))))
+  }
+
   /** A valid one-level cast; `n` sets its number and position. */
   def oneLevel(n: Int, located: Boolean = true): String = {
     val (lat, lon) = position(n)
