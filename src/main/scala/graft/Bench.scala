@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 
 import graft.queries.Registry
-import graft.wod.WodPipeline
+import graft.wod.{WodCorpus, WodPipeline}
 
 /** Benchmark main: runs the headline (bench=true) queries at
   * SPARK_GRAFT_SF_DIR and emits one JSON metrics line for the driver.
@@ -223,7 +223,8 @@ object Bench {
     else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
       .underlying.stripTrailingZeros.toPlainString
 
-  /** Replicate the reference WOD fixtures into an n-file corpus
+  /** Replicate the generated WOD corpus's XBT, SUR and DRB members
+    * ([[graft.wod.WodCorpus]]) into an n-file corpus
     * (default 32; SPARK_GRAFT_WOD_FILES scales it for the driver-bound
     * probe) and time `wodReps` full `WodPipeline.run`s — fresh output
     * dir each rep, so resume never short-circuits the measurement.
@@ -231,7 +232,6 @@ object Bench {
     */
   private def benchWodConvert(spark: org.apache.spark.sql.SparkSession,
       wodReps: Int, bulk: Boolean): Seq[(Double, Long)] = {
-    val fixtures = Paths.get("/root/reference/src/test/resources/wod")
     val nFiles = sys.env.get("SPARK_GRAFT_WOD_FILES").map(_.toInt).getOrElse(32)
     // Concurrent conversions scale with the session's cores instead of
     // a flat 24 (guide §2: don't tune constants to one deployment):
@@ -244,20 +244,10 @@ object Bench {
       .getOrElse(math.min(24,
         math.max(2, spark.sparkContext.defaultParallelism * 3 / 4)))
     val in = Files.createTempDirectory("wodbench_in")
-    def replicate(ds: String, file: String, n: Int): Unit = {
-      val src = fixtures.resolve(s"$ds/OBS/$file")
-      val dir = in.resolve(s"$ds/OBS")
-      Files.createDirectories(dir)
-      val base = file.stripSuffix(".gz")
-      (1 to n).foreach { i =>
-        Files.copy(src, dir.resolve(s"${base}_R$i.gz"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
     // 12:10:10 mix at the default 32, scaled proportionally.
-    replicate("XBT", "XBTO1967.gz", math.max(1, nFiles * 12 / 32))
-    replicate("SUR", "SURF_ALL.gz", math.max(1, nFiles * 10 / 32))
-    replicate("DRB", "DRBO2000.gz", math.max(1, nFiles * 10 / 32))
+    WodCorpus.replicate(in, WodCorpus.Xbt, math.max(1, nFiles * 12 / 32))
+    WodCorpus.replicate(in, WodCorpus.Sur, math.max(1, nFiles * 10 / 32))
+    WodCorpus.replicate(in, WodCorpus.Drb, math.max(1, nFiles * 10 / 32))
     try {
       (1 to wodReps).map { _ =>
         val out = Files.createTempDirectory("wodbench_out")

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q._
 
-/** Reference-parity queries over the WOD ASCII fixtures (the
-  * reference's own test inputs, read-only).
+/** Reference-parity queries over a generated WOD ASCII corpus
+  * ([[graft.wod.WodCorpus]]: the six members in the shape of the
+  * reference's own test inputs, FIXTURES.md §1), written once per JVM
+  * beside the staging below.
   *
   * Oracle strategy: the WOD grammar itself is not expressible in SQL
   * (parse correctness is gated by CastParserSpec / RoundTripSpec
@@ -19,18 +21,26 @@ import Q._
   */
 object WodQueries {
 
-  private val fixtures = "/root/reference/src/test/resources/wod"
+  /** `target/wod_stage` under the working directory, absolute: the
+    * oracle reads the staging back after this JVM exits.
+    */
+  private val stageRoot = new java.io.File("target/wod_stage").getAbsolutePath
 
-  private val stageRoot = "/root/repo/target/wod_stage"
-
-  /** Absolute staging path the oracle reads back. Per-JVM unique
+  /** This JVM's directory under [[stageRoot]]. Per-JVM unique
     * (concurrent Verify runs must not clobber each other's staging),
     * but CONSTANT within the JVM so the `fn` that writes it and the
     * oracle SQL dumped from the same process always agree — the oracle
     * runs after this JVM exits, against the files it left behind.
     */
-  val stagedDir =
-    s"$stageRoot/${java.util.UUID.randomUUID.toString.take(8)}/casts"
+  private val runDir =
+    s"$stageRoot/${java.util.UUID.randomUUID.toString.take(8)}"
+
+  /** The corpus, written on first use. */
+  private lazy val fixtures =
+    graft.wod.WodCorpus.write(java.nio.file.Paths.get(s"$runDir/wod")).toString
+
+  /** Absolute staging path the oracle reads back. */
+  val stagedDir = s"$runDir/casts"
 
   private val stagedGlob = s"$stagedDir/*.parquet"
 
@@ -157,8 +167,7 @@ object WodQueries {
       GROUP BY geohash3
       ORDER BY geohash3"""))
 
-  private val bulkOut =
-    s"$stageRoot/${java.util.UUID.randomUUID.toString.take(8)}/bulkrun"
+  private val bulkOut = s"$runDir/bulkrun"
 
   @volatile private var bulkOnce = false
 

@@ -1,13 +1,15 @@
 package graft.wod
 
-/** Test-side WOD native ASCII encoder, written from the format
-  * description rather than by inverting [[CastParser]], so a mistake
-  * shared by both cannot pass the round trip. Real fields render from
+/** WOD native ASCII encoder, written from the format description
+  * rather than by inverting [[CastParser]], so a mistake shared by both
+  * cannot pass the round trip. It renders the round-trip properties'
+  * casts, the small members the source specs read, and the generated
+  * corpus of [[WodCorpus]]. Real fields render from
   * `reals`: key -> (raw digits, precision), value = raw / 10^precision,
   * keyed `time`, `lat`, `lon`, `meta_<var>_<i>`, `sec_<i>`, `bio_<i>`,
   * `taxa_<set>_<i>`, `dep_<level>`, `val_<level>_<varCode>`.
   */
-object CastRender {
+object CastWriter {
 
   def intF(v: Int): String = { val s = v.toString; s"${s.length}$s" }
 
@@ -129,14 +131,22 @@ object CastRender {
   def position(n: Int): (Long, Long) =
     (-60000L + n * 7919L % 120000, -170000L + n * 15485L % 340000)
 
-  /** Writes `casts` as one gzip member at `p`, creating its directories. */
-  def writeMember(p: java.nio.file.Path, casts: Seq[String]): Unit = {
+  /** `casts` (records from [[render]]) as the bytes of one gzip member
+    * of 80-character lines.
+    */
+  def member(casts: IterableOnce[String]): Array[Byte] = {
     val bytes = new java.io.ByteArrayOutputStream
     val gz = new java.util.zip.GZIPOutputStream(bytes)
-    casts.foreach(c => gz.write(c.getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
+    casts.iterator.foreach(_.grouped(80).foreach(line =>
+      gz.write((line + "\n").getBytes(java.nio.charset.StandardCharsets.US_ASCII))))
     gz.close()
+    bytes.toByteArray
+  }
+
+  /** Writes `casts` as one gzip member at `p`, creating its directories. */
+  def writeMember(p: java.nio.file.Path, casts: IterableOnce[String]): Unit = {
     java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.write(p, bytes.toByteArray)
+    java.nio.file.Files.write(p, member(casts))
   }
 
   /** A valid cast of `levels` levels of variable 1 (depth `i + 1` m,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Registry
-import graft.wod.{CastRender, Geohash, WodPipeline}
+import graft.wod.{CastWriter, Geohash, WodPipeline}
 
 /** Codegen health gate. Round 17's audit found that
   * `BkSampleQuantile.doGenCode` emitted a hard-coded local variable
@@ -308,15 +308,15 @@ class CodegenHealthSpec extends AnyFunSuite {
           Files.createDirectories(p.getParent)
           val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
           try casts.foreach(n =>
-            gz.write(CastRender.oneLevel(n).getBytes("US-ASCII")))
+            gz.write(CastWriter.oneLevel(n).getBytes("US-ASCII")))
           finally gz.close()
       }
       val out = tmp.resolve("out").toString
       WodPipeline.convertBulk(spark, WodPipeline.Config(input = in.toString,
         output = out, datasets = Seq("CTD")))
       val prefix = {
-        val (lat, lon) = CastRender.position(1)
-        Geohash.encode(CastRender.value(lat, 3), CastRender.value(lon, 3))
+        val (lat, lon) = CastWriter.position(1)
+        Geohash.encode(CastWriter.value(lat, 3), CastWriter.value(lon, 3))
           .take(4)
       }
 

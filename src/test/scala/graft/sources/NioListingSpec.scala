@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.wod.CastRender
+import graft.wod.CastWriter
 
 /** Listing a local tree starts no process: the session's `file://`
   * filesystem ([[NioLocalFileSystem]]) reads a status's permission,
@@ -37,8 +37,8 @@ class NioListingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def render(dir: JPath, ds: Seq[String], lv: Seq[String],
       n: Int): Unit =
     for (d <- ds; l <- lv; i <- 1 to n)
-      CastRender.writeMember(dir.resolve(s"$d/$l/${d}O$i.gz"),
-        (1 to castsPerMember).map(c => CastRender.oneLevel(i * 100 + c)))
+      CastWriter.writeMember(dir.resolve(s"$d/$l/${d}O$i.gz"),
+        (1 to castsPerMember).map(c => CastWriter.oneLevel(i * 100 + c)))
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.wod.CastRender
+import graft.wod.CastWriter
 
-/** The `wod` DSv2 source over members rendered with [[CastRender]] in
+/** The `wod` DSv2 source over members rendered with [[CastWriter]] in
   * the `<DATASET>/<LEVEL>/<FILE>.gz` layout: six members over five
   * datasets, one of them a 562-level cast.
   */
@@ -23,7 +23,7 @@ class WodDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   // XBTO1967: 30 one-level casts of 1967, even numbers US, odd JP
   private val xbt = 1000 until 1030
   private def xbtCast(n: Int): String =
-    CastRender.profile(n, if (n % 2 == 0) "US" else "JP", 1967,
+    CastWriter.profile(n, if (n % 2 == 0) "US" else "JP", 1967,
       (12000L + n, 3), (-40000L - n, 3), 1)
   // CTDO1971: the 562-level cast first, then four one-level casts
   private val deepCast = 19950762
@@ -39,19 +39,19 @@ class WodDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     "SUR/OBS/SURO2003.gz" -> 2)
 
   private def write(rel: String, casts: Seq[String]): Unit =
-    CastRender.writeMember(root.resolve(rel), casts)
+    CastWriter.writeMember(root.resolve(rel), casts)
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     root = Files.createTempDirectory("wodds")
     write("XBT/OBS/XBTO1967.gz", xbt.map(xbtCast))
     write("CTD/OBS/CTDO1971.gz",
-      CastRender.profile(deepCast, "GB", 1971, (673981L, 4), (-63056L, 4),
+      CastWriter.profile(deepCast, "GB", 1971, (673981L, 4), (-63056L, 4),
         deepLevels) +: ctdTail.map(n =>
-        CastRender.profile(n, "GB", 1971, (600000L, 4), (-50000L, 4), 1)))
+        CastWriter.profile(n, "GB", 1971, (600000L, 4), (-50000L, 4), 1)))
     for ((rel, n) <- members if !Set("XBT/OBS/XBTO1967.gz",
         "CTD/OBS/CTDO1971.gz")(rel))
-      write(rel, (1 to n).map(CastRender.oneLevel(_)))
+      write(rel, (1 to n).map(CastWriter.oneLevel(_)))
   }
 
   override def afterAll(): Unit = spark.stop()

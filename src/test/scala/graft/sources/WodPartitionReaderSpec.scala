@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.wod.CastRender
-import graft.wod.CastRender.{oneLevel => cast}
+import graft.wod.CastWriter
+import graft.wod.CastWriter.{oneLevel => cast}
 
 /** [[WodPartitionReader]] on its own: two readers open on one thread
   * never share a row, and a reader gives its pooled serializer back
@@ -29,8 +29,8 @@ class WodPartitionReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     tmp = Files.createTempDirectory("wodreader")
-    CastRender.writeMember(a, (1 to 12).map(n => cast(n, located = n != 5)))
-    CastRender.writeMember(b, (101 to 117).map(cast(_)))
+    CastWriter.writeMember(a, (1 to 12).map(n => cast(n, located = n != 5)))
+    CastWriter.writeMember(b, (101 to 117).map(cast(_)))
   }
 
   private val schemas = Seq(

@@ -7,16 +7,17 @@ import java.util.zip.GZIPInputStream
 import graft.wod.CastParser
 
 /** Measured delta for parse-time nested pruning (WodDataSourceSpec's
-  * header-only gate): parse the full fixture corpus with and without
-  * per-depth struct building, bytes pre-loaded so only decompression +
-  * parse are timed. Both modes decode every profile field (grammar
-  * validation is projection-independent); the delta is exactly the
-  * skipped allocation/collection work.
+  * header-only gate): parse the generated corpus
+  * ([[graft.wod.WodCorpus]]) with and without per-depth struct
+  * building, bytes pre-loaded so only decompression + parse are timed.
+  * Both modes decode every profile field (grammar validation is
+  * projection-independent); the delta is exactly the skipped
+  * allocation/collection work.
   */
 object ParsePruneBench {
   def main(args: Array[String]): Unit = {
-    val root = java.nio.file.Paths.get(
-      "/root/reference/src/test/resources/wod")
+    val root = graft.wod.WodCorpus.write(
+      java.nio.file.Files.createTempDirectory("wodprune"))
     val files = java.nio.file.Files.walk(root).toArray.toSeq
       .map(_.toString).filter(_.endsWith(".gz")).sorted
     val bytes = files.map(f =>

@@ -1,12 +1,12 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.wod.{GeoParquetFileFormat, WodPipeline, WodSource}
+import graft.wod.{GeoParquetFileFormat, WodCorpus, WodPipeline, WodSource}
 
 /** Decomposes the per-file conversion path's wall-clock (guide §1:
   * measure FIRST): on the bench's own 32-file corpus, time
@@ -27,21 +27,10 @@ object WodProfile {
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val fixtures = Paths.get("/root/reference/src/test/resources/wod")
     val in = Files.createTempDirectory("wodprof_in")
-    def replicate(ds: String, file: String, n: Int): Unit = {
-      val src = fixtures.resolve(s"$ds/OBS/$file")
-      val dir = in.resolve(s"$ds/OBS")
-      Files.createDirectories(dir)
-      val base = file.stripSuffix(".gz")
-      (1 to n).foreach { i =>
-        Files.copy(src, dir.resolve(s"${base}_R$i.gz"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    replicate("XBT", "XBTO1967.gz", 12)
-    replicate("SUR", "SURF_ALL.gz", 10)
-    replicate("DRB", "DRBO2000.gz", 10)
+    WodCorpus.replicate(in, WodCorpus.Xbt, 12)
+    WodCorpus.replicate(in, WodCorpus.Sur, 10)
+    WodCorpus.replicate(in, WodCorpus.Drb, 10)
     val cfg = WodPipeline.Config(input = in.toString, output = "unused",
       datasets = Seq("XBT", "SUR", "DRB"), maxConcurrentFiles = 24)
     val tasks = WodPipeline.plan(spark, cfg)

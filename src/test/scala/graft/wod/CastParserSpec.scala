@@ -2,17 +2,22 @@ package graft.wod
 
 import java.io.{BufferedReader, FileInputStream, InputStreamReader, StringReader}
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
 import java.util.zip.GZIPInputStream
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Parser validation against the reference's own fixtures
-  * (`/root/reference/src/test/resources/wod/`, read-only) — byte-count
-  * invariant per cast plus spot-checked header values.
+/** Parser validation against the generated corpus ([[WodCorpus]], in
+  * the shape of the reference's six fixtures, FIXTURES.md §1) —
+  * byte-count invariant per cast plus spot-checked header values.
   */
-class CastParserSpec extends AnyFunSuite {
+class CastParserSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val fixtures = "/root/reference/src/test/resources/wod"
+  private var fixtures: String = _
+
+  override def beforeAll(): Unit =
+    fixtures = WodCorpus.write(Files.createTempDirectory("wodparse")).toString
 
   private def parseFixture(rel: String, dataset: String) = {
     val in = new BufferedReader(new InputStreamReader(

@@ -23,7 +23,8 @@ class GeoInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private val fixtures = "/root/reference/src/test/resources/wod"
+  private lazy val fixtures =
+    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
   private var inDir: String = _
   private var outDir: String = _
 

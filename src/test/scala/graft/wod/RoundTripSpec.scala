@@ -6,10 +6,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import CastRender.{render, value}
+import CastWriter.{render, value}
 
 /** Property-based round-trip: generate a cast, render it to WOD native
-  * ASCII (the independent encoder [[CastRender]]), parse with
+  * ASCII (the independent encoder [[CastWriter]]), parse with
   * CastParser, compare. Covers the length-prefixed int/real field
   * encodings, optional sections (character data, PIs, secondary,
   * biological, taxa), missing values, multi-variable profiles, and

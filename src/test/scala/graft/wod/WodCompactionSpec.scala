@@ -19,7 +19,8 @@ class WodCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private val fixtures = "/root/reference/src/test/resources/wod"
+  private lazy val fixtures =
+    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
   private var store: String = _
   private var compacted: String = _
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import CastRender.{oneLevel => cast}
+import CastWriter.{oneLevel => cast}
 
 /** The one WOD reader's error contract on rendered gzip members, through
   * SQL (`spark.read.format("wod")`), [[WodPipeline.run]] and

@@ -9,10 +9,13 @@ class WodOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private lazy val fixtures =
+    WodCorpus.write(java.nio.file.Files.createTempDirectory("wodops")).toString
+
   override def afterAll(): Unit = spark.stop()
 
   private lazy val ctd = spark.read.format("wod")
-    .load("/root/reference/src/test/resources/wod/CTD/OBS/CTDO1971.gz")
+    .load(s"$fixtures/CTD/OBS/CTDO1971.gz")
 
   test("measurements view: one row per observation") {
     val m = WodOps.measurements(ctd)
@@ -28,7 +31,7 @@ class WodOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val casts = spark.read.format("wod")
-      .load("/root/reference/src/test/resources/wod")
+      .load(fixtures)
       .as[Cast]
     val typed = casts.groupByKey(_.dataset)
       .agg(DepthStatsAggregator.toColumn.name("stats"))

@@ -36,7 +36,8 @@ class WodPipelineSchemeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private val fixtures = "/root/reference/src/test/resources/wod"
+  private lazy val fixtures =
+    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
   private var root: String = _ // local dir backing the mockobj:// tree
   private def in = s"mockobj://$root/in"
   private def out = s"mockobj://$root/out"

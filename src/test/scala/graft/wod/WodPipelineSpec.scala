@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end conversion on the reference's fixtures, asserting the
+/** End-to-end conversion on the generated corpus, asserting the
   * reference's output contract (FIXTURES.md §2): `_SUCCESS` markers,
   * `geohash3=` partition dirs, within-partition geohash sort, SUR
   * rename, error schema, resume semantics, GeoParquet footer.
@@ -20,7 +20,8 @@ class WodPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private val fixtures = "/root/reference/src/test/resources/wod"
+  private lazy val fixtures =
+    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
   private var inDir: String = _
   private var outDir: String = _
 
