@@ -88,11 +88,11 @@ object Bench {
     }
     // WOD conversion headline — the engine's production path (parse →
     // geohash3-partitioned GeoParquet with the full output contract),
-    // end-to-end over a 32-file corpus replicated from the reference
-    // fixtures (~28 MB gz ≈ 350 k casts). TWO reps, min reported like
-    // every other query (r4's single rep made the number un-diffable
-    // against ambient harness load); input replicated once, fresh
-    // output dir per rep so resume never short-circuits the timing.
+    // end-to-end over a 32-file corpus replicated from the generated
+    // corpus (~29 MB gz, 365 k casts, 2.0 M ASCII lines). TWO reps, min
+    // reported like every other query (r4's single rep made the number
+    // un-diffable against ambient harness load); input replicated once,
+    // fresh output dir per rep so resume never short-circuits the timing.
     var castsPerSec = 0.0
     var bulkCastsPerSec = 0.0
     // SPARK_GRAFT_WOD_REPS=n — conversion rep count. Default 3: the
@@ -229,6 +229,11 @@ object Bench {
     * probe) and time `wodReps` full `WodPipeline.run`s — fresh output
     * dir each rep, so resume never short-circuits the measurement.
     * Returns (seconds, casts converted) per rep.
+    *
+    * The generated members have the reference fixtures' cast counts and
+    * ASCII line counts (FIXTURES.md §1), but not their values or level
+    * structure: records before the switch to the generated corpus timed
+    * the reference files, so their figures compare only roughly.
     */
   private def benchWodConvert(spark: org.apache.spark.sql.SparkSession,
       wodReps: Int, bulk: Boolean): Seq[(Double, Long)] = {

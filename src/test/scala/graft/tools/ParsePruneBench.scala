@@ -16,8 +16,7 @@ import graft.wod.CastParser
   */
 object ParsePruneBench {
   def main(args: Array[String]): Unit = {
-    val root = graft.wod.WodCorpus.write(
-      java.nio.file.Files.createTempDirectory("wodprune"))
+    val root = java.nio.file.Paths.get(graft.wod.WodFixtures.dir)
     val files = java.nio.file.Files.walk(root).toArray.toSeq
       .map(_.toString).filter(_.endsWith(".gz")).sorted
     val bytes = files.map(f =>

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.wod.{GeoParquetFileFormat, WodCorpus, WodSource}
+import graft.wod.{GeoParquetFileFormat, WodCorpus, WodFixtures, WodSource}
 
 /** Profiling harness: loops the partitioned per-file store write for
   * ~90 s so a JFR recording can be attached (`jcmd <pid> JFR.start`)
@@ -16,8 +16,7 @@ object WodWriteLoop {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val src = WodCorpus.write(Files.createTempDirectory("wodloop_in"))
-      .resolve(WodCorpus.Drb).toString
+    val src = s"${WodFixtures.dir}/${WodCorpus.Drb}"
     val df = WodSource.read(spark, src).toDF()
       .filter(col("_error").isNull).drop("_source_file", "_error")
       .sortWithinPartitions(col("geohash3"), col("geohash"))

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.wod.{GeoParquetFileFormat, WodCorpus, WodSource}
+import graft.wod.{GeoParquetFileFormat, WodCorpus, WodFixtures, WodSource}
 
 /** Micro-decomposition of ONE per-file store write (guide §1): the
   * same parsed, locally-cached 12.6k-cast DataFrame written
@@ -25,8 +25,7 @@ object WodWriteMicro {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val src = WodCorpus.write(Files.createTempDirectory("wodmicro_in"))
-      .resolve(WodCorpus.Drb).toString
+    val src = s"${WodFixtures.dir}/${WodCorpus.Drb}"
     val df = WodSource.read(spark, src).toDF()
       .filter(col("_error").isNull).drop("_source_file", "_error")
       .sortWithinPartitions(col("geohash3"), col("geohash"))

@@ -2,24 +2,18 @@ package graft.wod
 
 import java.io.{BufferedReader, FileInputStream, InputStreamReader, StringReader}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.zip.GZIPInputStream
 
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Parser validation against the generated corpus ([[WodCorpus]], in
-  * the shape of the reference's six fixtures, FIXTURES.md §1) —
-  * byte-count invariant per cast plus spot-checked header values.
+/** Parser validation against the six fixture members — byte-count
+  * invariant per cast plus spot-checked header values. The fixture
+  * tests run on the generated corpus ([[WodCorpus]], in the shape of
+  * the reference's fixtures, FIXTURES.md §1, and built to carry the
+  * checked values) and again on the reference's NOAA-written members
+  * wherever they are present ([[WodFixtureSuite]]).
   */
-class CastParserSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CastParserSpec extends WodFixtureSuite {
 
-  private var fixtures: String = _
-
-  override def beforeAll(): Unit =
-    fixtures = WodCorpus.write(Files.createTempDirectory("wodparse")).toString
-
-  private def parseFixture(rel: String, dataset: String) = {
+  private def parser(fixtures: String)(rel: String, dataset: String) = {
     val in = new BufferedReader(new InputStreamReader(
       new GZIPInputStream(new FileInputStream(s"$fixtures/$rel")),
       StandardCharsets.UTF_8))
@@ -27,7 +21,13 @@ class CastParserSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally in.close()
   }
 
-  test("CTD OBS fixture: single 562-level cast, header fields exact") {
+  private def parserTest(name: String)(
+      body: ((String, String) => Vector[Either[CastError, AsciiCast]]) => Unit)(
+      implicit pos: org.scalactic.source.Position): Unit =
+    fixtureTest(name)(fixtures => body(parser(fixtures)))
+
+  parserTest("CTD OBS fixture: single 562-level cast, header fields exact") {
+    parseFixture =>
     val r = parseFixture("CTD/OBS/CTDO1971.gz", "CTD")
     assert(r.count(_.isLeft) === 0)
     assert(r.size === 1)
@@ -49,7 +49,7 @@ class CastParserSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c.profile.head.data.size === 3)
   }
 
-  test("XBT OBS fixture: 9390 casts, all parse clean") {
+  parserTest("XBT OBS fixture: 9390 casts, all parse clean") { parseFixture =>
     val r = parseFixture("XBT/OBS/XBTO1967.gz", "XBT")
     assert(r.count(_.isLeft) === 0)
     assert(r.size === 9390)
@@ -62,13 +62,13 @@ class CastParserSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c.profile.head.data.head.value === 18.2)
   }
 
-  test("DRB OBS fixture: 12611 casts, all parse clean") {
+  parserTest("DRB OBS fixture: 12611 casts, all parse clean") { parseFixture =>
     val r = parseFixture("DRB/OBS/DRBO2000.gz", "DRB")
     assert(r.count(_.isLeft) === 0)
     assert(r.size === 12611)
   }
 
-  test("APB and CTD/STD fixtures parse clean") {
+  parserTest("APB and CTD/STD fixtures parse clean") { parseFixture =>
     assert(parseFixture("APB/OBS/APBO1997.gz", "APB").count(_.isLeft) === 0)
     assert(parseFixture("CTD/STD/CTDS1967.gz", "CTD").count(_.isLeft) === 0)
   }

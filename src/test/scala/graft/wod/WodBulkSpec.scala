@@ -21,8 +21,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private lazy val fixtures =
-    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
+  private def fixtures = WodFixtures.dir
   private var inDir: String = _
   private var bulkOut: String = _
   private var perFileOut: String = _

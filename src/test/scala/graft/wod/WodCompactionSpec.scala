@@ -19,8 +19,7 @@ class WodCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private lazy val fixtures =
-    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
+  private def fixtures = WodFixtures.dir
   private var store: String = _
   private var compacted: String = _
 

@@ -8,8 +8,9 @@ import java.util.zip.GZIPInputStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the generated corpus the WOD specs read: the CTD record comes
-  * out with the reference record's first bytes, and the corpus is the
-  * same bytes on every write.
+  * out with the reference record's first bytes, the XBT and DRB members
+  * have the reference members' cast and line counts, and the corpus is
+  * the same bytes on every write.
   */
 class WodCorpusSpec extends AnyFunSuite {
 
@@ -25,12 +26,27 @@ class WodCorpusSpec extends AnyFunSuite {
     assert(text.linesIterator.forall(_.length == 80))
   }
 
+  test("the XBT and DRB members have the reference members' cast and " +
+      "line counts") {
+    // FIXTURES.md §1: XBTO1967 9390 casts in 68,915 lines, DRBO2000
+    // 12611 casts in 56,614 lines
+    Seq(WodCorpus.Xbt -> ((9390, 68915)), WodCorpus.Drb -> ((12611, 56614)))
+      .foreach { case (rel, (casts, lines)) =>
+        val text = new String(new GZIPInputStream(new ByteArrayInputStream(
+          WodCorpus.member(rel))).readAllBytes(), StandardCharsets.US_ASCII)
+        assert(text.count(_ == '\n') === lines, rel)
+        assert(text.linesIterator.forall(_.length == 80), rel)
+        assert(CastParser.casts(new java.io.StringReader(text), "X")
+          .count(_.isRight) === casts, rel)
+      }
+  }
+
   test("two writes give byte-identical members") {
     val a = WodCorpus.write(Files.createTempDirectory("wodcorpus_a"))
     val b = WodCorpus.write(Files.createTempDirectory("wodcorpus_b"))
-    WodCorpus.Members.foreach { rel =>
+    try WodCorpus.Members.foreach { rel =>
       assert(Files.readAllBytes(a.resolve(rel)) sameElements
         Files.readAllBytes(b.resolve(rel)), rel)
-    }
+    } finally Seq(a, b).foreach(WodFixtures.deleteTree)
   }
 }

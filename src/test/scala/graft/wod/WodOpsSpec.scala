@@ -2,22 +2,23 @@ package graft.wod
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
-class WodOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** The tests that read fixture members run on the generated corpus and
+  * again on the reference's NOAA-written members wherever they are
+  * present ([[WodFixtureSuite]]).
+  */
+class WodOpsSpec extends WodFixtureSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private lazy val fixtures =
-    WodCorpus.write(java.nio.file.Files.createTempDirectory("wodops")).toString
-
   override def afterAll(): Unit = spark.stop()
 
-  private lazy val ctd = spark.read.format("wod")
+  private def ctdAt(fixtures: String) = spark.read.format("wod")
     .load(s"$fixtures/CTD/OBS/CTDO1971.gz")
 
-  test("measurements view: one row per observation") {
+  fixtureTest("measurements view: one row per observation") { fixtures =>
+    val ctd = ctdAt(fixtures)
     val m = WodOps.measurements(ctd)
     // the CTD cast has 562 levels × 3 variables, all present
     assert(m.count() === 562L * 3)
@@ -27,7 +28,7 @@ class WodOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(codes === Array(1, 2, 25))
   }
 
-  test("typed Aggregator matches the untyped depth rollup") {
+  fixtureTest("typed Aggregator matches the untyped depth rollup") { fixtures =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val casts = spark.read.format("wod")
@@ -87,7 +88,8 @@ class WodOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       !r.isNullAt(r.fieldIndex("_error"))))
   }
 
-  test("profileStats: plausible ocean physics per depth bucket") {
+  fixtureTest("profileStats: plausible ocean physics per depth bucket") { fixtures =>
+    val ctd = ctdAt(fixtures)
     import spark.implicits._
     val stats = WodOps.profileStats(ctd).as[
       (String, Int, Long, Long, Double, Double, Double, Double)].collect()

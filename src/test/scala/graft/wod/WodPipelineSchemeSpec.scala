@@ -36,8 +36,7 @@ class WodPipelineSchemeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private lazy val fixtures =
-    WodCorpus.write(Files.createTempDirectory("wodcorpus")).toString
+  private def fixtures = WodFixtures.dir
   private var root: String = _ // local dir backing the mockobj:// tree
   private def in = s"mockobj://$root/in"
   private def out = s"mockobj://$root/out"
