@@ -18,12 +18,12 @@ import graft.GraftSession
   *   --max-files N                concurrent file conversions (default 4)
   *   --max-attempts N             per-file retry budget (default 3; C6)
   *   --no-fail-fast               report failed files but exit 0
-  *   --bulk                       corpus-scale mode: ONE shuffled job per
-  *                                (dataset, level) instead of one job per
-  *                                file (WodPipeline.convertBulk — the
+  *   --bulk                       corpus-scale mode: a few jobs per
+  *                                (dataset, level) instead of per file
+  *                                (WodPipeline.convertBulk — the
   *                                many-small-files escape hatch, ~5× the
   *                                per-file throughput at sf0.1)
-  *   --bulk-max-rows-per-cell N   skew guard / per-file row bound
+  *   --bulk-max-rows-per-cell N   most rows one output file holds
   *                                (default 1000000)
   *   --bulk-concurrency N         concurrent (dataset, level) sub-runs
   *                                (default 4)

@@ -1,8 +1,8 @@
 package graft.wod
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count}
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.WodDataSource.{ErrorColumn, SourceFileColumn, castSchema}
@@ -21,16 +21,17 @@ import graft.sources.WodDataSource.{ErrorColumn, SourceFileColumn, castSchema}
   *   `_SUCCESS`-based idempotent resume (C2, `DatasetYearTrain.java:89-94`),
   *   SUR→SUR_ALL rename (F4, `DatasetYearTrain.java:39-40,230-233`).
   *
-  * Scale design: one conversion job per input file, each fully
-  * distributed (gzip ⇒ one parse task, then a hash exchange on geohash3
-  * for the partitioned write); multiple files run concurrently through
-  * Spark's scheduler. The reference's driver-side parse loop and
-  * two-phase `_temp` store (C3) disappear: a single lineage
-  * parse→shuffle→write needs no intermediate store, and output-dir
-  * atomicity comes from the Hadoop commit protocol's `_temporary` +
-  * `_SUCCESS`. The global `orderBy(geohash)` the reference issues
-  * before repartitioning is dropped deliberately — its range exchange
-  * is destroyed by the following hash repartition (SURVEY §2.3 O1).
+  * Scale design: one conversion per input file, each fully distributed
+  * (gzip ⇒ one parse task, then a hash exchange on geohash3 for the
+  * partitioned write); multiple files run concurrently through Spark's
+  * scheduler. The reference's driver-side parse loop and two-phase
+  * `_temp` store (C3) disappear: a single lineage parse→shuffle→write
+  * needs no intermediate store, and output-dir atomicity comes from the
+  * Hadoop commit protocol's `_temporary` plus a `_SUCCESS` stamped
+  * after the error store. The global `orderBy(geohash)` the reference
+  * issues before repartitioning is dropped deliberately — its range
+  * exchange is destroyed by the following hash repartition (SURVEY
+  * §2.3 O1).
   */
 object WodPipeline {
 
@@ -46,8 +47,7 @@ object WodPipeline {
     .putBoolean(graft.plans.InferGeohashPartitionFilter.ProvenanceKey, true)
     .build()
 
-  private def tagGeohash(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def tagGeohash(df: DataFrame): DataFrame =
     df.withColumn("geohash", col("geohash").as("geohash", geohashTag))
 
   final case class Config(
@@ -73,10 +73,8 @@ object WodPipeline {
         * every outcome for the completeness differ.
         */
       failFast: Boolean = true,
-      /** Bulk-mode skew guard: a geohash3 cell with more rows than
-        * this is salted into ceil(n/this) shards so one dense cell
-        * can't become one reducer task / one giant parquet file
-        * (see [[convertBulkDetailed]]).
+      /** Bulk mode: the most rows one output file holds (the
+        * writer's `maxRecordsPerFile`; see [[writeChannels]]).
         */
       bulkMaxRowsPerCellFile: Long = 1000000L,
       /** Concurrent (dataset, level) bulk sub-runs. */
@@ -141,42 +139,64 @@ object WodPipeline {
 
   /** Convert one file: stream-parse, split casts/errors, write the
     * geohash3-partitioned store (with write-time GeoParquet footers)
-    * and the error store. Returns (castRows, errorRows).
-    *
-    * ONE Spark job per clean file (the common case), two when the file
-    * has parse errors. The conversion wall-clock at many-small-files
-    * scale is driver-job-count bound, so the former per-file stats job
-    * is fused away twice over:
-    *
-    *  - cast/error counts ride the write job itself via
-    *    `Dataset.observe` (a `CollectMetrics` node above the scan —
-    *    Catalyst never pushes the cast-only filter through it, so the
-    *    error count sees every row);
-    *  - the GeoParquet footer bbox no longer needs a pre-write extent
-    *    pass at all: [[GeoParquetWriteSupport]] accumulates each part
-    *    file's true lon/lat extent as rows stream through it and
-    *    stamps the per-file bbox at close (`geobbox=auto`).
-    *
-    * The parsed rows stay persisted so the error store (rare) is a
-    * cache read, not a second gzip parse.
+    * and the error store ([[writeChannels]]). Returns
+    * (castRows, errorRows).
     */
   def convertFile(spark: SparkSession, task: FileTask,
       geoMetadata: Boolean = true): (Long, Long) = {
     import spark.implicits._
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.count
-    val rows = WodSource.read(spark, task.src)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    writeChannels(spark, WodSource.read(spark, task.src),
+      casts = _.drop(SourceFileColumn, ErrorColumn),
+      // through the CastError encoder: a field of the nullable `_error`
+      // struct would turn the store's non-null castNumber nullable
+      errors = _.select(s"$ErrorColumn.*").as[CastError].map(identity).toDF(),
+      maxRowsPerFile = 0L, // Spark's "no limit"
+      geoMetadata, task.outStore, task.errStore)
+  }
+
+  /** The one write path of [[convertFile]] and [[convertBulk]]: the
+    * cast store, the error store, then (bulk only) the cast store's
+    * `_inputs` list of `inputs`, and last its `_SUCCESS`. Returns
+    * (castRows, errorRows).
+    *
+    *  - Jobs: three per clean input (the cache build, the exchange's
+    *    map stage, the sort+write), one more when there are error rows.
+    *    The parsed rows stay persisted so the error write (rare) is a
+    *    cache read, not a second gzip parse.
+    *  - Channel totals ride the cast write via `Dataset.observe` (a
+    *    `CollectMetrics` node above the scan — Catalyst never pushes the
+    *    cast-only filter through it, so the error count sees every
+    *    row); see [[channelCounts]] for the all-error fallback.
+    *  - GeoParquet footers need no pre-write extent pass:
+    *    [[GeoParquetWriteSupport]] accumulates each part file's true
+    *    lon/lat extent as rows stream through it and stamps the
+    *    per-file bbox at close (`geobbox=auto`).
+    *  - The exchange is a hash repartition on geohash3, so every cell
+    *    is one write task whatever the shuffle partition sizes (a
+    *    REBALANCE would let AQE split any oversized partition by map
+    *    ranges, and each split task would write one file for EVERY
+    *    cell in it). `maxRowsPerFile` (`maxRecordsPerFile`; 0 = no
+    *    limit) bounds a dense cell: the writer rolls to a new file at
+    *    it, each still a geohash-sorted run.
+    *  - Commit order: the cast store's `_SUCCESS` is the resume marker,
+    *    so the committer's own marker is switched off and the marker is
+    *    stamped by hand after everything else is written. A crash or a
+    *    failure in between leaves a store that resume redoes, never one
+    *    it skips with its error rows lost.
+    */
+  private def writeChannels(spark: SparkSession, parsed: DataFrame,
+      casts: DataFrame => DataFrame, errors: DataFrame => DataFrame,
+      maxRowsPerFile: Long, geoMetadata: Boolean, castStore: String,
+      errStore: String, inputs: Seq[String] = Nil): (Long, Long) = {
+    val rows = parsed.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val obs = Observation()
-      // Stays in InternalRow land end-to-end: observe counts both
-      // channels (cast columns are null in error rows, so geohash3
-      // counts casts), then the cast branch drops the metadata columns.
+      // cast columns are null in error rows, so geohash3 counts casts
       val writer = rows
         .observe(obs, count(col("geohash3")).as("n_casts"),
           count(col(ErrorColumn)).as("n_errors"))
         .filter(col(ErrorColumn).isNull)
-        .drop(SourceFileColumn, ErrorColumn)
+        .transform(casts)
         .transform(tagGeohash)
         .repartition(col("geohash3"))
         // (geohash3, geohash) orders identically to plain geohash
@@ -186,34 +206,42 @@ object WodPipeline {
         // before fan-out into the geohash3= dirs.
         .sortWithinPartitions(col("geohash3"), col("geohash"))
         .write.mode(SaveMode.Overwrite)
+        .option("maxRecordsPerFile", maxRowsPerFile)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
         .partitionBy("geohash3")
       if (geoMetadata)
         writer.format(classOf[GeoParquetFileFormat].getName)
           .option(GeoParquetFileFormat.GeoAutoOption, "auto")
-          .save(task.outStore)
-      else writer.parquet(task.outStore)
+          .save(castStore)
+      else writer.parquet(castStore)
       val (nCasts, nErrors) = channelCounts(obs, rows)
-      // through the CastError encoder: a field of the nullable `_error`
-      // struct would turn the store's non-null castNumber nullable
+      val conf = spark.sparkContext.hadoopConfiguration
+      val errPath = new Path(errStore)
       if (nErrors > 0)
-        rows.filter(col(ErrorColumn).isNotNull).select(s"$ErrorColumn.*")
-          .as[CastError].map(identity).toDF()
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(task.errStore)
+        errors(rows.filter(col(ErrorColumn).isNotNull))
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(errStore)
+      else errPath.getFileSystem(conf).delete(errPath, true) // stale errors
+      val fs = new Path(castStore).getFileSystem(conf)
+      if (inputs.nonEmpty) {
+        val out = fs.create(new Path(castStore, InputsFile), true)
+        try out.write(inputs.map(_ + "\n").mkString
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      }
+      fs.create(new Path(castStore, "_SUCCESS"), true).close()
       (nCasts, nErrors)
     } finally rows.unpersist()
   }
 
   /** Channel counts from the write job's observed metrics, with a
     * cached-agg fallback: when the cast channel is EMPTY (an all-error
-    * file), AQE replaces the empty write subtree — CollectMetrics node
+    * input), AQE replaces the empty write subtree — CollectMetrics node
     * included — with an empty relation, and the Observation never
     * receives its row. The fallback agg runs on the persisted rows
     * (a cache scan, not a re-parse) only in that rare case.
     */
-  private def channelCounts(obs: org.apache.spark.sql.Observation,
-      rows: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.functions.count
+  private def channelCounts(obs: Observation,
+      rows: DataFrame): (Long, Long) = {
     val m = obs.get // returns once the action completes; may be empty
     if (m.contains("n_casts") && m.contains("n_errors"))
       (m("n_casts").asInstanceOf[Long], m("n_errors").asInstanceOf[Long])
@@ -294,7 +322,7 @@ object WodPipeline {
     *
     * The corpus is split into one SUB-RUN per (dataset, level). Each
     * sub-run is a single fully-distributed lineage — one parse stage
-    * over all its files, one hash exchange on (geohash3 [, salt]), one
+    * over all its files, one hash exchange on geohash3, one
     * dynamic-partitioned write — committed independently under its own
     * `_SUCCESS`. Sub-runs execute concurrently (driver-side bounded
     * pool, like [[run]]) so the cluster stays saturated even when a
@@ -310,24 +338,11 @@ object WodPipeline {
     *    per-file `_SUCCESS` resume, `DatasetYearTrain.java:89-94`, at
     *    bulk granularity). A complete root store short-circuits via
     *    the root `_SUCCESS` stamped after the last sub-run commits.
-    *  - SKEW GUARD: one very dense geohash3 cell would otherwise map
-    *    to ONE reducer task and ONE giant parquet file (AQE skew
-    *    splitting does not apply to dynamic-partition writes, and the
-    *    write-side sort requirement pins the exchange). Each sub-run
-    *    therefore counts rows per cell on the cached parse (a cache
-    *    scan, not a re-parse) and salts any cell whose count exceeds
-    *    `cfg.bulkMaxRowsPerCellFile` into ceil(n/max) deterministic
-    *    shards — `xxhash64(src_file, geohash, castNumber,
-    *    cruiseNumber) % factor`, so retried tasks re-derive the same
-    *    shard. ceil(n/max) files per hot cell is the EXPECTED outcome
-    *    (shards hash into the shuffle-partition space and can
-    *    collide onto one reducer); the hard per-file bound comes from
-    *    `maxRecordsPerFile` on the write, which rolls a new file at
-    *    the limit. The salt feeds ONLY the exchange (dropped before
-    *    the write); every output file still holds a geohash-sorted
-    *    run, and an unskewed corpus (no cell over the threshold)
-    *    takes the exact unsalted plan: one file per cell, no extra
-    *    count job beyond the cache scan.
+    *  - Dense cells: the sub-run's write is [[writeChannels]], shared
+    *    with [[convertFile]]. Each geohash3 cell is one write task, and
+    *    `maxRecordsPerFile` = `cfg.bulkMaxRowsPerCellFile` bounds the
+    *    rows of every file, so a dense cell rolls over several files
+    *    and an ordinary cell is one file.
     *  - Per-cast (C5) and per-file IO error isolation come from the
     *    `wod` source's `_error` column ([[WodSource.read]]): a failed
     *    cast and an unreadable or damaged member each give one error
@@ -336,8 +351,6 @@ object WodPipeline {
     *    source path. Task-level retry inside each job is Spark's own
     *    (`spark.task.maxFailures`), replacing the per-file attempt
     *    envelope (C6) here.
-    *  - GeoParquet footers: same write-time `geobbox=auto` per-file
-    *    true-extent stamping as [[convertFile]].
     *
     * Returns (castRows, errorRows) summed over all sub-runs,
     * previously-completed ones included.
@@ -382,10 +395,10 @@ object WodPipeline {
       // An input with no row in either store (an empty member) counts
       // as covered through the inputs the sub-run's commit recorded.
       val committed = isComplete(spark, subStore)
-      lazy val (castRows, castProv) = storeCensus(spark, subStore)
-      lazy val (errRows, errProv) = storeCensus(spark, errSub)
-      lazy val fresh = ts.map(t =>
-        fs.makeQualified(new Path(t.src)).toString)
+      val inputs = ts.map(t => fs.makeQualified(new Path(t.src)).toString)
+      lazy val (castRows, castProv) = storeProvenance(spark, subStore)
+      lazy val (errRows, errProv) = storeProvenance(spark, errSub)
+      lazy val fresh = inputs
         .filterNot(castProv ++ errProv ++ recordedInputs(fs, subStore))
       if (committed && fresh.isEmpty) {
         println(s"[wod] bulk skip (complete): $subStore")
@@ -393,7 +406,15 @@ object WodPipeline {
       } else {
         if (committed) println(s"[wod] bulk redo (plan grew by " +
           s"${fresh.size} files): $subStore")
-        val (nc, ne) = bulkSubRun(spark, cfg, ts, subStore, errSub)
+        val (nc, ne) = writeChannels(spark,
+          WodSource.read(spark, ts.map(_.src).mkString(",")),
+          casts = _.select(col(SourceFileColumn).as("src_file") +:
+              castSchema.fieldNames.toSeq.map(col): _*)
+            .drop("dataset"), // constant in a sub-run; the dir carries it
+          errors = _.select(col(SourceFileColumn).as("src_file"),
+            col(s"$ErrorColumn.castNumber"), col(s"$ErrorColumn.error")),
+          cfg.bulkMaxRowsPerCellFile, cfg.geoMetadata, subStore, errSub,
+          inputs)
         println(s"[wod] bulk: $ds/$lvl ${ts.size} files, $nc casts, " +
           s"$ne errors -> $subStore")
         BulkRun(ds, lvl, ts.size, nc, ne, skipped = false)
@@ -406,16 +427,15 @@ object WodPipeline {
   }
 
   /** The planned inputs of a committed bulk sub-run, one qualified
-    * path per line: written right after the cast store commits, so a
-    * crash before the commit records nothing, and the cast write's
-    * overwrite clears a previous run's list.
+    * path per line: written just before the sub-store's `_SUCCESS`, so
+    * an uncommitted sub-store is redone whatever it records, and the
+    * cast write's overwrite clears a previous run's list.
     */
-  private def inputsFile(subStore: String): Path =
-    new Path(subStore, "_inputs")
+  private val InputsFile = "_inputs"
 
   private def recordedInputs(fs: FileSystem,
       subStore: String): Set[String] = {
-    val f = inputsFile(subStore)
+    val f = new Path(subStore, InputsFile)
     if (!fs.exists(f)) Set.empty
     else {
       val in = fs.open(f)
@@ -430,9 +450,8 @@ object WodPipeline {
     * bounded by the sub-run's file count (driver-metadata scale, the
     * same order as [[plan]]'s own listing).
     */
-  private def storeCensus(spark: SparkSession,
+  private def storeProvenance(spark: SparkSession,
       store: String): (Long, Set[String]) = {
-    import org.apache.spark.sql.functions.count
     val p = new Path(store)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasData = fs.exists(p) && {
@@ -448,92 +467,5 @@ object WodPipeline {
         .groupBy(col("src_file")).agg(count("*").as("n")).collect()
       (rows.map(_.getLong(1)).sum, rows.map(_.getString(0)).toSet)
     }
-  }
-
-  /** One (dataset, level) bulk sub-run: parse its files, salt any
-    * over-threshold cell, write the geohash3-partitioned sub-store +
-    * error sub-store. Returns (castRows, errorRows).
-    */
-  private def bulkSubRun(spark: SparkSession, cfg: Config,
-      tasks: Seq[FileTask], subStore: String, errSub: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, count, element_at, lit,
-      pmod, typedLit, xxhash64}
-    val rows = WodSource.read(spark, tasks.map(_.src).mkString(","))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Census on the cached parse, ONE job for two purposes: per-cell
-      // cast counts (skew guard) and the channel totals. Error rows
-      // have null cast columns, so they fold into the null-cell group
-      // and n_errors sums them; the bounded collect is <= 32^3 cells + 1.
-      val census = rows
-        .groupBy(col("geohash3").as("cell"))
-        .agg(count(col("geohash3")).as("n_casts"),
-          count(col(ErrorColumn)).as("n_errors"))
-        .collect()
-      val nCasts = census.map(_.getLong(1)).sum
-      val nErrors = census.map(_.getLong(2)).sum
-      // Cells needing more than one shard, cell -> shard count. Empty
-      // for an unskewed corpus.
-      val hot: Map[String, Int] = census.iterator
-        .filter(r => !r.isNullAt(0) && r.getLong(1) > cfg.bulkMaxRowsPerCellFile)
-        .map(r => r.getString(0) ->
-          math.ceil(r.getLong(1).toDouble / cfg.bulkMaxRowsPerCellFile).toInt)
-        .toMap
-      // ERROR SUB-STORE FIRST: the cast write's _SUCCESS is the resume
-      // marker, so it must be the LAST thing this sub-run produces — a
-      // crash between a cast-first write and the error write would
-      // leave a store resume deems complete whose error rows are lost
-      // permanently (differ reports all-error files missing forever).
-      val fs = new Path(errSub).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (nErrors > 0)
-        rows.filter(col(ErrorColumn).isNotNull)
-          .select(col(SourceFileColumn).as("src_file"),
-            col(s"$ErrorColumn.castNumber"), col(s"$ErrorColumn.error"))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(errSub)
-      else fs.delete(new Path(errSub), true) // stale errors from a prior run
-      val casts = rows
-        .filter(col(ErrorColumn).isNull)
-        .select(col(SourceFileColumn).as("src_file") +:
-          castSchema.fieldNames.toSeq.map(col): _*)
-        .drop("dataset") // constant in a sub-run; the dir carries it
-        .transform(tagGeohash)
-      val sharded =
-        if (hot.isEmpty) casts.repartition(col("geohash3"))
-        else casts
-          .withColumn("__shard", pmod(
-            xxhash64(col("src_file"), col("geohash"), col("castNumber"),
-              col("cruiseNumber")),
-            coalesce(element_at(typedLit(hot), col("geohash3")), lit(1))))
-          .repartition(col("geohash3"), col("__shard"))
-          .drop("__shard")
-      val writer = sharded
-        // (geohash3, geohash) satisfies the dynamic-partition writer's
-        // required ordering AND orders identically to plain geohash,
-        // so FileFormatWriter plans no second sort (see convertFile).
-        .sortWithinPartitions(col("geohash3"), col("geohash"))
-        .write.mode(SaveMode.Overwrite)
-        // Hard backstop on file size: (cell, shard) hashes into the
-        // shuffle-partition space, so two shards of one hot cell CAN
-        // land on the same reducer; the salt makes ceil(n/max) files
-        // the EXPECTED outcome, this option makes max-rows-per-file a
-        // guarantee (the writer rolls to a new file at the bound, each
-        // still a sorted run).
-        .option("maxRecordsPerFile", cfg.bulkMaxRowsPerCellFile)
-        .partitionBy("geohash3")
-      if (cfg.geoMetadata)
-        writer.format(classOf[GeoParquetFileFormat].getName)
-          .option(GeoParquetFileFormat.GeoAutoOption, "auto")
-          .save(subStore)
-      else writer.parquet(subStore)
-      val sfs = new Path(subStore).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val out = sfs.create(inputsFile(subStore), true)
-      try out.write(tasks.map(t =>
-          sfs.makeQualified(new Path(t.src)).toString + "\n").mkString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      (nCasts, nErrors)
-    } finally rows.unpersist()
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.wod.CastWriter
+import graft.wod.{CastWriter, WodFixtures}
 
 /** The `wod` DSv2 source over members rendered with [[CastWriter]] in
   * the `<DATASET>/<LEVEL>/<FILE>.gz` layout: six members over five
@@ -54,7 +54,8 @@ class WodDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       write(rel, (1 to n).map(CastWriter.oneLevel(_)))
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(root)
 
   test("spark.read.format(wod) over one member") {
     val df = spark.read.format("wod").load(member("XBT/OBS/XBTO1967.gz"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.wod.CastWriter
+import graft.wod.{CastWriter, WodFixtures}
 import graft.wod.CastWriter.{oneLevel => cast}
 
 /** [[WodPartitionReader]] on its own: two readers open on one thread
@@ -32,6 +32,8 @@ class WodPartitionReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     CastWriter.writeMember(a, (1 to 12).map(n => cast(n, located = n != 5)))
     CastWriter.writeMember(b, (101 to 117).map(cast(_)))
   }
+
+  override def afterAll(): Unit = WodFixtures.deleteTree(tmp)
 
   private val schemas = Seq(
     "full cast" -> WodDataSource.castSchema,

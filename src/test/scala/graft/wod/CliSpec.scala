@@ -17,13 +17,14 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private var tmp: String = _ // deleted after the last test
   private def fixtures = WodFixtures.dir
   private var inDir: String = _
   private var outRoot: String = _
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = Files.createTempDirectory("wodcli").toString
+    tmp = Files.createTempDirectory("wodcli").toString
     inDir = s"$tmp/in"
     outRoot = s"$tmp/out"
     for (rel <- Seq("XBT/OBS/XBTO1967.gz", "DRB/OBS/DRBO2000.gz")) {
@@ -33,6 +34,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
         StandardCopyOption.REPLACE_EXISTING)
     }
   }
+
+  override def afterAll(): Unit = WodFixtures.deleteTree(Paths.get(tmp))
 
   test("parse maps every option onto the config") {
     val (cfg, bulk) = Cli.parse(Array(

@@ -15,12 +15,13 @@ class DifferSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private var tmp: java.nio.file.Path = _
   private var inDir: String = _
   private var outDir: String = _
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = Files.createTempDirectory("differ").toString
+    tmp = Files.createTempDirectory("differ")
     inDir = s"$tmp/in"; outDir = s"$tmp/out"
     // three expected inputs across two datasets (SUR exercises rename)
     for (rel <- Seq("CTD/OBS/CTDO1971.gz", "CTD/OBS/CTDO1972.gz",
@@ -41,7 +42,8 @@ class DifferSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(tmp)
 
   test("missing = never produced + crash residue, not the complete one") {
     val cfg = WodPipeline.Config(input = inDir, output = outDir,
@@ -53,7 +55,7 @@ class DifferSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("runnable report: one csv line per missing conversion") {
-    val report = Files.createTempDirectory("differrep").resolve("missing.csv")
+    val report = Files.createTempDirectory(tmp, "differrep").resolve("missing.csv")
     // main() spins its own session via getOrCreate -> same test session
     Differ.main(Array(inDir, outDir, report.toString))
     val lines = Files.readAllLines(report)

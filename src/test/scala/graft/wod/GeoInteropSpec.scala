@@ -23,13 +23,14 @@ class GeoInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private var tmp: String = _ // deleted after the last test
   private def fixtures = WodFixtures.dir
   private var inDir: String = _
   private var outDir: String = _
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = Files.createTempDirectory("wodgeo").toString
+    tmp = Files.createTempDirectory("wodgeo").toString
     inDir = s"$tmp/in"; outDir = s"$tmp/out"
     val dst = Paths.get(inDir, "XBT/OBS/XBTO1967.gz")
     Files.createDirectories(dst.getParent)
@@ -37,7 +38,8 @@ class GeoInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(Paths.get(tmp))
 
   test("external reader round-trips WKB geometry and footer bbox " +
       "pruning is exact") {

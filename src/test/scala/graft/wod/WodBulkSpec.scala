@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bulk-mode contract ([[WodPipeline.convertBulk]] — the ONE-job
-  * many-small-files scale path): identical content to the per-file
+/** Bulk-mode contract ([[WodPipeline.convertBulk]] — the O(datasets)
+  * jobs many-small-files scale path): identical content to the per-file
   * pipeline, per-file IO error isolation preserved, partition-pruned
   * cell predicates, write-time geo footers.
   */
@@ -21,6 +21,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private var tmp: String = _ // every test's scratch dir is under it
   private def fixtures = WodFixtures.dir
   private var inDir: String = _
   private var bulkOut: String = _
@@ -28,12 +29,15 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var bulkCasts: Long = 0
   private var bulkErrors: Long = 0
 
+  private def scratchDir(prefix: String): String =
+    Files.createTempDirectory(Paths.get(tmp), prefix).toString
+
   private def castStore = s"$bulkOut/bulk/casts"
   private def errStore = s"$bulkOut/bulk/errors"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = Files.createTempDirectory("wodbulk").toString
+    tmp = Files.createTempDirectory("wodbulk").toString
     inDir = s"$tmp/in"
     bulkOut = s"$tmp/bulk"
     perFileOut = s"$tmp/perfile"
@@ -53,6 +57,8 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
     bulkErrors = e
     WodPipeline.run(spark, cfg.copy(output = perFileOut))
   }
+
+  override def afterAll(): Unit = WodFixtures.deleteTree(Paths.get(tmp))
 
   test("one-job bulk store carries exactly the per-file pipeline's rows") {
     // (castNumber, cruiseNumber, geohash) identifies a cast across
@@ -164,9 +170,9 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("skew guard: an over-threshold cell splits into multiple files, " +
       "each a sorted run, content intact") {
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("wodskew").toString
+    val tmp = scratchDir("wodskew")
     // replicate one fixture 3x: same cells, 3x the density, distinct
-    // src_file provenance (the salt hashes src_file, so copies shard)
+    // src_file provenance
     val skewIn = s"$tmp/in"
     for (i <- 1 to 3) {
       val dst = Paths.get(skewIn, s"XBT/OBS/XBTO1967_R$i.gz")
@@ -182,7 +188,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
     convert(s"$tmp/plain", Long.MaxValue)
     val salted = spark.read.parquet(s"$tmp/salted/bulk/casts")
     val plain = spark.read.parquet(s"$tmp/plain/bulk/casts")
-    // content parity through the salted exchange
+    // content parity between the bounded and the unbounded write
     val key = Seq(col("src_file"), col("castNumber"), col("cruiseNumber"),
       col("geohash"))
     assert(salted.select(key: _*).exceptAll(plain.select(key: _*))
@@ -213,13 +219,16 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(cellFiles(s"$tmp/plain", cell).size === 1,
         s"unsalted run must keep one file for $cell")
     }
-    // HARD per-file bound: even if shards of one hot cell collide onto
-    // the same reducer, maxRecordsPerFile rolls the file at the limit
+    // HARD per-file bound: maxRecordsPerFile rolls the file at the
+    // limit (each file's row count read from its parquet footer)
     import java.nio.file.Path
     Files.walk(Paths.get(s"$tmp/salted/bulk/casts")).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .foreach { f: Path =>
-        val n = spark.read.parquet(f.toString).count()
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString),
+          spark.sparkContext.hadoopConfiguration))
+        val n = try reader.getRecordCount finally reader.close()
         assert(n <= 25L, s"$f holds $n rows, over the hard 25-row bound")
       }
     // under-threshold cells stay single-file even in the salted run
@@ -230,7 +239,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("incremental resume: completed sub-runs are skipped when the " +
       "plan grows; crash residue forces a redo") {
-    val tmp = Files.createTempDirectory("wodincr").toString
+    val tmp = scratchDir("wodincr")
     val out = s"$tmp/out"
     def cfg(ds: String*) = WodPipeline.Config(input = inDir,
       output = out, datasets = ds)
@@ -262,7 +271,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("partial-store differ: uncommitted sub-runs' files are missing, " +
       "committed ones are not — across MULTIPLE committed sub-stores " +
       "and MULTIPLE error sub-stores") {
-    val tmp = Files.createTempDirectory("wodpart").toString
+    val tmp = scratchDir("wodpart")
     val in2 = s"$tmp/in"
     val out = s"$tmp/out"
     // two datasets, EACH with a corrupt member (so two committed cast
@@ -293,7 +302,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plan growth inside a committed sub-run forces a redo (a " +
       "late-added .gz is converted without overwrite)") {
-    val tmp = Files.createTempDirectory("wodgrow").toString
+    val tmp = scratchDir("wodgrow")
     val in2 = s"$tmp/in"
     val out = s"$tmp/out"
     val dst = Paths.get(in2, "XBT/OBS/XBTO1967.gz")

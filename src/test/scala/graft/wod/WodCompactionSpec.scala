@@ -19,13 +19,14 @@ class WodCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private var tmp: String = _ // deleted after the last test
   private def fixtures = WodFixtures.dir
   private var store: String = _
   private var compacted: String = _
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = Files.createTempDirectory("wodcompact").toString
+    tmp = Files.createTempDirectory("wodcompact").toString
     val inDir = s"$tmp/in"
     for (rel <- Seq("SUR/OBS/SURF_ALL.gz")) {
       val dst = Paths.get(inDir, rel)
@@ -39,7 +40,8 @@ class WodCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     compacted = s"$tmp/compacted.parquet"
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(Paths.get(tmp))
 
   private def partFiles(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =

@@ -84,7 +84,8 @@ class WodErrorChannelSpec extends AnyFunSuite with BeforeAndAfterAll {
     write("XBT/OBS/EMPTY.gz", gzip(Nil)._1)
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(tmp)
 
   private def castNumbers(rows: Array[Row]): Seq[Int] =
     rows.filter(_.isNullAt(1)).map(_.getInt(0)).toSeq.sorted

@@ -71,21 +71,23 @@ class WodOpsSpec extends WodFixtureSuite with BeforeAndAfterAll {
 
   test("corrupt gzip and empty file surface as errors, not crashes") {
     val tmp = java.nio.file.Files.createTempDirectory("wodbad")
-    // corrupt gzip: header bytes only
-    java.nio.file.Files.write(tmp.resolve("bad.gz"),
-      Array[Byte](0x1f, 0x8b.toByte, 8, 0, 1, 2, 3))
-    // empty (valid) gzip member
-    val out = new java.util.zip.GZIPOutputStream(
-      java.nio.file.Files.newOutputStream(tmp.resolve("empty.gz")))
-    out.close()
-    val empty = WodSource.read(spark, tmp.resolve("empty.gz").toString)
-    assert(empty.count() === 0)
-    val bad = WodSource.read(spark, tmp.resolve("bad.gz").toString)
-    // corrupt stream must not kill the job: parse yields error rows or
-    // nothing, but the action completes
-    val rows = bad.collect()
-    assert(rows.forall(r => r.isNullAt(r.fieldIndex("castNumber")) &&
-      !r.isNullAt(r.fieldIndex("_error"))))
+    try {
+      // corrupt gzip: header bytes only
+      java.nio.file.Files.write(tmp.resolve("bad.gz"),
+        Array[Byte](0x1f, 0x8b.toByte, 8, 0, 1, 2, 3))
+      // empty (valid) gzip member
+      val out = new java.util.zip.GZIPOutputStream(
+        java.nio.file.Files.newOutputStream(tmp.resolve("empty.gz")))
+      out.close()
+      val empty = WodSource.read(spark, tmp.resolve("empty.gz").toString)
+      assert(empty.count() === 0)
+      val bad = WodSource.read(spark, tmp.resolve("bad.gz").toString)
+      // corrupt stream must not kill the job: parse yields error rows or
+      // nothing, but the action completes
+      val rows = bad.collect()
+      assert(rows.forall(r => r.isNullAt(r.fieldIndex("castNumber")) &&
+        !r.isNullAt(r.fieldIndex("_error"))))
+    } finally WodFixtures.deleteTree(tmp)
   }
 
   fixtureTest("profileStats: plausible ocean physics per depth bucket") { fixtures =>

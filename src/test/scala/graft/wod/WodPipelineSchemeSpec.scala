@@ -54,7 +54,8 @@ class WodPipelineSchemeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(Paths.get(root))
 
   private def fs =
     new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)

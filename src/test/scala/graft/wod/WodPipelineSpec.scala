@@ -20,13 +20,14 @@ class WodPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
+  private var tmp: String = _ // deleted after the last test
   private def fixtures = WodFixtures.dir
   private var inDir: String = _
   private var outDir: String = _
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = Files.createTempDirectory("wodpipe").toString
+    tmp = Files.createTempDirectory("wodpipe").toString
     inDir = s"$tmp/in"; outDir = s"$tmp/out"
     for (rel <- Seq("CTD/OBS/CTDO1971.gz", "SUR/OBS/SURF_ALL.gz")) {
       val dst = Paths.get(inDir, rel)
@@ -35,7 +36,8 @@ class WodPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally WodFixtures.deleteTree(Paths.get(tmp))
 
   test("convert fixtures end-to-end with the reference output contract") {
     val cfg = WodPipeline.Config(input = inDir, output = outDir,
@@ -109,7 +111,7 @@ class WodPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("retry envelope: a persistently failing file is retried, " +
       "recorded failed, and fails the run only under failFast") {
     // output root is a regular FILE -> every store write fails
-    val blocked = Files.createTempFile("wodpipe_blocked", "")
+    val blocked = Files.createTempFile(Paths.get(tmp), "wodpipe_blocked", "")
     val cfg = WodPipeline.Config(input = inDir, output = blocked.toString,
       datasets = Seq("CTD"), maxAttemptsPerFile = 2, failFast = false)
     val results = WodPipeline.run(spark, cfg)
