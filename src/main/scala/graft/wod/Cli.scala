@@ -14,7 +14,6 @@ import graft.GraftSession
   *   --levels/-l CSV              default OBS (Sparkler.java:43-44)
   *   --subset/-s CSV              only these file names (DatasetTrain.java:73-86)
   *   --overwrite                  redo completed stores
-  *   --no-geo                     skip GeoParquet footer stamping
   *   --max-files N                concurrent file conversions (default 4)
   *   --max-attempts N             per-file retry budget (default 3; C6)
   *   --no-fail-fast               report failed files but exit 0
@@ -67,7 +66,7 @@ object Cli {
 
   private val usage =
     "usage: Cli --input <dir> --output <dir> [--datasets CSV] " +
-      "[--levels CSV] [--subset CSV] [--overwrite] [--no-geo] " +
+      "[--levels CSV] [--subset CSV] [--overwrite] " +
       "[--max-files N] [--max-attempts N] [--no-fail-fast] " +
       "[--bulk] [--bulk-max-rows-per-cell N] [--bulk-concurrency N]"
 
@@ -107,7 +106,6 @@ object Cli {
         case "--subset" | "-s"   =>
           cfg = cfg.copy(subset = value().split(",").toSeq); i += 2
         case "--overwrite"       => cfg = cfg.copy(overwrite = true); i += 1
-        case "--no-geo"          => cfg = cfg.copy(geoMetadata = false); i += 1
         case "--max-files"       =>
           cfg = cfg.copy(maxConcurrentFiles = intValue()); i += 2
         case "--max-attempts"    =>

@@ -1,23 +1,13 @@
 package graft.wod
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.SparkSession
-
 /** GeoParquet 1.0.0 footer metadata, Sedona-free (SURVEY.md §7.4).
   *
   * The reference writes GeoParquet via Sedona's `geoparquet` format with
   * version 1.0.0 + WGS-84 PROJJSON CRS (`DatasetYearTrain.java:41-42,
-  * 131-137,216-221`). Our toolchain has no Sedona, so we write plain
-  * parquet with a WKB `geometry` column and then stamp the spec's `geo`
-  * key-value footer onto each part file: `ParquetFileWriter.appendFile`
-  * does a row-group-level byte copy (no decode/re-encode) into a new
-  * file with the augmented footer — one sequential IO pass, executed on
-  * executors (one task per part file), so the cost scales out.
+  * 131-137,216-221`). Our toolchain has no Sedona, so the engine writes
+  * parquet with a WKB `geometry` column and [[GeoParquetWriteSupport]]
+  * stamps the spec's `geo` key-value footer onto each part file as it
+  * closes.
   */
 object GeoParquet {
 
@@ -31,85 +21,5 @@ object GeoParquet {
   def geoJson(bbox: (Double, Double, Double, Double)): String = {
     val (minLon, minLat, maxLon, maxLat) = bbox
     s"""{"version":"1.0.0","primary_column":"geometry","columns":{"geometry":{"encoding":"WKB","geometry_types":["Point"],"crs":$Wgs84Projjson,"bbox":[$minLon,$minLat,$maxLon,$maxLat]}}}"""
-  }
-
-  /** Rewrite one parquet file with the `geo` footer entry added. */
-  def stampFile(conf: Configuration, file: Path, geo: String): Unit = {
-    val in = HadoopInputFile.fromPath(file, conf)
-    val fmd = {
-      val reader = ParquetFileReader.open(in)
-      try reader.getFooter.getFileMetaData
-      finally reader.close()
-    }
-    if (fmd.getKeyValueMetaData.containsKey("geo")) return // idempotent
-    val tmp = new Path(file.getParent, s".geo_${file.getName}")
-    val out = HadoopOutputFile.fromPath(tmp, conf)
-    val writer = new ParquetFileWriter(out, fmd.getSchema,
-      ParquetFileWriter.Mode.OVERWRITE, 128L * 1024 * 1024, 8 * 1024 * 1024)
-    writer.start()
-    writer.appendFile(in)
-    val kv = new java.util.HashMap[String, String](fmd.getKeyValueMetaData)
-    kv.put("geo", geo)
-    writer.end(kv)
-    val fs = file.getFileSystem(conf)
-    fs.delete(file, false)
-    fs.rename(tmp, file)
-  }
-
-  /** Stamp every part file under `store` (distributed: one task per
-    * part file). `bbox` defaults to the global WGS-84 extent; pass the
-    * store's true extent when known.
-    *
-    * Resume safety: `stampFile` replaces each part with delete+rename —
-    * a crash between the two would leave the store missing a part while
-    * its `_SUCCESS` still says "complete", and a resumed run would skip
-    * the corrupted store (silent data loss). So the `_SUCCESS` marker is
-    * withdrawn for the duration of the footer pass and recreated only
-    * after every part is stamped: any crash inside the window makes
-    * `isComplete` false and the store is rebuilt on resume.
-    */
-  def addFooterMetadata(spark: SparkSession, store: String,
-      bbox: (Double, Double, Double, Double) = (-180, -90, 180, 90)): Unit = {
-    val root = new Path(store)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val parts = collectParts(fs, root)
-    if (parts.isEmpty) return
-    val success = new Path(root, "_SUCCESS")
-    val hadSuccess = fs.exists(success)
-    if (hadSuccess) fs.delete(success, false)
-    val geo = geoJson(bbox)
-    val serConf = new SerializableConf(conf)
-    spark.sparkContext
-      .parallelize(parts.map(_.toString), math.min(parts.size, 64))
-      .foreach(p => stampFile(serConf.value, new Path(p), geo))
-    if (hadSuccess) fs.create(success, true).close()
-  }
-
-  private def collectParts(fs: FileSystem, dir: Path): Seq[Path] = {
-    val it = fs.listFiles(dir, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (st.isFile && name.endsWith(".parquet") && !name.startsWith("."))
-        out += st.getPath
-    }
-    out.toSeq
-  }
-
-  /** Minimal serializable Hadoop-conf carrier for executor-side use. */
-  final class SerializableConf(@transient var conf: Configuration)
-      extends Serializable {
-    def value: Configuration = conf
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new Configuration(false)
-      conf.readFields(in)
-    }
   }
 }

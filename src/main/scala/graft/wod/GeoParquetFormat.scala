@@ -14,28 +14,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
   * footer entry AT WRITE TIME, so the engine's core output path writes
   * each byte exactly once.
   *
-  * Two modes:
-  *
-  *  - **explicit** (`geojson` option): the caller supplies the full
-  *    footer JSON; it is injected through `WriteSupport.init`'s
-  *    extra-metadata map — parquet-mr merges it into the footer it
-  *    writes anyway on `close()`. Every part file gets the same
-  *    (caller-computed, store-wide) bbox.
-  *  - **auto** (`geobbox=auto` option): each part file accumulates the
-  *    min/max of its own `longitude`/`latitude` columns as rows stream
-  *    through `write()` and emits its TRUE per-file bbox from
-  *    `finalizeWrite()` (parquet-mr merges finalized metadata into the
-  *    footer too). This is both tighter metadata than a store-wide
-  *    bbox — the GeoParquet spec's bbox is per-file — and removes the
-  *    need for any pre-write extent pass: the conversion pipeline's
-  *    separate stats job disappears (one Spark job per input file
-  *    instead of two).
-  *
-  * The previous design (retained as a resume-safe fallback in
-  * [[GeoParquet.addFooterMetadata]]) post-processed every part file
-  * with `ParquetFileWriter.appendFile` — a full byte copy that doubled
-  * write I/O on the conversion path: at 100 TB of output that is
-  * 100 TB written twice.
+  * Each part file accumulates the min/max of its own
+  * `longitude`/`latitude` columns as rows stream through `write()` and
+  * emits its TRUE per-file bbox from `finalizeWrite()` (parquet-mr
+  * merges finalized metadata into the footer it writes on `close()`).
+  * The GeoParquet spec's bbox is per-file, and no pre-write extent pass
+  * is needed. A file without top-level double `longitude`/`latitude`
+  * columns, or without a located row, gets no `geo` entry.
   *
   * Reference parity: the reference gets the same footer from Sedona's
   * `geoparquet` format (`DatasetYearTrain.java:41-42,131-137`); this is
@@ -43,7 +28,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
   */
 class GeoParquetWriteSupport extends ParquetWriteSupport {
 
-  private var autoBbox = false
+  private var hasLonLat = false
   private var lonOrdinal = -1
   private var latOrdinal = -1
   private var minLon = Double.PositiveInfinity
@@ -54,34 +39,25 @@ class GeoParquetWriteSupport extends ParquetWriteSupport {
 
   override def init(configuration: Configuration): WriteContext = {
     val ctx = super.init(configuration)
-    val geo = configuration.get(GeoParquetFileFormat.GeoJsonConfKey)
-    if (configuration.getBoolean(GeoParquetFileFormat.GeoAutoConfKey, false)) {
-      // Locate top-level double lon/lat columns in the file's data
-      // schema (partition columns are already excluded by Spark).
-      val schemaJson = configuration.get(
-        ParquetWriteSupport.SPARK_ROW_SCHEMA)
-      if (schemaJson != null) {
-        DataType.fromJson(schemaJson) match {
-          case st: StructType =>
-            lonOrdinal = st.fieldNames.indexOf("longitude")
-            latOrdinal = st.fieldNames.indexOf("latitude")
-            autoBbox = lonOrdinal >= 0 && latOrdinal >= 0 &&
-              st(lonOrdinal).dataType == DoubleType &&
-              st(latOrdinal).dataType == DoubleType
-          case _ => ()
-        }
+    // Locate top-level double lon/lat columns in the file's data
+    // schema (partition columns are already excluded by Spark).
+    val schemaJson = configuration.get(ParquetWriteSupport.SPARK_ROW_SCHEMA)
+    if (schemaJson != null) {
+      DataType.fromJson(schemaJson) match {
+        case st: StructType =>
+          lonOrdinal = st.fieldNames.indexOf("longitude")
+          latOrdinal = st.fieldNames.indexOf("latitude")
+          hasLonLat = lonOrdinal >= 0 && latOrdinal >= 0 &&
+            st(lonOrdinal).dataType == DoubleType &&
+            st(latOrdinal).dataType == DoubleType
+        case _ => ()
       }
     }
-    if (geo == null) ctx
-    else {
-      val md = new java.util.HashMap[String, String](ctx.getExtraMetaData)
-      md.put("geo", geo)
-      new WriteContext(ctx.getSchema, md)
-    }
+    ctx
   }
 
   override def write(row: InternalRow): Unit = {
-    if (autoBbox && !row.isNullAt(lonOrdinal) && !row.isNullAt(latOrdinal)) {
+    if (hasLonLat && !row.isNullAt(lonOrdinal) && !row.isNullAt(latOrdinal)) {
       val lon = row.getDouble(lonOrdinal)
       val lat = row.getDouble(latOrdinal)
       if (lon < minLon) minLon = lon
@@ -94,24 +70,20 @@ class GeoParquetWriteSupport extends ParquetWriteSupport {
   }
 
   override def finalizeWrite(): FinalizedWriteContext = {
-    if (autoBbox && sawPoint) {
-      val md = new java.util.HashMap[String, String]()
+    val md = new java.util.HashMap[String, String]()
+    if (sawPoint)
       md.put("geo", GeoParquet.geoJson((minLon, minLat, maxLon, maxLat)))
-      new FinalizedWriteContext(md)
-    } else new FinalizedWriteContext(new java.util.HashMap[String, String]())
+    new FinalizedWriteContext(md)
   }
 }
 
 /** A thin `parquet` FileFormat variant whose only delta is swapping in
-  * [[GeoParquetWriteSupport]] and carrying the `geo` footer options
-  * from write options into the task-side Hadoop conf. Read path,
-  * compression, committers, partitioning — all inherited untouched, so
-  * files it produces are plain parquet readable by any engine.
+  * [[GeoParquetWriteSupport]]. Read path, compression, committers,
+  * partitioning — all inherited untouched, so files it produces are
+  * plain parquet readable by any engine.
   *
   * Use: `df.write.format(classOf[GeoParquetFileFormat].getName)
-  * .option(GeoParquetFileFormat.GeoAutoOption, "auto").save(path)`
-  * (per-file true bbox) or `.option(GeoParquetFileFormat.GeoJsonOption,
-  * json)` (explicit store-wide footer).
+  * .save(path)`.
   */
 class GeoParquetFileFormat extends ParquetFileFormat {
 
@@ -124,25 +96,8 @@ class GeoParquetFileFormat extends ParquetFileFormat {
     val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
     // after super: overrides the write-support class super just set.
     // The job conf is serialized into the write description AFTER
-    // prepareWrite returns, so task-side record writers see both.
+    // prepareWrite returns, so task-side record writers see it.
     ParquetOutputFormat.setWriteSupportClass(job, classOf[GeoParquetWriteSupport])
-    options.get(GeoParquetFileFormat.GeoJsonOption).foreach { json =>
-      job.getConfiguration.set(GeoParquetFileFormat.GeoJsonConfKey, json)
-    }
-    if (options.get(GeoParquetFileFormat.GeoAutoOption).exists(
-        _.equalsIgnoreCase("auto")))
-      job.getConfiguration.setBoolean(GeoParquetFileFormat.GeoAutoConfKey, true)
     factory
   }
-}
-
-object GeoParquetFileFormat {
-  /** Write option (lower-case: datasource options are case-folded). */
-  val GeoJsonOption = "geojson"
-  /** Write option: `auto` = per-file true bbox from the lon/lat data. */
-  val GeoAutoOption = "geobbox"
-  /** Hadoop-conf key carrying the footer JSON to executor tasks. */
-  val GeoJsonConfKey = "graft.wod.geoparquet.json"
-  /** Hadoop-conf key enabling per-file auto-bbox accumulation. */
-  val GeoAutoConfKey = "graft.wod.geoparquet.auto"
 }

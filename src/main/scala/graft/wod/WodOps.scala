@@ -59,25 +59,19 @@ object WodOps {
     *
     * Not resume-safe in-place by design: writes to a NEW location
     * (the caller swaps atomically per their store's semantics), with
-    * the GeoParquet footer re-stamped at write time.
-    *
-    * Footer bbox: by default each compacted file stamps its own TRUE
-    * lon/lat extent, accumulated as rows stream through the writer
-    * (`geobbox=auto` — same write-time mechanism as the conversion
-    * path, no extra extent pass over the source store). Pass `bbox`
-    * only to force an explicit store-wide footer instead.
+    * the GeoParquet footer re-stamped at write time: each compacted
+    * file stamps its own TRUE lon/lat extent, accumulated as rows
+    * stream through the writer (the conversion path's mechanism, no
+    * extra extent pass over the source store).
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession, store: String,
-      out: String, files: Int = 4,
-      bbox: Option[(Double, Double, Double, Double)] = None): Long = {
-    val df = spark.read.parquet(store)
-    val writer = df.repartitionByRange(files, col("geohash"))
+      out: String, files: Int = 4): Long = {
+    spark.read.parquet(store)
+      .repartitionByRange(files, col("geohash"))
       .sortWithinPartitions(col("geohash"))
       .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
       .format(classOf[GeoParquetFileFormat].getName)
-    bbox.fold(writer.option(GeoParquetFileFormat.GeoAutoOption, "auto")) { b =>
-      writer.option(GeoParquetFileFormat.GeoJsonOption, GeoParquet.geoJson(b))
-    }.save(out)
+      .save(out)
     spark.read.parquet(out).count()
   }
 

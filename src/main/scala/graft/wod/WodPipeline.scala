@@ -3,7 +3,6 @@ package graft.wod
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count}
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.WodDataSource.{ErrorColumn, SourceFileColumn, castSchema}
 
@@ -58,7 +57,6 @@ object WodPipeline {
       levels: Seq[String] = Seq("OBS"),
       subset: Seq[String] = Seq.empty, // keep only these file names if set
       overwrite: Boolean = false,
-      geoMetadata: Boolean = true,
       maxConcurrentFiles: Int = 4,
       /** In-engine retry envelope (C6): attempts per file before it is
         * recorded failed — the reference runs ≤5 job starts via
@@ -142,8 +140,7 @@ object WodPipeline {
     * and the error store ([[writeChannels]]). Returns
     * (castRows, errorRows).
     */
-  def convertFile(spark: SparkSession, task: FileTask,
-      geoMetadata: Boolean = true): (Long, Long) = {
+  def convertFile(spark: SparkSession, task: FileTask): (Long, Long) = {
     import spark.implicits._
     writeChannels(spark, WodSource.read(spark, task.src),
       casts = _.drop(SourceFileColumn, ErrorColumn),
@@ -151,7 +148,7 @@ object WodPipeline {
       // struct would turn the store's non-null castNumber nullable
       errors = _.select(s"$ErrorColumn.*").as[CastError].map(identity).toDF(),
       maxRowsPerFile = 0L, // Spark's "no limit"
-      geoMetadata, task.outStore, task.errStore)
+      task.outStore, task.errStore)
   }
 
   /** The one write path of [[convertFile]] and [[convertBulk]]: the
@@ -159,18 +156,18 @@ object WodPipeline {
     * `_inputs` list of `inputs`, and last its `_SUCCESS`. Returns
     * (castRows, errorRows).
     *
-    *  - Jobs: three per clean input (the cache build, the exchange's
-    *    map stage, the sort+write), one more when there are error rows.
-    *    The parsed rows stay persisted so the error write (rare) is a
-    *    cache read, not a second gzip parse.
+    *  - Jobs: two per clean input (the exchange's map stage, the
+    *    sort+write), one more when there are error rows. Nothing is
+    *    cached: the error write (rare) reads the input again, and that
+    *    scan needs none of the cast columns.
     *  - Channel totals ride the cast write via `Dataset.observe` (a
-    *    `CollectMetrics` node above the scan — Catalyst never pushes the
-    *    cast-only filter through it, so the error count sees every
-    *    row); see [[channelCounts]] for the all-error fallback.
+    *    `CollectMetrics` node above the exchange, below the cast-only
+    *    filter, so every row — error rows too — reaches it); see
+    *    [[channelCounts]].
     *  - GeoParquet footers need no pre-write extent pass:
     *    [[GeoParquetWriteSupport]] accumulates each part file's true
     *    lon/lat extent as rows stream through it and stamps the
-    *    per-file bbox at close (`geobbox=auto`).
+    *    per-file bbox at close.
     *  - The exchange is a hash repartition on geohash3, so every cell
     *    is one write task whatever the shuffle partition sizes (a
     *    REBALANCE would let AQE split any oversized partition by map
@@ -186,69 +183,72 @@ object WodPipeline {
     */
   private def writeChannels(spark: SparkSession, parsed: DataFrame,
       casts: DataFrame => DataFrame, errors: DataFrame => DataFrame,
-      maxRowsPerFile: Long, geoMetadata: Boolean, castStore: String,
-      errStore: String, inputs: Seq[String] = Nil): (Long, Long) = {
-    val rows = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val obs = Observation()
+      maxRowsPerFile: Long, castStore: String, errStore: String,
+      inputs: Seq[String] = Nil): (Long, Long) = {
+    val obs = Observation()
+    parsed
+      .repartition(col("geohash3"))
       // cast columns are null in error rows, so geohash3 counts casts
-      val writer = rows
-        .observe(obs, count(col("geohash3")).as("n_casts"),
-          count(col(ErrorColumn)).as("n_errors"))
-        .filter(col(ErrorColumn).isNull)
-        .transform(casts)
-        .transform(tagGeohash)
-        .repartition(col("geohash3"))
-        // (geohash3, geohash) orders identically to plain geohash
-        // (geohash3 IS its 3-char prefix) but ALSO satisfies the
-        // dynamic-partition writer's required ordering on the
-        // partition column, so FileFormatWriter plans NO second sort
-        // before fan-out into the geohash3= dirs.
-        .sortWithinPartitions(col("geohash3"), col("geohash"))
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRowsPerFile)
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
-        .partitionBy("geohash3")
-      if (geoMetadata)
-        writer.format(classOf[GeoParquetFileFormat].getName)
-          .option(GeoParquetFileFormat.GeoAutoOption, "auto")
-          .save(castStore)
-      else writer.parquet(castStore)
-      val (nCasts, nErrors) = channelCounts(obs, rows)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val errPath = new Path(errStore)
-      if (nErrors > 0)
-        errors(rows.filter(col(ErrorColumn).isNotNull))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(errStore)
-      else errPath.getFileSystem(conf).delete(errPath, true) // stale errors
-      val fs = new Path(castStore).getFileSystem(conf)
-      if (inputs.nonEmpty) {
-        val out = fs.create(new Path(castStore, InputsFile), true)
-        try out.write(inputs.map(_ + "\n").mkString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      fs.create(new Path(castStore, "_SUCCESS"), true).close()
-      (nCasts, nErrors)
-    } finally rows.unpersist()
+      .observe(obs, count(col("geohash3")).as("n_casts"),
+        count(col(ErrorColumn)).as("n_errors"))
+      .filter(col(ErrorColumn).isNull)
+      .transform(casts)
+      .transform(tagGeohash)
+      // (geohash3, geohash) orders identically to plain geohash
+      // (geohash3 IS its 3-char prefix) but ALSO satisfies the
+      // dynamic-partition writer's required ordering on the
+      // partition column, so FileFormatWriter plans NO second sort
+      // before fan-out into the geohash3= dirs.
+      .sortWithinPartitions(col("geohash3"), col("geohash"))
+      .write.mode(SaveMode.Overwrite)
+      .option("maxRecordsPerFile", maxRowsPerFile)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
+      .partitionBy("geohash3")
+      .format(classOf[GeoParquetFileFormat].getName)
+      .save(castStore)
+    val (nCasts, nErrors) = channelCounts(obs)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val errPath = new Path(errStore)
+    if (nErrors > 0)
+      errors(parsed.filter(col(ErrorColumn).isNotNull))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(errStore)
+    else errPath.getFileSystem(conf).delete(errPath, true) // stale errors
+    val fs = new Path(castStore).getFileSystem(conf)
+    if (inputs.nonEmpty) {
+      val out = fs.create(new Path(castStore, InputsFile), true)
+      try out.write(inputs.map(_ + "\n").mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    fs.create(new Path(castStore, "_SUCCESS"), true).close()
+    (nCasts, nErrors)
   }
 
-  /** Channel counts from the write job's observed metrics, with a
-    * cached-agg fallback: when the cast channel is EMPTY (an all-error
-    * input), AQE replaces the empty write subtree — CollectMetrics node
-    * included — with an empty relation, and the Observation never
-    * receives its row. The fallback agg runs on the persisted rows
-    * (a cache scan, not a re-parse) only in that rare case.
+  /** Channel counts from the write job's observed metrics. Every row
+    * crosses the exchange below the `CollectMetrics` node, so the
+    * Observation misses its row only when the input has no rows at
+    * all: AQE then replaces the empty write subtree, node included,
+    * with an empty relation. That case is (0, 0).
     */
-  private def channelCounts(obs: Observation,
-      rows: DataFrame): (Long, Long) = {
+  private def channelCounts(obs: Observation): (Long, Long) = {
     val m = obs.get // returns once the action completes; may be empty
-    if (m.contains("n_casts") && m.contains("n_errors"))
-      (m("n_casts").asInstanceOf[Long], m("n_errors").asInstanceOf[Long])
-    else {
-      val st = rows.agg(count(col("geohash3")), count(col(ErrorColumn))).head()
-      (st.getLong(0), st.getLong(1))
-    }
+    def n(name: String): Long = m.get(name).fold(0L)(_.asInstanceOf[Long])
+    (n("n_casts"), n("n_errors"))
+  }
+
+  /** `f` over `items` on a pool of `threads` workers, shut down when
+    * the last item is done so no idle worker outlives the call.
+    */
+  private def inParallel[A, B](items: Seq[A], threads: Int)(
+      f: A => B): Seq[B] = {
+    import scala.collection.parallel.CollectionConverters._
+    import scala.collection.parallel.ForkJoinTaskSupport
+    val pool = new java.util.concurrent.ForkJoinPool(threads)
+    try {
+      val par = items.par
+      par.tasksupport = new ForkJoinTaskSupport(pool)
+      par.map(f).seq
+    } finally pool.shutdown()
   }
 
   /** Run the whole plan with bounded file-level concurrency and the
@@ -271,18 +271,13 @@ object WodPipeline {
       else if (cfg.overwrite) fs.delete(new Path(t.outStore), true)
       !done
     }
-    import scala.collection.parallel.CollectionConverters._
-    import scala.collection.parallel.ForkJoinTaskSupport
-    val par = todo.par
-    par.tasksupport = new ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(cfg.maxConcurrentFiles))
-    val results = par.map { t =>
+    val results = inParallel(todo, cfg.maxConcurrentFiles) { t =>
       var attempt = 0
       var res: FileResult = null
       while (res == null) {
         attempt += 1
         try {
-          val (nc, ne) = convertFile(spark, t, cfg.geoMetadata)
+          val (nc, ne) = convertFile(spark, t)
           println(s"[wod] ${t.src}: $nc casts, $ne errors -> ${t.outStore}")
           res = FileResult(t, nc, ne, attempt, None)
         } catch {
@@ -297,7 +292,7 @@ object WodPipeline {
         }
       }
       res
-    }.seq
+    }
     val failed = results.filter(!_.ok)
     if (cfg.failFast && failed.nonEmpty)
       throw new IllegalStateException(
@@ -375,13 +370,8 @@ object WodPipeline {
     val rootDone = !cfg.overwrite && isComplete(spark, castStore)
     val subRuns = tasks.groupBy(t => (t.dataset, t.level)).toSeq
       .sortBy(_._1)
-    import scala.collection.parallel.CollectionConverters._
-    import scala.collection.parallel.ForkJoinTaskSupport
-    val par = subRuns.par
-    par.tasksupport = new ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(
-        math.max(1, cfg.bulkConcurrency)))
-    val results = par.map { case ((ds, lvl), ts) =>
+    val threads = math.max(1, cfg.bulkConcurrency)
+    val results = inParallel(subRuns, threads) { case ((ds, lvl), ts) =>
       val subStore = s"$castStore/dataset=$ds/level=$lvl"
       val errSub = s"$errStore/dataset=$ds/level=$lvl"
       // NB: the root marker is deliberately NOT a skip condition —
@@ -413,13 +403,12 @@ object WodPipeline {
             .drop("dataset"), // constant in a sub-run; the dir carries it
           errors = _.select(col(SourceFileColumn).as("src_file"),
             col(s"$ErrorColumn.castNumber"), col(s"$ErrorColumn.error")),
-          cfg.bulkMaxRowsPerCellFile, cfg.geoMetadata, subStore, errSub,
-          inputs)
+          cfg.bulkMaxRowsPerCellFile, subStore, errSub, inputs)
         println(s"[wod] bulk: $ds/$lvl ${ts.size} files, $nc casts, " +
           s"$ne errors -> $subStore")
         BulkRun(ds, lvl, ts.size, nc, ne, skipped = false)
       }
-    }.seq
+    }
     // Root marker = "every planned sub-run committed"; stamped last so
     // a crash anywhere above leaves resume to the per-sub-run probes.
     if (!rootDone) fs.create(new Path(castStore, "_SUCCESS"), true).close()

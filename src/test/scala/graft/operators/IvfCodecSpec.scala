@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** One table of cases over every list codec of [[IvfStore]] — Flat,
   * Sq8 and Pq with coarse lists, and flat Pq (vid-bucketed code rows,
   * no `cid`) — on one small seeded corpus. The delta's ids all sit
@@ -18,7 +20,12 @@ class IvfCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  /** Every temp dir the suite makes, deleted in [[afterAll]]. */
+  private lazy val suiteDir =
+    java.nio.file.Files.createTempDirectory("graft_codec")
+
+  override def afterAll(): Unit =
+    try spark.stop() finally TestDirs.deleteTree(suiteDir)
 
   private val dims = 8
 
@@ -40,7 +47,7 @@ class IvfCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     ("flatpq", ListCodec.Pq(2, 16), None))
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_codec").toString
+    java.nio.file.Files.createTempDirectory(suiteDir, "t").toString
 
   private def drop(t: String): Unit = {
     BucketedStores.dropVersioned(spark, t)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
 import graft.operators.{BucketedStores, SketchStats, TextDedupOps}
 
 /** Gates the GRAFT SQL command namespace
@@ -21,9 +22,13 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private def tmp() = Files.createTempDirectory("graft_cmd").toString
+  /** Every temp dir the suite makes, deleted in [[afterAll]]. */
+  private lazy val suiteDir = Files.createTempDirectory("graft_cmd")
 
-  override def afterAll(): Unit = spark.stop()
+  private def tmp() = Files.createTempDirectory(suiteDir, "t").toString
+
+  override def afterAll(): Unit =
+    try spark.stop() finally TestDirs.deleteTree(suiteDir)
 
   test("GRAFT ANALYZE <table> KEY <col> writes the stats the API " +
       "writes and returns them as the result row") {
@@ -54,7 +59,7 @@ class GraftCommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("GRAFT VACUUM reclaims exactly the unreferenced store dirs, " +
       "age guard spelled OLDER THAN <n> HOURS") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cmd_vac")
+    val root = Files.createTempDirectory(suiteDir, "cmd_vac")
     val name = "cmd_vac_store"
     BucketedStores.dropVersioned(spark, name)
     TextDedupOps.writeLshIndex(

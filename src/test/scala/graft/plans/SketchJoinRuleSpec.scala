@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
 import graft.operators.SketchStats
 
 /** Gates [[SketchJoinRule]]: the physical join strategy must provably
@@ -26,7 +27,10 @@ class SketchJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private def tmp() = Files.createTempDirectory("graft_sjr").toString
+  /** Every temp dir the suite makes, deleted in [[afterAll]]. */
+  private lazy val suiteDir = Files.createTempDirectory("graft_sjr")
+
+  private def tmp() = Files.createTempDirectory(suiteDir, "t").toString
 
   override def beforeAll(): Unit = {
     // fact: 40k rows over 2k distinct keys; dim: one row per key
@@ -48,7 +52,7 @@ class SketchJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq("sjr_fact", "sjr_dim", "sjr_dim_nostats",
       "sjr_fact__kstats", "sjr_dim__kstats")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    spark.stop()
+    try spark.stop() finally TestDirs.deleteTree(suiteDir)
   }
 
   private def executed(df: DataFrame): SparkPlan = {

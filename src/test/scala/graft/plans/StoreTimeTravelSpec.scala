@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
 import graft.operators.BucketedStores
 
 /** Gates [[org.apache.spark.sql.graft.StoreTimeTravelRewrite]]: SQL
@@ -23,9 +24,13 @@ class StoreTimeTravelSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession =
     graft.GraftSession.builder("local[4]", 4).getOrCreate()
 
-  private def tmp() = Files.createTempDirectory("graft_ttl").toString
+  /** Every temp dir the suite makes, deleted in [[afterAll]]. */
+  private lazy val suiteDir = Files.createTempDirectory("graft_ttl")
 
-  override def afterAll(): Unit = spark.stop()
+  private def tmp() = Files.createTempDirectory(suiteDir, "t").toString
+
+  override def afterAll(): Unit =
+    try spark.stop() finally TestDirs.deleteTree(suiteDir)
 
   /** A versioned store with three generations (10, 20, 30 rows),
     * retain=2 so all three stay live.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
 import graft.wod.{CastWriter, WodFixtures}
 
 /** The `wod` DSv2 source over members rendered with [[CastWriter]] in
@@ -55,7 +56,7 @@ class WodDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(root)
+    try spark.stop() finally TestDirs.deleteTree(root)
 
   test("spark.read.format(wod) over one member") {
     val df = spark.read.format("wod").load(member("XBT/OBS/XBTO1967.gz"))

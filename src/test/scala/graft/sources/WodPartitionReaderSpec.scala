@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
 import graft.wod.{CastWriter, WodFixtures}
 import graft.wod.CastWriter.{oneLevel => cast}
 
@@ -33,7 +34,7 @@ class WodPartitionReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     CastWriter.writeMember(b, (101 to 117).map(cast(_)))
   }
 
-  override def afterAll(): Unit = WodFixtures.deleteTree(tmp)
+  override def afterAll(): Unit = TestDirs.deleteTree(tmp)
 
   private val schemas = Seq(
     "full cast" -> WodDataSource.castSchema,

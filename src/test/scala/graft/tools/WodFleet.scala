@@ -49,7 +49,6 @@ object WodFleet {
           .write.mode(SaveMode.Overwrite)
           .partitionBy("geohash3")
           .format(classOf[GeoParquetFileFormat].getName)
-          .option(GeoParquetFileFormat.GeoAutoOption, "auto")
           .save(s"$out/yearly/${t.dataset}/${t.level}/$name.parquet")
       }
       val s = (System.nanoTime() - t0) / 1e9

@@ -12,9 +12,9 @@ import graft.wod.{GeoParquetFileFormat, WodCorpus, WodPipeline, WodSource}
   * measure FIRST): on the bench's own 32-file corpus, time
   *
   *   parse      — gzip → cast rows, noop-discarded (the floor)
-  *   parse+persist — the convertFile cache materialization
-  *   write      — the current convertFile (persist + observe +
-  *                exchange + partitioned GeoParquet write)
+  *   parse+persist — a cache materialization of the parse
+  *   write      — the current convertFile (observe + exchange +
+  *                partitioned GeoParquet write)
   *   fused      — a no-persist, no-exchange variant (single task per
   *                file: parse → sort → dynamic-partition write)
   *
@@ -90,7 +90,7 @@ object WodProfile {
           .write.format("noop").mode("overwrite").save()
       }
     }
-    // (b) parse + persist (the cache materialization convertFile pays)
+    // (b) parse + persist (a cache materialization of the parse)
     timed("parse-persist") {
       par(tasks) { t =>
         val rows = WodSource.read(spark, t.src)
@@ -123,7 +123,6 @@ object WodProfile {
           .write.mode(SaveMode.Overwrite)
           .partitionBy("geohash3")
           .format(classOf[GeoParquetFileFormat].getName)
-          .option(GeoParquetFileFormat.GeoAutoOption, "auto")
           .save(uniq(out, t))
       } finally deleteRecursively(out)
     }

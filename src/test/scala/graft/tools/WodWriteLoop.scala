@@ -29,7 +29,6 @@ object WodWriteLoop {
       val out = Files.createTempDirectory("wodloop")
       df.write.mode(SaveMode.Overwrite).partitionBy("geohash3")
         .format(classOf[GeoParquetFileFormat].getName)
-        .option(GeoParquetFileFormat.GeoAutoOption, "auto")
         .save(s"$out/store.parquet")
       deleteRecursively(out)
       n += 1

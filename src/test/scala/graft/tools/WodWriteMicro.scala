@@ -90,7 +90,6 @@ object WodWriteMicro {
     reps("part") { out =>
       df.write.mode(SaveMode.Overwrite).partitionBy("geohash3")
         .format(classOf[GeoParquetFileFormat].getName)
-        .option(GeoParquetFileFormat.GeoAutoOption, "auto")
         .save(s"$out/store.parquet")
     }
     spark.sparkContext.hadoopConfiguration.setInt(
@@ -98,7 +97,6 @@ object WodWriteMicro {
     reps("partv2") { out =>
       df.write.mode(SaveMode.Overwrite).partitionBy("geohash3")
         .format(classOf[GeoParquetFileFormat].getName)
-        .option(GeoParquetFileFormat.GeoAutoOption, "auto")
         .save(s"$out/store.parquet")
     }
     spark.sparkContext.hadoopConfiguration.setInt(
@@ -110,7 +108,6 @@ object WodWriteMicro {
     reps2(shm, "partshm") { out =>
       df.write.mode(SaveMode.Overwrite).partitionBy("geohash3")
         .format(classOf[GeoParquetFileFormat].getName)
-        .option(GeoParquetFileFormat.GeoAutoOption, "auto")
         .save(s"$out/store.parquet")
     }
     deleteRecursively(shm)
@@ -124,7 +121,6 @@ object WodWriteMicro {
     reps("partnocrc") { out =>
       df.write.mode(SaveMode.Overwrite).partitionBy("geohash3")
         .format(classOf[GeoParquetFileFormat].getName)
-        .option(GeoParquetFileFormat.GeoAutoOption, "auto")
         .save(s"$out/store.parquet")
     }
     spark.stop()

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** CLI contract (reference entry-point parity, `Sparkler.java:134-136`):
   * the option surface maps onto the pipeline config, and BOTH modes —
   * per-file and `--bulk` — are reachable end-to-end from parsed argv,
@@ -35,14 +37,14 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  override def afterAll(): Unit = WodFixtures.deleteTree(Paths.get(tmp))
+  override def afterAll(): Unit = TestDirs.deleteTree(Paths.get(tmp))
 
   test("parse maps every option onto the config") {
     val (cfg, bulk) = Cli.parse(Array(
       "--input", "/in", "--output", "/out",
       "--datasets", "XBT,DRB", "--levels", "OBS,STD",
       "--subset", "XBTO1967.gz",
-      "--overwrite", "--no-geo", "--max-files", "7",
+      "--overwrite", "--max-files", "7",
       "--max-attempts", "1", "--no-fail-fast",
       "--bulk", "--bulk-max-rows-per-cell", "123", "--bulk-concurrency", "2"))
     assert(bulk)
@@ -50,10 +52,13 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cfg.datasets === Seq("XBT", "DRB"))
     assert(cfg.levels === Seq("OBS", "STD"))
     assert(cfg.subset === Seq("XBTO1967.gz"))
-    assert(cfg.overwrite && !cfg.geoMetadata && !cfg.failFast)
+    assert(cfg.overwrite && !cfg.failFast)
     assert(cfg.maxConcurrentFiles === 7 && cfg.maxAttemptsPerFile === 1)
     assert(cfg.bulkMaxRowsPerCellFile === 123L && cfg.bulkConcurrency === 2)
     assertThrows[RuntimeException](Cli.parse(Array("--bogus")))
+    // every store is GeoParquet: the footer opt-out is gone
+    val noGeo = intercept[RuntimeException](Cli.parse(Array("--no-geo")))
+    assert(noGeo.getMessage.startsWith("unknown option: --no-geo"))
     assertThrows[IllegalArgumentException](Cli.parse(Array("--bulk")))
     assert(Cli.versionLine.startsWith("graft wod-ascii-to-parquet"))
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** Completeness differ: expected-minus-produced over synthesized
   * listings (the differ plans from file METADATA only, so the inputs
   * can be empty marker files — no parse involved).
@@ -43,7 +45,7 @@ class DifferSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(tmp)
+    try spark.stop() finally TestDirs.deleteTree(tmp)
 
   test("missing = never produced + crash residue, not the complete one") {
     val cfg = WodPipeline.Config(input = inDir, output = outDir,

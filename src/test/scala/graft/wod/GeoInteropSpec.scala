@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** Geometry round-trip through an EXTERNAL reader (SURVEY §7.4
   * deviation evidence): `tools/geo_interop_check.py` reads a store the
   * engine just wrote using DuckDB (parquet + footers) and a
@@ -39,7 +41,7 @@ class GeoInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(Paths.get(tmp))
+    try spark.stop() finally TestDirs.deleteTree(Paths.get(tmp))
 
   test("external reader round-trips WKB geometry and footer bbox " +
       "pruning is exact") {

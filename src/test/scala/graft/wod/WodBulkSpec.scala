@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** Bulk-mode contract ([[WodPipeline.convertBulk]] — the O(datasets)
   * jobs many-small-files scale path): identical content to the per-file
   * pipeline, per-file IO error isolation preserved, partition-pruned
@@ -58,9 +60,9 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
     WodPipeline.run(spark, cfg.copy(output = perFileOut))
   }
 
-  override def afterAll(): Unit = WodFixtures.deleteTree(Paths.get(tmp))
+  override def afterAll(): Unit = TestDirs.deleteTree(Paths.get(tmp))
 
-  test("one-job bulk store carries exactly the per-file pipeline's rows") {
+  test("bulk store carries exactly the per-file pipeline's rows") {
     // (castNumber, cruiseNumber, geohash) identifies a cast across
     // both layouts (per-file stores carry dataset only in their path)
     val key = Seq(col("castNumber"), col("cruiseNumber"), col("geohash"))
@@ -153,8 +155,7 @@ class WodBulkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally Files.delete(Paths.get(inDir, "XBT/OBS/LATE.gz"))
   }
 
-  test("unskewed corpus: exactly one file per cell dir (no salt, no " +
-      "small-file explosion)") {
+  test("unskewed corpus: exactly one file per cell dir") {
     import scala.jdk.CollectionConverters._
     val cellDirs = Files.walk(Paths.get(castStore)).iterator().asScala
       .filter(p => Files.isDirectory(p) &&

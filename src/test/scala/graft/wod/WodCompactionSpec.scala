@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** Compaction contract: same rows, few files, stats-pruned cell
   * predicates, geohash order and geo footer preserved.
   */
@@ -41,7 +43,7 @@ class WodCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(Paths.get(tmp))
+    try spark.stop() finally TestDirs.deleteTree(Paths.get(tmp))
 
   private def partFiles(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =

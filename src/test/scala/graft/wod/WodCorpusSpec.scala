@@ -7,6 +7,8 @@ import java.util.zip.GZIPInputStream
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** Pins the generated corpus the WOD specs read: the CTD record comes
   * out with the reference record's first bytes, the XBT and DRB members
   * have the reference members' cast and line counts, and the corpus is
@@ -47,6 +49,6 @@ class WodCorpusSpec extends AnyFunSuite {
     try WodCorpus.Members.foreach { rel =>
       assert(Files.readAllBytes(a.resolve(rel)) sameElements
         Files.readAllBytes(b.resolve(rel)), rel)
-    } finally Seq(a, b).foreach(WodFixtures.deleteTree)
+    } finally Seq(a, b).foreach(TestDirs.deleteTree)
   }
 }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 import CastWriter.{oneLevel => cast}
 
 /** The one WOD reader's error contract on rendered gzip members, through
@@ -85,7 +87,7 @@ class WodErrorChannelSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(tmp)
+    try spark.stop() finally TestDirs.deleteTree(tmp)
 
   private def castNumbers(rows: Array[Row]): Seq[Int] =
     rows.filter(_.isNullAt(1)).map(_.getInt(0)).toSeq.sorted

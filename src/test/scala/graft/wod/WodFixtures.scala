@@ -1,10 +1,11 @@
 package graft.wod
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.{Files, Paths}
 
 import org.scalactic.source
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestDirs
 
 /** The WOD members the specs and tools read. */
 object WodFixtures {
@@ -15,7 +16,7 @@ object WodFixtures {
     */
   lazy val dir: String = {
     val d = Files.createTempDirectory("wodcorpus")
-    sys.addShutdownHook(deleteTree(d))
+    sys.addShutdownHook(TestDirs.deleteTree(d))
     WodCorpus.write(d).toString
   }
 
@@ -27,13 +28,6 @@ object WodFixtures {
   /** The reference's fixture directory, where [[ReferenceEnv]] names one. */
   lazy val reference: Option[String] =
     sys.env.get(ReferenceEnv).filter(p => Files.isDirectory(Paths.get(p)))
-
-  def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val paths = Files.walk(root)
-      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally paths.close()
-    }
 }
 
 /** A suite whose fixture tests run twice: under their own name on the

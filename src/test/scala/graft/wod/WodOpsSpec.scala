@@ -3,6 +3,8 @@ package graft.wod
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 
+import graft.TestDirs
+
 /** The tests that read fixture members run on the generated corpus and
   * again on the reference's NOAA-written members wherever they are
   * present ([[WodFixtureSuite]]).
@@ -87,7 +89,7 @@ class WodOpsSpec extends WodFixtureSuite with BeforeAndAfterAll {
       val rows = bad.collect()
       assert(rows.forall(r => r.isNullAt(r.fieldIndex("castNumber")) &&
         !r.isNullAt(r.fieldIndex("_error"))))
-    } finally WodFixtures.deleteTree(tmp)
+    } finally TestDirs.deleteTree(tmp)
   }
 
   fixtureTest("profileStats: plausible ocean physics per depth bucket") { fixtures =>

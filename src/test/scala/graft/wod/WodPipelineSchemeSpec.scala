@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** A Hadoop FileSystem registered under a NON-file scheme (`mockobj://`),
   * backed by the local disk. Running the whole pipeline through it
   * proves every component resolves its FileSystem from the path's
@@ -55,7 +57,7 @@ class WodPipelineSchemeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(Paths.get(root))
+    try spark.stop() finally TestDirs.deleteTree(Paths.get(root))
 
   private def fs =
     new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)

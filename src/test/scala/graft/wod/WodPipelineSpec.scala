@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestDirs
+
 /** End-to-end conversion on the generated corpus, asserting the
   * reference's output contract (FIXTURES.md §2): `_SUCCESS` markers,
   * `geohash3=` partition dirs, within-partition geohash sort, SUR
@@ -37,7 +39,7 @@ class WodPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try spark.stop() finally WodFixtures.deleteTree(Paths.get(tmp))
+    try spark.stop() finally TestDirs.deleteTree(Paths.get(tmp))
 
   test("convert fixtures end-to-end with the reference output contract") {
     val cfg = WodPipeline.Config(input = inDir, output = outDir,

@@ -5,17 +5,22 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestDirs
 
 import CastWriter.{oneLevel => cast}
 
 /** The one write path of [[WodPipeline.convertFile]] and
   * [[WodPipeline.convertBulk]]: its commit order (the cast store's
-  * `_SUCCESS` comes last), its Spark job counts, and one write task
-  * per geohash3 cell.
+  * `_SUCCESS` comes last), its Spark job counts, that it caches
+  * nothing, one write task per geohash3 cell, and that the runners'
+  * thread pools end with the call.
   */
 class WodWritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -36,7 +41,7 @@ class WodWritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     spark.stop()
-    WodFixtures.deleteTree(tmp)
+    TestDirs.deleteTree(tmp)
   }
 
   private def in = tmp.resolve("in").toString
@@ -65,50 +70,92 @@ class WodWritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(errs.toSeq === Seq(3, 6))
   }
 
-  /** The Spark jobs `body` starts. They are told apart by two marker
-    * jobs around `body`: the listener bus delivers events in order, so
-    * once the closing marker's start has arrived, so has every event
-    * `body` posted.
+  /** What `body` asks of Spark: the jobs it starts and the cached RDD
+    * blocks it stores. Its events are told apart by two marker jobs
+    * around `body`: the listener bus delivers events in order, so once
+    * the closing marker's start has arrived, so has every event `body`
+    * posted.
     */
-  private def traced(body: => Unit): Seq[Int] = {
+  private def traced(body: => Unit): (Seq[Int], Seq[RDDBlockId]) = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add(e)
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        events.add(e)
     }
-    def marker(): Int = {
+    def marker(): SparkListenerJobStart = {
       val tag = s"marker-${java.util.UUID.randomUUID}"
       sc.setJobDescription(tag)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 60L * 1000000000L
-      def seen = jobs.asScala.find(
-        _.properties.getProperty("spark.job.description") == tag)
+      def seen = events.asScala.collectFirst {
+        case j: SparkListenerJobStart
+            if j.properties.getProperty("spark.job.description") == tag => j
+      }
       while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      seen.getOrElse(fail(s"$tag never reached the listener")).jobId
+      seen.getOrElse(fail(s"$tag never reached the listener"))
     }
     sc.addSparkListener(listener)
     try {
       val first = marker()
       body
       val last = marker()
-      jobs.asScala.map(_.jobId).filter(j => j > first && j < last).toSeq
+      val during = events.asScala.toSeq
+        .dropWhile(_ ne first).drop(1).takeWhile(_ ne last)
+      (during.collect { case j: SparkListenerJobStart => j.jobId },
+        during.collect { case SparkListenerBlockUpdated(u) => u.blockId }
+          .collect { case b: RDDBlockId => b })
     } finally sc.removeSparkListener(listener)
   }
 
-  test("job counts: three per clean conversion, four with error rows") {
+  test("two jobs per clean conversion, three with error rows; " +
+      "nothing cached") {
     def bulk(ds: String) = WodPipeline.convertBulk(spark, WodPipeline.Config(
       input = in, output = tmp.resolve(s"jobs-bulk-$ds").toString,
       datasets = Seq(ds)))
-    val cleanJobs = traced(assert(bulk("XBT") === ((40L, 0L))))
-    // the cache build, the exchange's map stage and the sort+write
-    assert(cleanJobs.size === 3, "clean bulk slice")
-    val errJobs = traced(assert(bulk("CTD") === ((6L, 2L))))
-    assert(errJobs.size === 4, "bulk slice with errors: + the error write")
+    val (cleanJobs, cleanBlocks) = traced(assert(bulk("XBT") === ((40L, 0L))))
+    // the exchange's map stage and the sort+write
+    assert(cleanJobs.size === 2, "clean bulk slice")
+    val (errJobs, errBlocks) = traced(assert(bulk("CTD") === ((6L, 2L))))
+    assert(errJobs.size === 3, "bulk slice with errors: + the error write")
     val task = WodPipeline.plan(spark, WodPipeline.Config(input = in,
       output = tmp.resolve("jobs-file").toString, datasets = Seq("XBT"))).head
-    val fileJobs = traced(
+    val (fileJobs, fileBlocks) = traced(
       assert(WodPipeline.convertFile(spark, task) === ((40L, 0L))))
-    assert(fileJobs.size === 3, "clean convertFile")
+    assert(fileJobs.size === 2, "clean convertFile")
+    assert((cleanBlocks ++ errBlocks ++ fileBlocks).isEmpty,
+      "a conversion caches nothing")
+  }
+
+  test("the bulk and per-file pools leave no worker thread behind") {
+    // ForkJoinPool names its workers ForkJoinPool-<pool>-worker-<n>,
+    // numbering pools in creation order: the pools the calls make lie
+    // strictly between two probe pools made around them
+    def probePool(): Int = {
+      val pool = new java.util.concurrent.ForkJoinPool(1)
+      try pool.submit(new java.util.concurrent.Callable[String] {
+        def call(): String = Thread.currentThread.getName
+      }).get().split('-')(1).toInt
+      finally pool.shutdown()
+    }
+    val before = probePool()
+    for (i <- 1 to 3) WodPipeline.convertBulk(spark, WodPipeline.Config(
+      input = in, output = tmp.resolve(s"pools-$i").toString,
+      datasets = Seq("XBT")))
+    WodPipeline.run(spark, WodPipeline.Config(input = in,
+      output = tmp.resolve("pools-run").toString, datasets = Seq("XBT")))
+    val after = probePool()
+    val Worker = """ForkJoinPool-(\d+)-worker-\d+""".r
+    def leftOver = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.isAlive).map(_.getName).collect {
+        case n @ Worker(p) if p.toInt > before && p.toInt < after => n
+      }
+    assert(after - before > 4, "the four calls made fewer than four pools")
+    // shutdown is asynchronous: idle workers exit on their own
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (leftOver.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leftOver.isEmpty)
   }
 
   test("each geohash3 cell is one write task and one file, even when the " +
